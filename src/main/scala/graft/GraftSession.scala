@@ -19,6 +19,29 @@ object GraftSession {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The one session setup every entry point (Bench, Verify, PlanDump,
+    * ScaleRehearsal, the spec base) goes through: `local[cores]` with
+    * one shuffle partition per core, UI off, log level WARN, and
+    * [[tune]] applied before the caller sees the session. Cores default
+    * to `SPARK_GRAFT_CPUS`, then to the machine's processor count.
+    *
+    * Each session gets a fresh temp warehouse dir: DDL-running callers
+    * create real tables, and a stale ./spark-warehouse from a previous
+    * run would fail CREATE TABLE with LOCATION_ALREADY_EXISTS.
+    */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
+  }
+
   private val tuned = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 

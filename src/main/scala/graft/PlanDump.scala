@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tooling (optimization guide §1.1/§7.2): dump
   * `.explain("formatted")` for bench-headline queries to files, so plan
   * claims (Exchange counts, join strategies, PushedFilters/ReadSchema)
@@ -13,19 +11,16 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val outDir = if (args.nonEmpty) args(0) else "plans/r17"
+    if (args.isEmpty) {
+      System.err.println(
+        "usage: runMain graft.PlanDump <outDir> [nameFilter,csv]")
+      sys.exit(2)
+    }
+    val outDir = args(0)
     val keep: String => Boolean =
       if (args.length > 1) args(1).split(",").toSet else (_ => true)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     Bench.headline.filter(keep).foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>

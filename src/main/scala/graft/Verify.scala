@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,26 +6,28 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated name filter (dev iteration)
-    val keep: String => Boolean =
-      if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val filter = if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val keep: String => Boolean = n => filter.forall(_(n))
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name) && !SparkEntry.benchOnly(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val entry = SparkEntry.queries
+    val (benchOnly, run) = entry.toSeq.filter(kv => keep(kv._1))
+      .partition(kv => SparkEntry.benchOnly(kv._1))
+    val results = run.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        name -> (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        name -> -1.0
       }
     }
+    val tally = Bench.Tally(results,
+      benchOnly.map(_._1 -> "bench-only: no oracle replays its selection") ++
+        filter.getOrElse(Set.empty).diff(entry.keySet).toSeq.sorted
+          .map(_ -> "not in SparkEntry.queries"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,6 +43,8 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    tally.report("verify")
     spark.stop()
+    if (tally.failed.nonEmpty) sys.exit(1)
   }
 }

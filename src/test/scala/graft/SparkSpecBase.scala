@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs; mirrors the driver's Verify setup. */
+/** Shared local session for specs; the same setup as the driver mains. */
 abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -14,20 +14,5 @@ abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fresh per-JVM warehouse: golden setup blocks create real tables,
-      // and a stale ./spark-warehouse from a previous run would fail
-      // CREATE TABLE with LOCATION_ALREADY_EXISTS
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(s)
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(4)
 }

@@ -1,9 +1,15 @@
 package graft
 
+import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
 /** Surface-completeness check: every function name claimed in SURVEY §2.8
   * / §2.4 (the reference registry's user-facing names, minus the
   * intentionally-out-of-scope ones) must resolve in a tuned session —
-  * as a Spark builtin, an alias, or a native expression.
+  * as a Spark builtin, an alias, or a native expression. Also pins the
+  * entry-point surface: one session setup for every main and spec, and
+  * the run accounting the Bench and Verify mains report.
   */
 class SurfaceSpec extends SparkSpecBase {
 
@@ -88,5 +94,46 @@ class SurfaceSpec extends SparkSpecBase {
         builtin.contains(n)
     }
     assert(missing.isEmpty, s"unresolvable: ${missing.mkString(", ")}")
+  }
+
+  test("GraftSession.local(n) is tuned at creation, with n partitions and a fresh warehouse") {
+    val shared = spark
+    // without a default session, local() builds a new session on the
+    // running context; no table() call ever touches it
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = try GraftSession.local(2) finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+    assert(s ne shared)
+    assert(s.conf.get("spark.sql.sources.fileCompressionFactor") == "4.0")
+    assert(s.catalog.functionExists("text_stats"))
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
+    val wh = s.conf.get("spark.sql.warehouse.dir")
+    assert(wh.contains("graft-wh") &&
+      wh != shared.conf.get("spark.sql.warehouse.dir"), wh)
+    assert(new java.io.File(new java.net.URI(wh)).list().isEmpty, wh)
+  }
+
+  test("Bench tally: a failed query makes the total -1 and is counted") {
+    val t = Bench.Tally(Seq("a" -> 1.5, "b" -> -1.0, "c" -> 0.5),
+      Seq("d" -> "not in SparkEntry.queries"))
+    assert(t.total == -1.0)
+    assert(t.failed == Seq("b"))
+    assert(Bench.Tally(Seq("a" -> 1.5, "c" -> 0.5), Nil).total == 2.0)
+  }
+
+  test("only GraftSession.scala builds a Spark session") {
+    val needle = "SparkSession" + ".builder" // split: this file must not match
+    val roots = Seq("src/main/scala", "src/test/scala")
+      .map(java.nio.file.Paths.get(_))
+    assert(roots.forall(Files.isDirectory(_)), "run from the repository root")
+    val hits = roots.flatMap { r =>
+      scala.util.Using.resource(Files.walk(r))(
+        _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    }.filter(p => Files.readString(p).contains(needle))
+    assert(hits.map(_.getFileName.toString) == Seq("GraftSession.scala"),
+      hits.mkString(", "))
   }
 }
