@@ -355,9 +355,6 @@ object ImpalaDialect {
     -1
   }
 
-  /** Back-compat name: round-1 callers knew this as a pure strip. */
-  def stripBracketHints(sql: String): String = rewriteHints(sql)
-
   /** Impala puts IGNORE NULLS *inside* the analytic call
     * (`first_value(x ignore nulls)`, AnalyticExpr.java); Spark's grammar
     * wants a second boolean argument. One nesting level of parens in the

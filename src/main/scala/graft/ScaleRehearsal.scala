@@ -89,28 +89,28 @@ object ScaleRehearsal {
     val eN = spark.read.parquet(s"$base/e$mult")
     e1.count(); eN.count()
     import graft.operators.Similarity
-    val qVec = e1.filter(col("vec_id") === 0L).select(col("embedding"))
-      .head().getSeq[Float](0).toArray
+    val qVec = Similarity.queryVector(e1, "vec_id", "embedding", 0L)
     def annCase(df: DataFrame, tag: String): (Double, Double) = {
-      val path = s"$base/ann_$tag"
+      var index: Similarity.PersistedLsh = null
       val build = time {
-        Similarity.signAndWriteCorpus(df, path, "vec_id", "embedding",
-          m = 4, tables = 4)
+        index = Similarity.signAndWriteCorpus(df, s"$base/ann_$tag",
+          "vec_id", "embedding", m = 4, tables = 4)
       }
-      noop(Similarity.annTopKPersisted(spark, path, "vec_id", "embedding",
-        qVec, 0L, 10, 4, 64, 4, 7L)) // warm
-      val probe = time(noop(Similarity.annTopKPersisted(spark, path,
-        "vec_id", "embedding", qVec, 0L, 10, 4, 64, 4, 7L)))
+      noop(Similarity.annTopKPersisted(spark, index, "vec_id", "embedding",
+        qVec, 0L, 10)) // warm
+      val probe = time(noop(Similarity.annTopKPersisted(spark, index,
+        "vec_id", "embedding", qVec, 0L, 10)))
       (build, probe)
     }
     def ivfCase(df: DataFrame, tag: String): (Double, Double) = {
-      val path = s"$base/ivf_$tag"
+      var index: Similarity.PersistedIvf = null
       val build = time {
-        Similarity.ivfWriteCorpus(df, path, "vec_id", "embedding", k = 16)
+        index = Similarity.ivfWriteCorpus(df, s"$base/ivf_$tag",
+          "vec_id", "embedding", k = 16)
       }
-      noop(Similarity.ivfTopKPersisted(spark, path, "vec_id", "embedding",
+      noop(Similarity.ivfTopKPersisted(spark, index, "vec_id", "embedding",
         qVec, 0L, 10, 4))
-      val probe = time(noop(Similarity.ivfTopKPersisted(spark, path,
+      val probe = time(noop(Similarity.ivfTopKPersisted(spark, index,
         "vec_id", "embedding", qVec, 0L, 10, 4)))
       (build, probe)
     }

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+
+import graft.GraftSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -67,6 +71,89 @@ object Similarity {
     df.select(col(idCol), col(vecCol),
       lshSignatures(col(vecCol), m, dim, tables, seed).as("buckets"))
 
+  // ---- Persisted indexes. A build writes one index directory and
+  // returns a handle: the directory plus the driver-side metadata its
+  // probe needs. The cached* entry points build each index at most once
+  // per JVM; the builds themselves are uncached (ScaleRehearsal times them).
+
+  /** LSH index: the probe recomputes its hyperplanes from the parameters. */
+  final case class PersistedLsh(path: String, m: Int, dim: Int, tables: Int,
+      seed: Long)
+  final case class PersistedIvf(path: String, centroids: Array[Array[Double]])
+  final case class PersistedIvfPq(path: String,
+      centroids: Array[Array[Double]], codebooks: Array[Array[Array[Double]]])
+
+  /** Root of every cached index directory: created on first use, removed
+    * when the JVM exits, so no run probes an index an earlier run built.
+    */
+  private lazy val indexRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-index")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+  private val indexSeq = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** (index kind, data dir, table, columns, parameters) → handle.
+    * Metadata only, never rows, under the same contract as
+    * `GraftSession`'s table cache: fixture dirs are immutable inputs.
+    * The first caller of a key builds it outside the map's lock, so
+    * builds of different indexes run in parallel; concurrent callers of
+    * the same key wait for that one build. A failed build is dropped
+    * (its waiters see the failure) and the next caller retries.
+    */
+  private val indexes =
+    new java.util.concurrent.ConcurrentHashMap[Seq[Any], Promise[AnyRef]]()
+
+  private def cached[H <: AnyRef](kind: String, params: Any*)(
+      build: String => H): H = {
+    val key = kind +: params
+    val mine = Promise[AnyRef]()
+    val theirs = indexes.putIfAbsent(key, mine)
+    if (theirs != null) Await.result(theirs.future, Duration.Inf).asInstanceOf[H]
+    else try {
+      val h = build(indexRoot.resolve(s"$kind-${indexSeq.incrementAndGet()}").toString)
+      mine.success(h)
+      h
+    } catch {
+      case e: Throwable =>
+        indexes.remove(key, mine)
+        mine.failure(e)
+        throw e
+    }
+  }
+
+  def cachedLsh(spark: SparkSession, dir: String, table: String,
+      idCol: String, vecCol: String, m: Int = 8, dim: Int = 64,
+      tables: Int = 4, seed: Long = 7L): PersistedLsh =
+    cached("lsh", dir, table, idCol, vecCol, m, dim, tables, seed) { path =>
+      signAndWriteCorpus(GraftSession.table(spark, dir, table), path, idCol,
+        vecCol, m, dim, tables, seed)
+    }
+
+  def cachedIvf(spark: SparkSession, dir: String, table: String,
+      idCol: String, vecCol: String, k: Int = 16): PersistedIvf =
+    cached("ivf", dir, table, idCol, vecCol, k) { path =>
+      ivfWriteCorpus(GraftSession.table(spark, dir, table), path, idCol,
+        vecCol, k)
+    }
+
+  def cachedIvfPq(spark: SparkSession, dir: String, table: String,
+      idCol: String, vecCol: String, kCells: Int = 16, m: Int = 8,
+      ksub: Int = 16): PersistedIvfPq =
+    cached("ivfpq", dir, table, idCol, vecCol, kCells, m, ksub) { path =>
+      ivfPqWriteIndex(GraftSession.table(spark, dir, table), path, idCol,
+        vecCol, kCells, m, ksub)
+    }
+
+  /** One corpus vector by id: a single-row point read with the id filter
+    * pushed down, not a scan of the index (in production the query vector
+    * comes from the application).
+    */
+  def queryVector(source: DataFrame, idCol: String, vecCol: String,
+      id: Long): Array[Float] =
+    source.filter(col(idCol) === id).select(col(vecCol))
+      .head().getSeq[Float](0).toArray
+
   /** Sign the corpus once and persist it as the LSH index: one row per
     * (table, bucket) posting, written `partitionBy(tbl, bucket)` so a
     * probe's `tbl = l AND bucket IN (...)` predicate becomes partition
@@ -77,20 +164,12 @@ object Similarity {
     */
   def signAndWriteCorpus(df: DataFrame, path: String, idCol: String,
       vecCol: String, m: Int = 8, dim: Int = 64, tables: Int = 4,
-      seed: Long = 7L): Unit = {
+      seed: Long = 7L): PersistedLsh = {
     bucketedCorpus(df, idCol, vecCol, m, dim, tables, seed)
       .select(col(idCol), col(vecCol),
         posexplode(col("buckets")).as(Seq("tbl", "bucket")))
       .write.mode("overwrite").partitionBy("tbl", "bucket").parquet(path)
-    // r17: the session runs partitionOverwriteMode=dynamic, whose commit
-    // path does NOT emit the _SUCCESS marker — the probe entry points
-    // key "already built" on it, so every probe silently re-signed and
-    // re-wrote the whole index (a full corpus pass per query!). Write
-    // the marker explicitly so the build is amortized as designed
-    // (guide §1.4: measure the computation, not the rebuild).
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
+    PersistedLsh(path, m, dim, tables, seed)
   }
 
   /** Multi-probe bucket set for one query vector: per table, the exact
@@ -104,18 +183,16 @@ object Similarity {
     sigs.map(s => s +: Array.tabulate(m)(i => s ^ (1 << i)))
   }
 
-  /** ANN top-k against the persisted index from [[signAndWriteCorpus]]:
-    * probe `tbl/bucket` partitions only (partition pruning does the file
-    * skipping — asserted in PlanSpec), dedupe candidate ids across
-    * tables, exact cosine re-rank. No corpus re-sign, no full scan. The
-    * query vector arrives as a value (in production it comes from the
-    * application, not from scanning the index).
+  /** ANN top-k against a persisted LSH index: probe `tbl/bucket`
+    * partitions only (partition pruning does the file skipping —
+    * asserted in PlanSpec), dedupe candidate ids across tables, exact
+    * cosine re-rank. No corpus re-sign, no full scan.
     */
-  def annTopKPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
+  def annTopKPersisted(spark: SparkSession, index: PersistedLsh,
       idCol: String, vecCol: String, queryVec: Array[Float], excludeId: Long,
-      k: Int, m: Int, dim: Int, tables: Int, seed: Long): DataFrame = {
-    val index = spark.read.parquet(path)
-    val probes = probeBuckets(queryVec.map(_.toDouble), m, dim, tables, seed)
+      k: Int): DataFrame = {
+    val probes = probeBuckets(queryVec.map(_.toDouble), index.m, index.dim,
+      index.tables, index.seed)
     val hit = probes.indices.map { l =>
       col("tbl") === l && col("bucket").isin(probes(l).map(Int.box): _*)
     }.reduce(_ || _)
@@ -127,7 +204,8 @@ object Similarity {
     // kernel is deterministic, so distinct over (id, cos_sim) keeps
     // exactly one identical row per id — same result, but the exchange
     // now moves 16 bytes/row instead of the vector and hash-aggregates.
-    index.filter(hit && col(idCol) =!= excludeId)
+    spark.read.parquet(index.path)
+      .filter(hit && col(idCol) =!= excludeId)
       .select(col(idCol),
         cosine(col(vecCol), typedlit(queryVec.toSeq)).as("cos_sim"))
       .distinct()
@@ -135,47 +213,27 @@ object Similarity {
       .limit(k)
   }
 
-  /** Convenience: fetch the query vector by id from the (pruned) source
-    * table — a single-row point read with pushed-down id filter, NOT a
-    * scan of the index.
+  /** First `sampleN` vectors in id order: the deterministic training
+    * sample of both the coarse and the product quantizer (one driver
+    * job; sampleN · dim doubles — not a corpus pass).
     */
-  def annTopKPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
-      source: DataFrame, idCol: String, vecCol: String, queryId: Long,
-      k: Int, m: Int = 8, dim: Int = 64, tables: Int = 4,
-      seed: Long = 7L): DataFrame = {
-    val qVec = source.filter(col(idCol) === queryId).select(col(vecCol))
-      .head().getSeq[Float](0).toArray
-    annTopKPersisted(spark, path, idCol, vecCol, qVec, queryId, k, m, dim,
-      tables, seed)
-  }
-
-  /** IVF (inverted-file) index: k-means coarse quantizer over a sample,
-    * then every vector assigned to its nearest centroid's list. At scale
-    * the corpus is written partitioned by `ivf_cell`, so a probe reads
-    * only nprobe cells (partition pruning does the file skipping).
-    *
-    * Centroids are driver-side — they are k·dim doubles (tiny, like any
-    * broadcast dimension table); assignment is a broadcast map-side pass,
-    * no shuffle of the corpus.
-    */
-  def ivfIndex(df: DataFrame, idCol: String, vecCol: String,
-      k: Int = 16, iters: Int = 5, sampleN: Int = 2048,
-      seed: Long = 11L): (DataFrame, Array[Array[Double]]) = {
-    // r18 (guide §5 driver): ONE driver job instead of three — the
-    // deterministic init (first k vectors by id order) is a prefix of
-    // the training sample (first sampleN, k ≤ sampleN), and dim falls
-    // out of the fetched vectors; the old shape ran separate
-    // size()-probe / init / sample TakeOrdered jobs per index build.
-    require(k <= sampleN, s"ivfIndex: k=$k exceeds sampleN=$sampleN")
-    val sample = df.orderBy(col(idCol)).limit(sampleN)
+  private def trainingSample(df: DataFrame, idCol: String, vecCol: String,
+      sampleN: Int): Array[Array[Double]] =
+    df.orderBy(col(idCol)).limit(sampleN)
       .select(col(vecCol)).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val dim = sample.head.length
-    var centroids: Array[Array[Double]] = sample.take(k).map(_.clone())
+
+  /** Driver-side Lloyd iterations from `init`; a cell that attracts no
+    * point keeps its centroid.
+    */
+  private def kmeans(points: Array[Array[Double]],
+      init: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
+    val dim = points.head.length
+    var centroids = init
     (0 until iters).foreach { _ =>
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Long](k)
-      sample.foreach { v =>
+      val sums = Array.fill(centroids.length)(new Array[Double](dim))
+      val counts = new Array[Long](centroids.length)
+      points.foreach { v =>
         val c = nearestCentroid(v, centroids)
         counts(c) += 1
         var i = 0
@@ -186,6 +244,30 @@ object Similarity {
         else sums(c).map(_ / counts(c))
       }.toArray
     }
+    centroids
+  }
+
+  /** IVF (inverted-file) index: k-means coarse quantizer over a sample,
+    * then every vector assigned to its nearest centroid's list. At scale
+    * the corpus is written partitioned by `ivf_cell`, so a probe reads
+    * only nprobe cells (partition pruning does the file skipping).
+    *
+    * Centroids are driver-side — they are k·dim doubles (tiny, like any
+    * broadcast dimension table); assignment is a broadcast map-side pass,
+    * no shuffle of the corpus. The deterministic init is the first k
+    * vectors by id order, a prefix of the training sample.
+    */
+  def ivfIndex(df: DataFrame, idCol: String, vecCol: String,
+      k: Int = 16, iters: Int = 5,
+      sampleN: Int = 2048): (DataFrame, Array[Array[Double]]) = {
+    require(k <= sampleN, s"ivfIndex: k=$k exceeds sampleN=$sampleN")
+    ivfOnSample(df, vecCol, trainingSample(df, idCol, vecCol, sampleN), k, iters)
+  }
+
+  private def ivfOnSample(df: DataFrame, vecCol: String,
+      sample: Array[Array[Double]], k: Int,
+      iters: Int): (DataFrame, Array[Array[Double]]) = {
+    val centroids = kmeans(sample, sample.take(k), iters)
     // argmin over c of ||v-c||² ≡ argmin(||c||² - 2 c·v), one native
     // JVM loop per row (IvfAssign) — the zip_with/transform/
     // array_position HOF formulation evaluates O(k) interpreted lambdas
@@ -226,62 +308,36 @@ object Similarity {
       d
     }.take(nprobe)
 
-  /** Build the IVF index ONCE and persist it: the cell-assigned corpus
+  /** Build the IVF index and persist it: the cell-assigned corpus
     * written `partitionBy("ivf_cell")` (k partitions — a probe's
     * `ivf_cell IN (...)` becomes partition pruning, so a 100 TB corpus
-    * reads only nprobe/k of its files), with the centroids stored
-    * alongside as `_centroids.txt` (underscore-prefixed ⇒ invisible to
-    * the parquet file index, like `_SUCCESS`). Mirrors the LSH
+    * reads only nprobe/k of its files). Mirrors the LSH
     * [[signAndWriteCorpus]] treatment; build cost (driver k-means over a
     * sample + one assignment pass) is amortized over all queries.
     */
   def ivfWriteCorpus(df: DataFrame, path: String, idCol: String,
-      vecCol: String, k: Int = 16, iters: Int = 5, sampleN: Int = 2048,
-      seed: Long = 11L): Array[Array[Double]] = {
-    val (indexed, centroids) = ivfIndex(df, idCol, vecCol, k, iters, sampleN, seed)
+      vecCol: String, k: Int = 16, iters: Int = 5,
+      sampleN: Int = 2048): PersistedIvf = {
+    val (indexed, centroids) = ivfIndex(df, idCol, vecCol, k, iters, sampleN)
     indexed.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-    val text = centroids.map(_.mkString(",")).mkString("\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_centroids.txt"),
-      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    centroids
+    PersistedIvf(path, centroids)
   }
 
-  /** Centroids persisted by [[ivfWriteCorpus]]. */
-  def loadCentroids(path: String): Array[Array[Double]] =
-    new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path, "_centroids.txt")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").map(_.split(",").map(_.toDouble))
-
-  /** IVF top-k against the persisted index from [[ivfWriteCorpus]]: the
-    * nprobe nearest cells are computed driver-side from the stored
-    * centroids (k·dim doubles — a point read, not a scan) and land as a
+  /** IVF top-k against a persisted IVF index: the nprobe nearest cells
+    * are computed driver-side from the handle's centroids and land as a
     * partition-pruning `ivf_cell IN (...)` filter; NO index rebuild, no
-    * full-corpus assignment pass. The query vector arrives as a value.
+    * full-corpus assignment pass.
     */
-  def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, vecCol: String, queryVec: Array[Float],
+  def ivfTopKPersisted(spark: SparkSession, index: PersistedIvf,
+      idCol: String, vecCol: String, queryVec: Array[Float],
       excludeId: Long, k: Int, nprobe: Int): DataFrame = {
-    val centroids = loadCentroids(path)
-    val cells = nearestCells(queryVec.map(_.toDouble), centroids, nprobe)
-    spark.read.parquet(path)
+    val cells = nearestCells(queryVec.map(_.toDouble), index.centroids, nprobe)
+    spark.read.parquet(index.path)
       .filter(col("ivf_cell").isin(cells: _*) && col(idCol) =!= excludeId)
       .select(col(idCol),
         cosine(col(vecCol), typedlit(queryVec.toSeq)).as("cos_sim"))
       .orderBy(desc_nulls_last("cos_sim"), col(idCol))
       .limit(k)
-  }
-
-  /** Convenience: query vector fetched by id from the (pruned) source
-    * table — a single-row point read, as in [[annTopKPersisted]].
-    */
-  def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String, source: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, k: Int, nprobe: Int = 4): DataFrame = {
-    val qVec = source.filter(col(idCol) === queryId).select(col(vecCol))
-      .head().getSeq[Float](0).toArray
-    ivfTopKPersisted(spark, path, idCol, vecCol, qVec, queryId, k, nprobe)
   }
 
   /** IVF top-k: probe the `nprobe` cells nearest to the query vector and
@@ -312,39 +368,24 @@ object Similarity {
   // -------------------------------------------------------------------
 
   /** Train per-subspace codebooks: the vector's M contiguous slices are
-    * k-means-quantized independently (ksub centroids each) over a
-    * deterministic sample, mirroring [[ivfIndex]]'s driver-side Lloyd
-    * loop (sampleN · dim doubles — not a corpus pass).
+    * k-means-quantized independently (ksub centroids each) over the
+    * same deterministic sample and Lloyd loop as [[ivfIndex]].
     */
   def pqTrain(df: DataFrame, idCol: String, vecCol: String, m: Int = 8,
       ksub: Int = 16, iters: Int = 5,
-      sampleN: Int = 2048): Array[Array[Array[Double]]] = {
-    val sample = df.orderBy(col(idCol)).limit(sampleN)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      sampleN: Int = 2048): Array[Array[Array[Double]]] =
+    pqOnSample(trainingSample(df, idCol, vecCol, sampleN), m, ksub, iters)
+
+  private def pqOnSample(sample: Array[Array[Double]], m: Int, ksub: Int,
+      iters: Int): Array[Array[Array[Double]]] = {
     require(sample.nonEmpty, "pqTrain: empty corpus")
     val dim = sample.head.length
     require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
     val dsub = dim / m
-    (0 until m).toArray.map { s =>
+    Array.tabulate(m) { s =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-      var centroids = sub.map(_.toSeq).distinct.take(ksub).map(_.toArray)
-      if (centroids.length < ksub)
-        centroids = centroids ++ Array.fill(ksub - centroids.length)(centroids.head)
-      (0 until iters).foreach { _ =>
-        val sums = Array.fill(ksub)(new Array[Double](dsub))
-        val counts = new Array[Long](ksub)
-        sub.foreach { v =>
-          val c = nearestCentroid(v, centroids)
-          counts(c) += 1
-          var i = 0
-          while (i < dsub) { sums(c)(i) += v(i); i += 1 }
-        }
-        centroids = centroids.indices.map { c =>
-          if (counts(c) == 0) centroids(c) else sums(c).map(_ / counts(c))
-        }.toArray
-      }
-      centroids
+      val init = sub.map(_.toSeq).distinct.take(ksub).map(_.toArray)
+      kmeans(sub, init ++ Array.fill(ksub - init.length)(init.head), iters)
     }
   }
 
@@ -369,63 +410,48 @@ object Similarity {
   }
 
   /** Build and persist the IVF-PQ index: coarse k-means cells
-    * ([[ivfIndex]]) + per-subspace codebooks ([[pqTrain]]), corpus
-    * written `partitionBy("ivf_cell")` carrying ONLY (id, pq_code,
-    * vnorm) — the float vectors never enter the index. Centroids and
-    * codebooks persist alongside as underscore-prefixed text (invisible
-    * to the parquet file index).
+    * ([[ivfIndex]]) + per-subspace codebooks ([[pqTrain]]), both trained
+    * on one fetched sample, corpus written `partitionBy("ivf_cell")`
+    * carrying ONLY (id, pq_code, vnorm) — the float vectors never enter
+    * the index.
     */
   def ivfPqWriteIndex(df: DataFrame, path: String, idCol: String,
       vecCol: String, kCells: Int = 16, m: Int = 8, ksub: Int = 16,
-      iters: Int = 5, sampleN: Int = 2048): Unit = {
-    val (indexed, centroids) = ivfIndex(df, idCol, vecCol, kCells, iters, sampleN)
-    val codebooks = pqTrain(df, idCol, vecCol, m, ksub, iters, sampleN)
+      iters: Int = 5, sampleN: Int = 2048): PersistedIvfPq = {
+    require(kCells <= sampleN,
+      s"ivfPqWriteIndex: kCells=$kCells exceeds sampleN=$sampleN")
+    val sample = trainingSample(df, idCol, vecCol, sampleN)
+    val (indexed, centroids) = ivfOnSample(df, vecCol, sample, kCells, iters)
+    val codebooks = pqOnSample(sample, m, ksub, iters)
     indexed.select(col(idCol), col("ivf_cell"),
         pqEncode(col(vecCol), codebooks).as("pq_code"),
         l2Norm(col(vecCol)).as("vnorm"))
       .write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_centroids.txt"),
-      centroids.map(_.mkString(",")).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_codebooks.txt"),
-      codebooks.map(_.map(_.mkString(",")).mkString(";")).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    PersistedIvfPq(path, centroids, codebooks)
   }
 
-  /** Codebooks persisted by [[ivfPqWriteIndex]]. */
-  def loadCodebooks(path: String): Array[Array[Array[Double]]] =
-    new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path, "_codebooks.txt")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").map(_.split(";").map(_.split(",").map(_.toDouble)))
-
-  /** IVF-PQ top-k against the persisted index: nearest-nprobe cells from
-    * the stored centroids (driver point read) → partition-pruned scan of
-    * the code column scoring `pq_adc / (|q|·vnorm)` (approximate cosine;
-    * M table lookups per row, no vectors) → top-`cands` candidate ids →
+  /** IVF-PQ top-k against a persisted IVF-PQ index: nearest-nprobe cells
+    * from the handle's centroids → partition-pruned scan of the code
+    * column scoring `pq_adc / (|q|·vnorm)` (approximate cosine; M table
+    * lookups per row, no vectors) → top-`cands` candidate ids →
     * broadcast join back to the source for the exact cosine re-rank of
     * the final k. `cands` trades recall for re-rank cost; the gate query
     * pins parameters where the candidate set provably covers the exact
     * top-k on the fixture corpus.
     */
-  def ivfPqTopKPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String, source: DataFrame, idCol: String, vecCol: String,
+  def ivfPqTopKPersisted(spark: SparkSession, index: PersistedIvfPq,
+      source: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, nprobe: Int = 6, cands: Int = 64): DataFrame = {
-    val centroids = loadCentroids(path)
-    val codebooks = loadCodebooks(path)
-    val qVec = source.filter(col(idCol) === queryId).select(col(vecCol))
-      .head().getSeq[Float](0).toArray
+    val qVec = queryVector(source, idCol, vecCol, queryId)
     val qD = qVec.map(_.toDouble)
-    val cells = nearestCells(qD, centroids, nprobe)
-    val lut = pqLut(qD, codebooks)
+    val cells = nearestCells(qD, index.centroids, nprobe)
+    val lut = pqLut(qD, index.codebooks)
     val qNorm = math.sqrt(graft.functions.VectorImpl.dot(qD, qD))
     val adc = org.apache.spark.sql.graft.Bridge.column(
       graft.functions.PqAdc(
         org.apache.spark.sql.graft.Bridge.expression(col("pq_code")),
         lut.map(_.toSeq).toSeq))
-    val candidates = spark.read.parquet(path)
+    val candidates = spark.read.parquet(index.path)
       .filter(col("ivf_cell").isin(cells: _*) && col(idCol) =!= queryId)
       .select(col(idCol), (adc / (lit(qNorm) * col("vnorm"))).as("adc_sim"))
       .orderBy(desc_nulls_last("adc_sim"), col(idCol))

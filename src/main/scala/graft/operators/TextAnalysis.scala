@@ -36,11 +36,6 @@ object TextAnalysis {
       .otherwise(stats(text).getField("n_punct").cast("double")
         / length(text))
 
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0, lit(0.0))
-      .otherwise(length(regexp_replace(text, "[^A-Z]", "")).cast("double")
-        / length(text))
-
   def digitRatio(text: Column): Column =
     when(length(text) === 0, lit(0.0))
       .otherwise(length(regexp_replace(text, "[^0-9]", "")).cast("double")

@@ -55,8 +55,6 @@ object ColumnLineage {
 
   def dropBase(viewName: String): Unit = bases.remove(viewName.toLowerCase)
   def clearBases(): Unit = bases.clear()
-  def baseLabel(viewName: String): Option[String] =
-    bases.get(viewName.toLowerCase)
 
   // ---- graph model ---------------------------------------------------
 

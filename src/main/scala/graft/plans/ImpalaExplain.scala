@@ -793,12 +793,6 @@ object ImpalaExplain {
     else if (b >= (1L << 10)) f"${b.toDouble / (1L << 10)}%.2fKB"
     else s"${b}B"
 
-  private def fmtCardinality(n: Long): String =
-    if (n >= 1000000000L) f"${n / 1e9}%.2fB"
-    else if (n >= 1000000L) f"${n / 1e6}%.2fM"
-    else if (n >= 1000L) f"${n / 1e3}%.2fK"
-    else n.toString
-
   // ---- numbering + runtime filters ---------------------------------
 
   /** Impala's two-phase ids: single-node operators first (post-order,

@@ -17,6 +17,33 @@ object PipelineQueries extends QueryGroup {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     GraftSession.table(s, dir, n)
 
+  /** The IVF index q_sim_ivf_persisted and q_sim_ivf_probe share. */
+  private def ivf16(s: SparkSession, dir: String): Similarity.PersistedIvf =
+    Similarity.cachedIvf(s, dir, "embeddings", "vec_id", "embedding", k = 16)
+
+  /** The similarity queries' query vector: embedding of vec_id 0. */
+  private def queryVec0(s: SparkSession, dir: String): Array[Float] =
+    Similarity.queryVector(t(s, dir, "embeddings"), "vec_id", "embedding", 0L)
+
+  /** Exact brute-force cosine top-10 against vec_id 0: the oracle of
+    * every oracle-gated q_sim_* query (the ANN ones reach recall 1.0 at
+    * their gate parameters).
+    */
+  private val top10Oracle = """
+      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+      scored AS (
+        SELECT vec_id,
+          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
+            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
+        FROM embeddings, q
+        WHERE vec_id <> 0)
+      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
+      FROM scored
+      ORDER BY sim DESC, vec_id
+      LIMIT 10"""
+
   def defs: Seq[Q.Def] = Seq(
 
     // ---- token counting + quality ratios (all exact integer/ratio
@@ -394,21 +421,7 @@ object PipelineQueries extends QueryGroup {
       Similarity.bruteForceTopK(t(s, dir, "embeddings"),
           "vec_id", "embedding", queryId = 0L, k = 10)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
-    }, Some("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (
-        SELECT vec_id,
-          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        FROM embeddings, q
-        WHERE vec_id <> 0)
-      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
-      FROM scored
-      ORDER BY sim DESC, vec_id
-      LIMIT 10"""
-    )),
+    }, Some(top10Oracle)),
 
     // ---- LSH ANN top-k (6 hyperplanes × 12 tables, multi-probe
     // Hamming-1). At these parameters the seeded-deterministic probe
@@ -420,55 +433,23 @@ object PipelineQueries extends QueryGroup {
       Similarity.annTopK(t(s, dir, "embeddings"),
           "vec_id", "embedding", queryId = 0L, k = 10, m = 6, tables = 12)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
-    }, Some("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (
-        SELECT vec_id,
-          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        FROM embeddings, q
-        WHERE vec_id <> 0)
-      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
-      FROM scored
-      ORDER BY sim DESC, vec_id
-      LIMIT 10"""
-    )),
+    }, Some(top10Oracle)),
 
     // ---- LSH ANN against the *persisted* index (the 100 TB shape):
     // sign once → write partitioned by (tbl, bucket) → probe reads only
     // the probed partitions (partition pruning asserted in PlanSpec's
     // numFiles check). Same parameters ⇒ same recall-1.0 candidates ⇒
-    // the exact brute-force oracle again. The index is keyed by input
-    // dir + parameters and reused when already built — in production the
-    // build is amortized over all queries, so the benched steady state
-    // is the PROBE cost; results are identical either way.
+    // the exact brute-force oracle again. The index is built once per
+    // JVM (Similarity.cachedLsh) — in production the build is amortized
+    // over all queries, so the benched steady state is the PROBE cost;
+    // results are identical either way.
     Q.Def("q_sim_ann_persisted", (s, dir) => {
-      val key = java.lang.Integer.toHexString(s"$dir|m6|t12".hashCode)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ann_index_$key"
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        Similarity.signAndWriteCorpus(t(s, dir, "embeddings"), path,
-          "vec_id", "embedding", m = 6, tables = 12)
-      }
-      Similarity.annTopKPersisted(s, path, t(s, dir, "embeddings"),
-          "vec_id", "embedding", queryId = 0L, k = 10, m = 6, tables = 12)
+      val index = Similarity.cachedLsh(s, dir, "embeddings", "vec_id",
+        "embedding", m = 6, tables = 12)
+      Similarity.annTopKPersisted(s, index, "vec_id", "embedding",
+          queryVec0(s, dir), excludeId = 0L, k = 10)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
-    }, Some("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (
-        SELECT vec_id,
-          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        FROM embeddings, q
-        WHERE vec_id <> 0)
-      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
-      FROM scored
-      ORDER BY sim DESC, vec_id
-      LIMIT 10"""
-    )),
+    }, Some(top10Oracle)),
 
     // ---- IVF ANN: k-means coarse quantizer, nprobe-cell probe + exact
     // re-rank (the partition-pruned scale path). nprobe=6 of 16 cells
@@ -481,54 +462,20 @@ object PipelineQueries extends QueryGroup {
       Similarity.ivfTopK(indexed, centroids, "vec_id", "embedding",
           queryId = 0L, k = 10, nprobe = 6)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
-    }, Some("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (
-        SELECT vec_id,
-          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        FROM embeddings, q
-        WHERE vec_id <> 0)
-      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
-      FROM scored
-      ORDER BY sim DESC, vec_id
-      LIMIT 10"""
-    )),
+    }, Some(top10Oracle)),
 
     // ---- IVF ANN against the *persisted* index (the 100 TB shape,
-    // mirroring q_sim_ann_persisted): build once → corpus written
-    // partitionBy(ivf_cell) with centroids stored alongside → probe is a
-    // driver-side nearest-cells lookup over the stored centroids + a
-    // partition-pruned `ivf_cell IN (...)` scan. NO k-means rebuild, no
-    // full-corpus assignment pass per query (the round-3 weak spot).
-    // Same parameters ⇒ recall 1.0 here ⇒ exact brute-force oracle.
+    // mirroring q_sim_ann_persisted): the corpus written
+    // partitionBy(ivf_cell), centroids held by the cached handle →
+    // probe is a driver-side nearest-cells lookup + a partition-pruned
+    // `ivf_cell IN (...)` scan. NO k-means rebuild, no full-corpus
+    // assignment pass per query (the round-3 weak spot). Same
+    // parameters ⇒ recall 1.0 here ⇒ exact brute-force oracle.
     Q.Def("q_sim_ivf_persisted", (s, dir) => {
-      val key = java.lang.Integer.toHexString(s"$dir|k16|ivf".hashCode)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_$key"
-      if (!new java.io.File(path, "_centroids.txt").exists()) {
-        Similarity.ivfWriteCorpus(t(s, dir, "embeddings"), path,
-          "vec_id", "embedding", k = 16)
-      }
-      Similarity.ivfTopKPersisted(s, path, t(s, dir, "embeddings"),
-          "vec_id", "embedding", queryId = 0L, k = 10, nprobe = 6)
+      Similarity.ivfTopKPersisted(s, ivf16(s, dir), "vec_id", "embedding",
+          queryVec0(s, dir), excludeId = 0L, k = 10, nprobe = 6)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
-    }, Some("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (
-        SELECT vec_id,
-          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        FROM embeddings, q
-        WHERE vec_id <> 0)
-      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
-      FROM scored
-      ORDER BY sim DESC, vec_id
-      LIMIT 10"""
-    )),
+    }, Some(top10Oracle)),
 
     // ---- IVF-PQ ANN (Jégou et al., TPAMI 2011 — the memory-resident
     // 100 TB layout): the persisted index carries (id, 8-byte PQ code,
@@ -541,64 +488,35 @@ object PipelineQueries extends QueryGroup {
     // of the probed rows at sf0.1, and the re-rank join stays tiny.
     // ADC candidate coverage is additionally pinned in PqSpec.
     Q.Def("q_sim_ivfpq", (s, dir) => {
-      val key = java.lang.Integer.toHexString(s"$dir|k16|pq8x16".hashCode)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index_$key"
-      if (!new java.io.File(path, "_codebooks.txt").exists()) {
-        Similarity.ivfPqWriteIndex(t(s, dir, "embeddings"), path,
-          "vec_id", "embedding", kCells = 16, m = 8, ksub = 16)
-      }
-      Similarity.ivfPqTopKPersisted(s, path, t(s, dir, "embeddings"),
+      val index = Similarity.cachedIvfPq(s, dir, "embeddings", "vec_id",
+        "embedding", kCells = 16, m = 8, ksub = 16)
+      Similarity.ivfPqTopKPersisted(s, index, t(s, dir, "embeddings"),
           "vec_id", "embedding", queryId = 0L, k = 10, nprobe = 6,
           cands = 1024)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
-    }, Some("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (
-        SELECT vec_id,
-          LIST_SUM(LIST_TRANSFORM(LIST_ZIP(embedding, qv),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * SQRT(LIST_SUM(LIST_TRANSFORM(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        FROM embeddings, q
-        WHERE vec_id <> 0)
-      SELECT vec_id, ROUND(sim, 3) AS cos_sim_r
-      FROM scored
-      ORDER BY sim DESC, vec_id
-      LIMIT 10"""
-    )),
+    }, Some(top10Oracle)),
 
     // ---- bench-tier persisted probes at a LISTING-FREE layout (judge
-    // r3 item 7): the gate-tier indexes (m=6/tables=12 → up to 768
-    // dirs) are shaped for recall-1.0 oracle parity, where local-mode
+    // r3 item 7): the gate-tier LSH index (m=6/tables=12 → up to 768
+    // dirs) is shaped for recall-1.0 oracle parity, where local-mode
     // directory listing is >90% of probe wall time — cost a metastore
     // absorbs at scale. These two use few-partition layouts (ANN:
-    // m=4/tables=4 → ≤64 dirs; IVF: k=16 cells) so BENCH_r04 records
-    // the steady-state probe cost itself. Build is once-per-layout
-    // (keyed path); min-of-3 bench iterations isolates the pure probe.
-    // Rows-only check (recall at this layout is below 1.0 by design —
-    // the exactness gate lives in q_sim_ann_persisted / q_sim_ivf
-    // _persisted).
+    // m=4/tables=4 → ≤64 dirs; IVF: k=16 cells, the same index as
+    // q_sim_ivf_persisted) so BENCH_r04 records the steady-state probe
+    // cost itself. Rows-only check (recall at this layout/nprobe is
+    // below 1.0 by design — the exactness gate lives in
+    // q_sim_ann_persisted / q_sim_ivf_persisted).
     Q.Def("q_sim_ann_probe", (s, dir) => {
-      val key = java.lang.Integer.toHexString(s"$dir|m4|t4".hashCode)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ann_probe_$key"
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        Similarity.signAndWriteCorpus(t(s, dir, "embeddings"), path,
-          "vec_id", "embedding", m = 4, tables = 4)
-      }
-      Similarity.annTopKPersisted(s, path, t(s, dir, "embeddings"),
-          "vec_id", "embedding", queryId = 0L, k = 10, m = 4, tables = 4)
+      val index = Similarity.cachedLsh(s, dir, "embeddings", "vec_id",
+        "embedding", m = 4, tables = 4)
+      Similarity.annTopKPersisted(s, index, "vec_id", "embedding",
+          queryVec0(s, dir), excludeId = 0L, k = 10)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
     }, None),
 
     Q.Def("q_sim_ivf_probe", (s, dir) => {
-      val key = java.lang.Integer.toHexString(s"$dir|k16|probe".hashCode)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_probe_$key"
-      if (!new java.io.File(path, "_centroids.txt").exists()) {
-        Similarity.ivfWriteCorpus(t(s, dir, "embeddings"), path,
-          "vec_id", "embedding", k = 16)
-      }
-      Similarity.ivfTopKPersisted(s, path, t(s, dir, "embeddings"),
-          "vec_id", "embedding", queryId = 0L, k = 10, nprobe = 4)
+      Similarity.ivfTopKPersisted(s, ivf16(s, dir), "vec_id", "embedding",
+          queryVec0(s, dir), excludeId = 0L, k = 10, nprobe = 4)
         .select(col("vec_id"), round(col("cos_sim"), 3).as("cos_sim_r"))
     }, None),
 

@@ -57,9 +57,6 @@ object Formats {
     spark.read.option("delimiter", delim)
       .option("header", header.toString).schema(schema).csv(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
@@ -103,9 +100,4 @@ object Formats {
         .lookupDataSource("avro", new org.apache.spark.sql.internal.SQLConf)
       true
     } catch { case _: Throwable => false }
-
-  /** Back-compat: some caller can always read Avro now (core library is
-    * on every Spark classpath).
-    */
-  def avroAvailable: Boolean = true
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface for the `events` table shape.
@@ -29,16 +28,6 @@ object EventsStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Streaming source over a directory of events parquet files: each new
-    * file becomes a micro-batch (the incremental-ingest pattern).
-    */
-  def readEvents(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-
   /** Tumbling-window counts/sums per event type — identical logic to the
     * batch q_events_tumbling; watermark bounds state for streaming use.
     */
@@ -53,31 +42,6 @@ object EventsStream {
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("event_type"), col("n"), col("value_sum"), col("approx_users"))
-
-  /** Sliding-window rates (window/slide) — the sliding variant the
-    * reference cannot express at all.
-    */
-  def slidingAgg(events: DataFrame, windowLen: String = "1 hour",
-      slide: String = "15 minutes", watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-
-  /** Session windows via the native session_window (gap-based), the
-    * streaming equivalent of the batch lag/running-sum sessionization in
-    * EventsQueries.q_events_session.
-    */
-  def sessionAgg(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("value_total"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("value_total"))
 
   /** One closed session per user: explicit custom state via
     * flatMapGroupsWithState (the arbitrary-stateful-processing tier
@@ -249,14 +213,4 @@ object EventsStream {
         graft.operators.Dedup.lshBandBuckets(col("sig"), bands, k / bands)
           .as("buckets"))
   }
-
-  /** Write a streaming result to partitioned parquet with checkpointing
-    * (exactly-once file sink).
-    */
-  def toParquetSink(df: DataFrame, outDir: String,
-      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
 }

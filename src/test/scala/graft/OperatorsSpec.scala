@@ -429,6 +429,29 @@ class OperatorsSpec extends SparkSpecBase {
     }
   }
 
+  test("persisted-index cache: one handle per (dir, kind, parameters); failures retried") {
+    def lsh(m: Int) = Similarity.cachedLsh(spark, sfDir, "embeddings",
+      "vec_id", "embedding", m = m, tables = 4)
+    def ivf(dir: String) = Similarity.cachedIvf(spark, dir, "embeddings",
+      "vec_id", "embedding", k = 16)
+    val a = lsh(4)
+    assert(a eq lsh(4))
+    val b = lsh(5)
+    assert(!(a eq b) && a.path != b.path)
+    assert(ivf(sfDir) eq ivf(sfDir))
+    assert(ivf(sfDir).path != a.path)
+    // a build that fails (no corpus yet) is not cached: once the corpus
+    // exists the next request builds
+    val dir = java.nio.file.Files.createTempDirectory("graft-cache-retry")
+    try {
+      intercept[Exception](ivf(dir.toString))
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
+        dir.resolve("embeddings.parquet"))
+      assert(ivf(dir.toString).centroids.length == 16)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("embedDupPairs exact vs IVF-blocked: twins found, IVF recall on planted pairs") {
     val dim = 64
     def splitmix(seed: Long): Iterator[Double] = new Iterator[Double] {

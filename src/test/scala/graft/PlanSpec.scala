@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
+import graft.operators.Similarity
+
 /** Plan-shape assertions for the 100 TB design goals: filters and
   * projections reach the parquet scan, small dimensions broadcast,
   * aggregates are partial (map-side) before the shuffle, and hot paths
@@ -108,78 +110,48 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("persisted ANN probe reads only probed (tbl, bucket) partitions") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val path = java.nio.file.Files.createTempDirectory("graft_ann_plan").toString
     val emb = GraftSession.table(spark, sfDir, "embeddings")
-    graft.operators.Similarity.signAndWriteCorpus(
-      emb, path, "vec_id", "embedding", m = 6, tables = 12)
-    val probe = graft.operators.Similarity.annTopKPersisted(
-      spark, path, emb, "vec_id", "embedding", queryId = 0L, k = 10,
-      m = 6, tables = 12)
+    val index = Similarity.cachedLsh(spark, sfDir, "embeddings", "vec_id",
+      "embedding", m = 6, tables = 12)
+    val probe = Similarity.annTopKPersisted(spark, index, "vec_id",
+      "embedding", Similarity.queryVector(emb, "vec_id", "embedding", 0L),
+      excludeId = 0L, k = 10)
     // the probe predicate must reach the scan as a partition filter …
     val p = probe.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      ExplainMode.fromString("formatted"))
     assert(p.contains("PartitionFilters") && p.contains("tbl") &&
       p.contains("bucket"), p)
-    probe.collect()
     // … and actually skip files: ≤ tables·(m+1) = 84 of the up-to-768
     // (tbl, bucket) partitions may be read.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    def allScans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(allScans)
-    }
-    val scan = allScans(probe.queryExecution.executedPlan).head
-    val totalFiles = {
-      val fs = new java.io.File(path)
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1L else 0L
-      walk(fs)
-    }
-    val filesRead = scan.metrics("numFiles").value
-    assert(filesRead > 0 && filesRead < totalFiles / 2,
-      s"filesRead=$filesRead totalFiles=$totalFiles")
+    assertPrunedScan(probe, index.path)
   }
 
   test("persisted IVF probe reads only the nprobe of k cell partitions") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.SparkPlan
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_plan").toString
     val emb = GraftSession.table(spark, sfDir, "embeddings")
-    graft.operators.Similarity.ivfWriteCorpus(
-      emb, path, "vec_id", "embedding", k = 16)
-    val probe = graft.operators.Similarity.ivfTopKPersisted(
-      spark, path, emb, "vec_id", "embedding", queryId = 0L, k = 10,
-      nprobe = 6)
+    val index = Similarity.cachedIvf(spark, sfDir, "embeddings", "vec_id",
+      "embedding", k = 16)
+    val probe = Similarity.ivfTopKPersisted(spark, index, "vec_id",
+      "embedding", Similarity.queryVector(emb, "vec_id", "embedding", 0L),
+      excludeId = 0L, k = 10, nprobe = 6)
     // the cell predicate must reach the scan as a partition filter …
     val p = probe.queryExecution.explainString(
       ExplainMode.fromString("formatted"))
     assert(p.contains("PartitionFilters") && p.contains("ivf_cell"), p)
-    probe.collect()
     // … and actually skip files: only the 6 probed of 16 cell
     // partitions may be read.
-    def allScans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(allScans)
+    assertPrunedScan(probe, index.path)
+  }
+
+  test("q_sim_ivf_probe and q_sim_ivf_persisted probe one IVF index") {
+    // identical k=16 builds under two names used to write the corpus
+    // twice; both now resolve to the one cached handle
+    val index = Similarity.cachedIvf(spark, sfDir, "embeddings", "vec_id",
+      "embedding", k = 16)
+    Seq("q_sim_ivf_probe", "q_sim_ivf_persisted").foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      df.collect()
+      assert(scannedPaths(df) == Seq(index.path), s"$n scans ${scannedPaths(df)}")
     }
-    val scan = allScans(probe.queryExecution.executedPlan).head
-    val totalFiles = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1L else 0L
-      walk(new java.io.File(path))
-    }
-    val filesRead = scan.metrics("numFiles").value
-    assert(filesRead > 0 && filesRead < totalFiles / 2,
-      s"filesRead=$filesRead totalFiles=$totalFiles")
   }
 
   test("ad-hoc ANN probe predicate is HOF-free (native array_contains only)") {
@@ -202,8 +174,6 @@ class PlanSpec extends SparkSpecBase {
     // answers from the partition listing. At a million partitions this
     // is catalog-read vs full-table-scan — the plan must contain NO
     // file scan, and ineligible shapes (count(*)) must keep the scan.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft_pks").toString
     import spark.implicits._
@@ -226,12 +196,6 @@ class PlanSpec extends SparkSpecBase {
       () => parts.map { case (p, b) => ImpalaStats.Partition(
         p.map(Option(_)), Seq(b), "PARQUET", "") },
       () => tbl))
-    def allScans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(allScans)
-    }
     try {
       // the PRODUCT path: SET flows through ImpalaOptions onto the conf
       ImpalaDialect.sql(spark, "set optimize_partition_key_scans=1")

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 
-/** IVF-PQ: product-quantized ANN (Similarity.pqTrain/ivfPqWriteIndex/
+/** IVF-PQ: product-quantized ANN (Similarity.pqTrain/cachedIvfPq/
   * ivfPqTopKPersisted; kernels PqEncode/PqAdc). Pins the three claims
   * that make PQ the 100 TB layout: the index carries codes instead of
   * vectors, the ADC scan approximates inner products well enough that a
@@ -18,14 +19,9 @@ class PqSpec extends SparkSpecBase {
     spark.read.parquet(s"$sfDir/embeddings.parquet")
   }
 
-  private def indexPath: String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_pq_spec_" +
-      java.lang.Integer.toHexString(sfDir.hashCode)
-    if (!new java.io.File(p, "_codebooks.txt").exists())
-      Similarity.ivfPqWriteIndex(emb, p, "vec_id", "embedding",
-        kCells = 16, m = 8, ksub = 16)
-    p
-  }
+  private def index: Similarity.PersistedIvfPq =
+    Similarity.cachedIvfPq(spark, sfDir, "embeddings", "vec_id", "embedding",
+      kCells = 16, m = 8, ksub = 16)
 
   test("pq codes: M bytes per row, every byte a valid codebook index") {
     val cb = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ksub = 16)
@@ -74,14 +70,14 @@ class PqSpec extends SparkSpecBase {
   }
 
   test("persisted index holds codes + norm only — no embedding column") {
-    val sch = spark.read.parquet(indexPath).schema
+    val sch = spark.read.parquet(index.path).schema
     assert(sch.fieldNames.sorted.toSeq ==
       Seq("ivf_cell", "pq_code", "vec_id", "vnorm"))
     assert(!sch.fieldNames.contains("embedding"))
   }
 
   test("IVF-PQ probe + exact re-rank matches brute force exactly") {
-    val got = Similarity.ivfPqTopKPersisted(spark, indexPath, emb,
+    val got = Similarity.ivfPqTopKPersisted(spark, index, emb,
         "vec_id", "embedding", queryId = 0L, k = 10, nprobe = 6, cands = 256)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val expect = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
@@ -91,32 +87,45 @@ class PqSpec extends SparkSpecBase {
   }
 
   test("probe reads only the nprobe cell partitions") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val df = Similarity.ivfPqTopKPersisted(spark, indexPath, emb,
+    val df = Similarity.ivfPqTopKPersisted(spark, index, emb,
       "vec_id", "embedding", queryId = 0L, k = 10, nprobe = 6, cands = 256)
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(p.contains("PartitionFilters") && p.contains("ivf_cell"), p)
-    df.collect()
-    def allScans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(allScans)
+    assertPrunedScan(df, index.path)
+  }
+
+  test("four concurrent q_sim_ivfpq clients share one index build") {
+    // a fresh copy of the corpus is a fresh cache key, so all four
+    // clients ask for an index that does not exist yet
+    val dir = java.nio.file.Files.createTempDirectory("graft-pq-clients")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    val query = SparkEntry.queries("q_sim_ivfpq")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[(Seq[Row], Seq[String])] {
+          def call(): (Seq[Row], Seq[String]) = {
+            start.await()
+            val df = query(spark, dir.toString)
+            (df.collect().toSeq, scannedPaths(df))
+          }
+        })
+      }
+      start.countDown()
+      val runs = futures.map(_.get())
+      val built = Similarity.cachedIvfPq(spark, dir.toString, "embeddings",
+        "vec_id", "embedding", kCells = 16, m = 8, ksub = 16)
+      // one build: every client probed the directory of the cached handle
+      runs.foreach { case (_, roots) => assert(roots.contains(built.path), roots) }
+      assert(runs.map(_._1).distinct.size == 1, runs.map(_._1))
+      assert(runs.head._1.size == 10)
+    } finally {
+      pool.shutdown()
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
-    val scan = allScans(df.queryExecution.executedPlan)
-      .find(_.relation.location.rootPaths
-        .exists(_.toString.contains("graft_pq_spec")))
-      .getOrElse(fail("no index scan found"))
-    val totalFiles = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1L else 0L
-      walk(new java.io.File(indexPath))
-    }
-    val filesRead = scan.metrics("numFiles").value
-    assert(filesRead > 0 && filesRead < totalFiles / 2,
-      s"filesRead=$filesRead totalFiles=$totalFiles")
   }
 }
