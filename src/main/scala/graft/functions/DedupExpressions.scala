@@ -3,6 +3,7 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,8 +104,21 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
+  /** Word tokens exactly as SQL `split(lower(trim(text)), '\\s+')`, the
+    * tokens of [[graft.operators.Dedup.shingles]]: TRIM strips spaces
+    * only, so a leading tab or a trailing newline yields an empty first
+    * or last token, and the split keeps trailing empty tokens.
+    */
+  def words(text: String): Array[String] = {
+    var b = 0
+    var e = text.length
+    while (b < e && text.charAt(b) == ' ') b += 1
+    while (e > b && text.charAt(e - 1) == ' ') e -= 1
+    text.substring(b, e).toLowerCase.split("\\s+", -1)
+  }
+
   def compute(text: String, n: Int): ArrayData = {
-    val words = text.trim.toLowerCase.split("\\s+")
+    val words = ShingleHashes.words(text)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     def hashOf(s: String): Long =
       math.floorMod(HashImpls.murmur(s.getBytes("UTF-8")), MinHashImpl.P)
@@ -194,25 +208,52 @@ case class LshBandBuckets(child: Expression, bands: Int, rows: Int)
   override def prettyName: String = "lsh_band_buckets"
 }
 
-/** `sorted_pairs(ids)` → ARRAY<STRUCT<id1: BIGINT, id2: BIGINT>>: every
-  * unordered pair of a posting list, emitted as (min, max), equal values
-  * skipped — one JVM nested loop per list. Replaces the inverted-index
-  * self-join in [[graft.operators.Dedup.ngramJaccardPairs]]: a groupBy
-  * that collects the (df-capped, so bounded) posting list plus this
-  * kernel produces identical pairs with one shuffle instead of the
-  * self-join's two, and without recomputing the shingle scan per side.
+/** `sorted_pairs(list)` → every unordered pair of a posting list, the
+  * smaller id first, equal ids skipped — one JVM nested loop per list.
+  * The list is what [[CollectCapped]] emits: ARRAY<BIGINT> of ids
+  * (pairs are STRUCT<id1, id2>) or ARRAY<STRUCT<BIGINT, BIGINT>> of
+  * (id, payload) entries (pairs are STRUCT<id1, b1, id2, b2>, each id
+  * with its own payload). Together they replace the inverted-index
+  * self-join in [[graft.operators.Dedup]]: one groupBy per posting list
+  * instead of the self-join's shuffles, and a per-id payload (doc size,
+  * simhash …) rides the list instead of joining back to a second corpus
+  * scan.
   */
 case class SortedPairs(child: Expression) extends UnaryExpression {
+  /** Longs per list entry: 2 when entries carry a payload. */
+  private lazy val width = child.dataType match {
+    case ArrayType(_: StructType, _) => 2
+    case _ => 1
+  }
   override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("id1", LongType, nullable = false),
-      StructField("id2", LongType, nullable = false))),
+    StructType((if (width == 1) Seq("id1", "id2") else Seq("id1", "b1", "id2", "b2"))
+      .map(StructField(_, LongType, nullable = false))),
     containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+      case ArrayType(StructType(Array(f1, f2)), _)
+          if f1.dataType == LongType && f2.dataType == LongType =>
+        TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure("sorted_pairs requires " +
+        s"ARRAY<BIGINT> or ARRAY<STRUCT<BIGINT,BIGINT>>, got ${t.simpleString}")
+    }
   override protected def nullSafeEval(v: Any): Any =
     pairsFor(v.asInstanceOf[ArrayData])
   /** Codegen entry. */
   def pairsFor(a: ArrayData): ArrayData = {
-    val ids = a.toLongArray()
-    val n = ids.length
+    val n = a.numElements()
+    val ids = if (width == 1) a.toLongArray() else new Array[Long](n)
+    val bs = new Array[Long](if (width == 1) 0 else n)
+    if (width == 2) {
+      var i = 0
+      while (i < n) {
+        val r = a.getStruct(i, 2)
+        ids(i) = r.getLong(0)
+        bs(i) = r.getLong(1)
+        i += 1
+      }
+    }
     // pair count in Long: n*(n-1)/2 silently overflows Int past n=65536
     // (NegativeArraySizeException); posting lists are collect_capped so
     // this cannot fire from the shipped pipelines, but an uncapped
@@ -227,9 +268,11 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
       var j = i + 1
       while (j < n) {
         if (ids(i) != ids(j)) {
-          val lo = math.min(ids(i), ids(j))
-          val hi = math.max(ids(i), ids(j))
-          out(k) = InternalRow(lo, hi)
+          val lo = if (ids(i) < ids(j)) i else j
+          val hi = i + j - lo
+          out(k) =
+            if (width == 1) InternalRow(ids(lo), ids(hi))
+            else InternalRow(ids(lo), bs(lo), ids(hi), bs(hi))
           k += 1
         }
         j += 1
@@ -247,58 +290,81 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
   override def prettyName: String = "sorted_pairs"
 }
 
-/** `collect_capped(id, cap)` → ARRAY<BIGINT> or NULL: the group's ids in
-  * arrival order while the group stays within `cap` elements; NULL as
-  * soon as it exceeds `cap`. The aggregation buffer itself is bounded at
-  * cap+1 longs — the overflow marker — so a shingle appearing in 10⁷
-  * docs costs cap+1 longs of state, not a 10⁷-entry transient list the
-  * way `collect_list` + post-filter does. Built for
-  * [[graft.operators.Dedup.ngramJaccardPairs]]'s df cap, where an
-  * over-cap posting list carries no dedup signal and is dropped anyway.
+/** `collect_capped(id[, payload], cap)` → the group's posting list in
+  * arrival order while it stays within `cap` entries, NULL as soon as it
+  * exceeds `cap`: ARRAY<BIGINT> of ids, or ARRAY<STRUCT<id, b>> when a
+  * BIGINT payload rides along (the input of [[SortedPairs]]). The buffer
+  * is flat longs, one or two per entry, and saturates at cap+1 entries —
+  * the overflow marker — so a shingle appearing in 10⁷ docs costs cap+1
+  * entries of state, not a 10⁷-entry transient list the way
+  * `collect_list` + post-filter does. An over-cap posting list carries
+  * no dedup signal and is dropped anyway ([[graft.operators.Dedup]]).
   */
 case class CollectCapped(
-    child: Expression,
+    children: Seq[Expression],
     cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArrayBuffer[Long]]
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
+  extends TypedImperativeAggregate[ArrayBuffer[Long]] {
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  /** Longs per entry: the id, then the payload if there is one. */
+  private def width: Int = children.length
+  /** Longs in a full buffer; one more entry marks it over cap. */
+  private def limit: Int = width * cap
+
+  override def dataType: DataType = ArrayType(
+    if (width == 1) LongType
+    else StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("b", LongType, nullable = false))),
+    containsNull = false)
   override def nullable: Boolean = true
 
   // update() widens to Long: misuse over a non-integral column must be
   // a clean analysis error, not an executor ClassCastException
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"collect_capped requires an integral id column, got ${t.simpleString}")
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.map(_.dataType) match {
+      case Seq(id, _*) if !Seq(ByteType, ShortType, IntegerType, LongType).contains(id) =>
+        TypeCheckResult.TypeCheckFailure(
+          s"collect_capped requires an integral id column, got ${id.simpleString}")
+      case Seq(_) | Seq(_, LongType) => TypeCheckResult.TypeCheckSuccess
+      case Seq(_, p) => TypeCheckResult.TypeCheckFailure(
+        s"collect_capped requires a BIGINT payload column, got ${p.simpleString}")
+      case _ => TypeCheckResult.TypeCheckFailure(
+        "collect_capped takes (id, cap) or (id, payload, cap)")
     }
 
   override def createAggregationBuffer(): ArrayBuffer[Long] =
     ArrayBuffer.empty[Long]
 
-  // length cap+1 is the saturated "exceeded" state; update/merge never
-  // grow past it
+  // a buffer longer than `limit` is the saturated "exceeded" state;
+  // update/merge never grow past one entry beyond it
   override def update(buf: ArrayBuffer[Long], row: InternalRow): ArrayBuffer[Long] = {
-    val v = child.eval(row)
-    if (v != null && buf.length <= cap) buf += v.asInstanceOf[Number].longValue
+    if (buf.length <= limit) {
+      val id = children.head.eval(row)
+      val b = if (width == 1) 0L else children(1).eval(row)
+      if (id != null && b != null) {
+        buf += id.asInstanceOf[Number].longValue
+        if (width == 2) buf += b.asInstanceOf[Number].longValue
+      }
+    }
     buf
   }
 
   override def merge(a: ArrayBuffer[Long], b: ArrayBuffer[Long]): ArrayBuffer[Long] = {
     var i = 0
-    while (i < b.length && a.length <= cap) { a += b(i); i += 1 }
+    while (i < b.length && a.length <= limit) {
+      var j = 0
+      while (j < width) { a += b(i + j); j += 1 }
+      i += width
+    }
     a
   }
 
   override def eval(buf: ArrayBuffer[Long]): Any =
-    if (buf.length > cap) null
-    else new GenericArrayData(buf.toArray)
+    if (buf.length > limit) null
+    else if (width == 1) new GenericArrayData(buf.toArray)
+    else new GenericArrayData(Array.tabulate[Any](buf.length / 2)(i =>
+      InternalRow(buf(2 * i), buf(2 * i + 1))))
 
   override def serialize(buf: ArrayBuffer[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(4 + 8 * buf.length)
@@ -320,174 +386,11 @@ case class CollectCapped(
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CollectCapped =
     copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CollectCapped =
-    copy(child = c)
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): CollectCapped = copy(children = c)
   override def prettyName: String = "collect_capped"
 }
 
-/** `sorted_pairs2(arr)` → ARRAY<STRUCT<id1,b1,id2,b2>>: every unordered
-  * pair of an ARRAY<STRUCT<BIGINT,BIGINT>> posting list where the first
-  * field is the id and the second a per-id payload (doc size, simhash
-  * …), emitted with the smaller id first and equal-id pairs skipped —
-  * the payload-carrying twin of [[SortedPairs]]. Lets the inverted-index
-  * pipelines emit (id1, payload1, id2, payload2) from ONE groupBy, so
-  * the per-id payload never needs a join back to a second corpus scan
-  * (optimization guide §2.4: remove shuffles outright).
-  */
-case class SortedPairs2(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("id1", LongType, nullable = false),
-      StructField("b1", LongType, nullable = false),
-      StructField("id2", LongType, nullable = false),
-      StructField("b2", LongType, nullable = false))),
-    containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(Array(f1, f2)), _)
-          if f1.dataType == LongType && f2.dataType == LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sorted_pairs2 requires ARRAY<STRUCT<BIGINT,BIGINT>>, got ${t.simpleString}")
-    }
-  override protected def nullSafeEval(v: Any): Any =
-    pairsFor(v.asInstanceOf[ArrayData])
-  /** Codegen entry. */
-  def pairsFor(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    val ids = new Array[Long](n)
-    val bs = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val r = a.getStruct(i, 2)
-      ids(i) = r.getLong(0)
-      bs(i) = r.getLong(1)
-      i += 1
-    }
-    // Long-safe sizing, as in SortedPairs.pairsFor
-    val np = n.toLong * (n - 1) / 2
-    require(np <= Int.MaxValue - 8,
-      s"sorted_pairs2: $n ids expand to $np pairs — cap the posting list")
-    val out = new Array[Any](np.toInt)
-    var k = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        if (ids(i) != ids(j)) {
-          out(k) =
-            if (ids(i) < ids(j)) InternalRow(ids(i), bs(i), ids(j), bs(j))
-            else InternalRow(ids(j), bs(j), ids(i), bs(i))
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(if (k == out.length) out else out.take(k))
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pairs2Expr", this, classOf[SortedPairs2].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.pairsFor($c)")
-  }
-  override protected def withNewChildInternal(c: Expression): SortedPairs2 =
-    copy(child = c)
-  override def prettyName: String = "sorted_pairs2"
-}
-
-/** `collect_capped2(id, payload, cap)` → ARRAY<STRUCT<id,b>> or NULL:
-  * the payload-carrying twin of [[CollectCapped]] — same bounded buffer
-  * (saturates at cap+1 entries, over-cap groups evaluate to NULL), each
-  * entry an (id, payload) pair. Feeds [[SortedPairs2]] so the
-  * inverted-index pipelines carry doc sizes through the single groupBy
-  * instead of joining a second corpus scan back onto the pairs.
-  */
-case class CollectCapped2(
-    left: Expression,
-    right: Expression,
-    cap: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArrayBuffer[Long]]
-  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("id", LongType, nullable = false),
-      StructField("b", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"collect_capped2 requires two BIGINT columns, got " +
-            s"${l.simpleString}, ${r.simpleString}")
-    }
-
-  // buffer holds (id, payload) flattened; length 2·(cap+1) is the
-  // saturated "exceeded" state, update/merge never grow past it
-  override def createAggregationBuffer(): ArrayBuffer[Long] =
-    ArrayBuffer.empty[Long]
-
-  override def update(buf: ArrayBuffer[Long], row: InternalRow): ArrayBuffer[Long] = {
-    val a = left.eval(row)
-    val b = right.eval(row)
-    if (a != null && b != null && buf.length <= 2 * cap) {
-      buf += a.asInstanceOf[Number].longValue
-      buf += b.asInstanceOf[Number].longValue
-    }
-    buf
-  }
-
-  override def merge(a: ArrayBuffer[Long], b: ArrayBuffer[Long]): ArrayBuffer[Long] = {
-    var i = 0
-    while (i < b.length && a.length <= 2 * cap) {
-      a += b(i); a += b(i + 1); i += 2
-    }
-    a
-  }
-
-  override def eval(buf: ArrayBuffer[Long]): Any =
-    if (buf.length > 2 * cap) null
-    else {
-      val out = new Array[Any](buf.length / 2)
-      var i = 0
-      while (i < out.length) {
-        out(i) = InternalRow(buf(2 * i), buf(2 * i + 1))
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-
-  override def serialize(buf: ArrayBuffer[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 * buf.length)
-    bb.putInt(buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new ArrayBuffer[Long](n)
-    var i = 0
-    while (i < n) { buf += bb.getLong; i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): CollectCapped2 =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CollectCapped2 =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CollectCapped2 = copy(left = l, right = r)
-  override def prettyName: String = "collect_capped2"
-}
 
 /** `simhash_text(text)` → BIGINT: lowercase → whitespace-split → murmur
   * per token → 64-bit SimHash, one pass (replaces an interpreted
@@ -507,7 +410,7 @@ case class SimHashText(child: Expression) extends UnaryExpression {
 
 object SimHashText {
   def compute(text: String): Long = {
-    val words = text.trim.toLowerCase.split("\\s+")
+    val words = ShingleHashes.words(text)
     val hashes = new Array[Long](words.length)
     var i = 0
     while (i < words.length) {

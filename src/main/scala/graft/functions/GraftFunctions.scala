@@ -216,11 +216,8 @@ object GraftFunctions {
       a(1).eval().asInstanceOf[Number].intValue,
       a(2).eval().asInstanceOf[Number].intValue)),
     "sorted_pairs" -> (a => SortedPairs(a.head)),
-    "sorted_pairs2" -> (a => SortedPairs2(a.head)),
-    "collect_capped" -> (a => CollectCapped(a(0),
-      a(1).eval().asInstanceOf[Number].intValue)),
-    "collect_capped2" -> (a => CollectCapped2(a(0), a(1),
-      a(2).eval().asInstanceOf[Number].intValue)),
+    "collect_capped" -> (a => CollectCapped(a.init,
+      a.last.eval().asInstanceOf[Number].intValue)),
     "simhash64" -> (a => SimHash64(a.head)),
     "simhash_text" -> (a => SimHashText(a.head)),
     // text-analysis kernels (graft.operators.TextAnalysis; word list

@@ -66,41 +66,69 @@ object Dedup {
         .as(Seq("band", "bucket")))
   }
 
-  /** Candidate pairs (id1 < id2) from shared LSH buckets.
+  /** Posting lists → candidate pairs, the one pair generator of every
+    * inverted index here: groups `entries` by `keys`, collects each
+    * group's `entry` — an id, or an id and one BIGINT payload — through
+    * the size-capped [[graft.functions.CollectCapped]], drops over-cap
+    * (NULL) and singleton lists, and explodes
+    * [[graft.functions.SortedPairs]] into a struct column `p`: (id1, id2)
+    * or (id1, b1, id2, b2), smaller id first.
     *
-    * Hot-bucket guard: a degenerate bucket (e.g. millions of documents
-    * with identical boilerplate hashing to one (band,bucket)) would go
-    * quadratic under a self-join. Buckets collect through the
-    * size-capped [[graft.functions.CollectCapped]] — agg state
-    * saturates at `maxBucket`+1 ids and an over-cap bucket is dropped
-    * whole (it carries no pairwise signal a dedup policy can use; the
-    * exact-dup groupBy path handles identical-text clusters in O(n)).
-    * One groupBy instead of a 3-shuffle self-join, same as the n-gram
-    * inverted index.
+    * Hot-list guard: a degenerate posting list (millions of documents
+    * with identical boilerplate in one bucket, a shingle in every doc)
+    * would go quadratic under a self-join. The aggregate's state
+    * saturates at `cap`+1 entries and an over-cap list is dropped whole
+    * — it carries no pairwise signal a dedup policy can use; the O(n)
+    * exact-dup path handles identical-text clusters. One groupBy (one
+    * shuffle of compact key tuples) instead of a self-join's shuffles,
+    * and a payload never needs a join back to a second corpus scan.
     */
-  def candidatePairs(buckets: DataFrame, maxBucket: Int = 1000): DataFrame =
-    buckets.groupBy(col("band"), col("bucket"))
-      .agg(call_function("collect_capped", col("id"), lit(maxBucket)).as("ids"))
+  private def postingPairs(entries: DataFrame, keys: Seq[Column],
+      entry: Seq[Column], cap: Int): DataFrame =
+    entries.groupBy(keys: _*)
+      .agg(call_function("collect_capped", entry :+ lit(cap): _*).as("ids"))
       .filter(col("ids").isNotNull && size(col("ids")) >= 2)
       .select(explode(call_function("sorted_pairs", col("ids"))).as("p"))
+
+  /** Candidate pairs (id1 < id2) from shared LSH buckets; a bucket over
+    * `maxBucket` ids is dropped ([[postingPairs]]).
+    */
+  def candidatePairs(buckets: DataFrame, maxBucket: Int = 1000): DataFrame =
+    postingPairs(buckets, Seq(col("band"), col("bucket")), Seq(col("id")),
+        maxBucket)
       .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
       .distinct()
+
+  /** Jaccard verify: joins candidate (id1, id2) pairs twice to the
+    * per-document shingle-hash relation of `df` and keeps the pairs with
+    * exact Jaccard ≥ `threshold` over their hash sets. Each `carry`
+    * (name → per-document column of `df`) rides the same relation and
+    * comes out as `<name>1` and `<name>2`, after (id1, id2, jaccard).
+    */
+  def verifyJaccard(cands: DataFrame, df: DataFrame, idCol: String,
+      textCol: String, threshold: Double, shingleN: Int = 3,
+      carry: Seq[(String, Column)] = Nil): DataFrame = {
+    val hashed = df.select(Seq(col(idCol).as("id"),
+      shingleHashes(col(textCol), shingleN).as("hs")) ++
+      carry.map { case (n, c) => c.as(n) }: _*)
+    def side(i: Int) = hashed.select(
+      Seq("id", "hs").map(c => col(c).as(s"$c$i")) ++
+        carry.map { case (n, _) => col(n).as(s"$n$i") }: _*)
+    cands.join(side(1), Seq("id1")).join(side(2), Seq("id2"))
+      .select(Seq(col("id1"), col("id2"),
+        (size(array_intersect(col("hs1"), col("hs2"))).cast("double") /
+          size(array_union(col("hs1"), col("hs2")))).as("jaccard")) ++
+        carry.flatMap { case (n, _) => Seq(col(s"${n}1"), col(s"${n}2")) }: _*)
+      .filter(col("jaccard") >= threshold)
+  }
 
   /** Verified near-dup pairs with exact Jaccard over shingle sets. */
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
-      threshold: Double = 0.7): DataFrame = {
-    val hashed = df.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), shingleN).as("hs"))
-    val cands = candidatePairs(bucketTable(df, idCol, textCol, k, bands, shingleN))
-    cands
-      .join(hashed.select(col("id").as("id1"), col("hs").as("hs1")), Seq("id1"))
-      .join(hashed.select(col("id").as("id2"), col("hs").as("hs2")), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        (size(array_intersect(col("hs1"), col("hs2"))).cast("double") /
-          size(array_union(col("hs1"), col("hs2")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      threshold: Double = 0.7): DataFrame =
+    verifyJaccard(
+      candidatePairs(bucketTable(df, idCol, textCol, k, bands, shingleN)),
+      df, idCol, textCol, threshold, shingleN)
 
   /** SimHash with banding into `chunks` bit-slices for near-dup
     * candidates (hamming distance d < chunks ⇒ at least one identical
@@ -126,42 +154,44 @@ object Dedup {
   def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
       chunks: Int = 4, maxHamming: Int = 3,
       maxBucket: Int = 1000): DataFrame = {
-    // r17: candidate pairs from ONE groupBy over (chunk_idx, chunk_val)
-    // instead of a self-join — one corpus scan (the simhash kernel runs
-    // once, not once per join side) and one shuffle instead of two
-    // (guide §2.4). The signature rides the posting list as the
-    // sorted_pairs2 payload; an id appears at most once per chunk_idx,
-    // so the kernel's (id1 < id2, equal-id-skipped) pair set is exactly
-    // the join's, and the downstream distinct() is unchanged.
-    // r18 (advisor): the posting list collects through the size-capped
-    // collect_capped2 — same hot-bucket guard as candidatePairs /
-    // ngramJaccardPairs. Chunk values are only 16 bits and every
-    // boilerplate/exact-dup cluster shares all `chunks` of them, so an
-    // uncapped degenerate bucket would materialize n·(n-1)/2 pair
-    // structs in ONE array (Int overflow past n=65536, OOM well
-    // before). Agg state saturates at maxBucket+1 entries; an over-cap
-    // bucket drops whole (identical-text clusters are the O(n) exact
-    // path's job, like the other inverted indexes).
-    val t = simhashTable(df, idCol, textCol, chunks)
-    val b = t.select(col("id"), col("sim"),
-      posexplode(col("chunks")).as(Seq("chunk_idx", "chunk_val")))
-    b.groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(call_function("collect_capped2", col("id"), col("sim"),
-        lit(maxBucket)).as("members"))
-      .filter(col("members").isNotNull && size(col("members")) >= 2)
-      .select(explode(call_function("sorted_pairs2", col("members"))).as("p"))
+    // Candidate pairs from one posting list per (chunk_idx, chunk_val),
+    // the signature riding as payload: one corpus scan and one shuffle
+    // instead of a self-join's two. An id appears at most once per
+    // chunk_idx, so the (id1 < id2, equal-id-skipped) pair set is
+    // exactly the self-join's. Chunk values are only 16 bits and every
+    // boilerplate/exact-dup cluster shares all `chunks` of them, hence
+    // the `maxBucket` cap.
+    val b = simhashTable(df, idCol, textCol, chunks).select(col("id"),
+      col("sim"), posexplode(col("chunks")).as(Seq("chunk_idx", "chunk_val")))
+    postingPairs(b, Seq(col("chunk_idx"), col("chunk_val")),
+        Seq(col("id"), col("sim")), maxBucket)
       .select(col("p.id1").as("id1"), col("p.id2").as("id2"),
         bit_count(col("p.b1").bitwiseXOR(col("p.b2"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Exact-duplicate groups on a normalization of text. */
+  /** The exact-dup key: md5 of the lowercased, trimmed text with
+    * whitespace runs collapsed to one space.
+    */
+  def textKey(text: Column): Column =
+    md5(regexp_replace(lower(trim(text)), "\\s+", " ").cast("binary"))
+
+  /** Exact-duplicate groups on [[textKey]]. */
   def exactDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
-        .cast("binary")).as("text_hash"))
+    df.groupBy(textKey(col(textCol)).as("text_hash"))
       .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("keep_id"))
       .filter(col("n_copies") > 1)
+
+  /** One row (n_docs, n_exact_dup_pairs): the document count and the
+    * number of unordered exact-dup pairs, Σ g·(g−1)/2 over [[textKey]]
+    * groups of size g — both from one aggregate, no self-join.
+    */
+  def exactDupPairCount(df: DataFrame, textCol: String): DataFrame =
+    df.groupBy(textKey(col(textCol)).as("text_hash")).agg(count(lit(1)).as("g"))
+      .agg(coalesce(sum(col("g")), lit(0L)).as("n_docs"),
+        coalesce(sum(col("g") * (col("g") - 1) / 2), lit(0.0))
+          .cast("long").as("n_exact_dup_pairs"))
 
   /** Distinct word n-gram shingle *strings* — the exact-Jaccard
     * verification path ([[shingleHashes]] is the hashed scale path).
@@ -229,38 +259,23 @@ object Dedup {
   }
 
   /** n-gram Jaccard all-pairs via inverted index with frequent-shingle
-    * suppression (maxDocFreq caps the quadratic blowup on common n-grams).
-    *
-    * Pair generation collects each shingle's posting list in ONE groupBy
-    * and expands it with the native [[graft.functions.SortedPairs]]
-    * kernel; vs. the self-join formulation this is one shuffle instead
-    * of three and the shingle scan runs once instead of once per side.
-    *
-    * The posting-list aggregate is the size-capped
-    * [[graft.functions.CollectCapped]], whose buffer saturates at
-    * maxDocFreq+1 ids (the overflow marker) — a shingle appearing in
-    * 10⁷ docs costs maxDocFreq+1 longs of agg state and is dropped, it
-    * is never buffered in full the way `collect_list` + post-filter
-    * would (an over-cap list carries no dedup signal anyway).
+    * suppression: a shingle in more than `maxDocFreq` docs contributes
+    * no pairs ([[postingPairs]]), which caps the quadratic blowup on
+    * common n-grams. One posting list per shingle: one shuffle instead
+    * of a self-join's three, and the shingle scan runs once.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, maxDocFreq: Int = 50,
       minShared: Int = 2): DataFrame = {
-    // r17: one corpus pass. The shingle-set size rides the posting list
-    // as the collect_capped2 payload, so the per-id size needs no
-    // second corpus scan + two joins back onto the pairs (guide §2.4
-    // remove shuffles / §8 carry the lightweight proxy). sz joins the
-    // pair groupBy key — it is functionally dependent on the id, so the
-    // groups (and every emitted pair/count) are unchanged.
+    // The shingle-set size rides the posting list as payload, so it
+    // needs no second corpus scan and join back onto the pairs. sz joins
+    // the pair groupBy key; it is functionally dependent on the id, so
+    // the groups are those of (id1, id2).
     val docs = df.select(col(idCol).as("id"),
       shingleHashes(col(textCol), shingleN).as("hs"))
     val inv = docs.select(col("id"),
       size(col("hs")).cast("long").as("sz"), explode(col("hs")).as("h"))
-    inv.groupBy(col("h"))
-      .agg(call_function("collect_capped2", col("id"), col("sz"),
-        lit(maxDocFreq)).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-      .select(explode(call_function("sorted_pairs2", col("ids"))).as("p"))
+    postingPairs(inv, Seq(col("h")), Seq(col("id"), col("sz")), maxDocFreq)
       .groupBy(col("p.id1").as("id1"), col("p.b1").as("sz1"),
         col("p.id2").as("id2"), col("p.b2").as("sz2"))
       .agg(count(lit(1)).as("shared"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.GraftSession
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q.dec2
 
@@ -13,9 +12,6 @@ import Q.dec2
   * min_by/max_by (AggIf*), histogram.
   */
 object AggQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

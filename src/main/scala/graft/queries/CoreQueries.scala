@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q.{dec2, frac2}
 
@@ -16,9 +14,6 @@ import Q.{dec2, frac2}
   * (`be/src/exec/sort-node.h`, `topn-node.h:72`).
   */
 object CoreQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Q.{dec2, u2, sumUnscaledDbl}
@@ -14,9 +13,6 @@ import Q.{dec2, u2, sumUnscaledDbl}
   * mirror of the tumbling-window agg lives in the test suite.
   */
 object EventsQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

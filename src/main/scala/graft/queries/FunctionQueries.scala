@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scalar builtin surface (SURVEY.md §2.8; reference registry
@@ -15,9 +14,6 @@ import org.apache.spark.sql.functions._
   * everything else compares exactly.
   */
 object FunctionQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

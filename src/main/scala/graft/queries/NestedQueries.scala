@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Q.{dec2, u2, sumUnscaledDbl}
@@ -19,9 +17,6 @@ import Q.{dec2, u2, sumUnscaledDbl}
   * reference's nested-type scans guarantee.
   */
 object NestedQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.GraftSession
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis => TA}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline operators over the documents/embeddings
@@ -13,9 +12,6 @@ import org.apache.spark.sql.functions._
   * determinism/recall-checked in ScalaTest specs.
   */
 object PipelineQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   /** The IVF index q_sim_ivf_persisted and q_sim_ivf_probe share. */
   private def ivf16(s: SparkSession, dir: String): Similarity.PersistedIvf =
@@ -128,8 +124,7 @@ object PipelineQueries extends QueryGroup {
     // ---- exact dedup summary (hash-groupBy; dup groups + dup row count).
     Q.Def("q_dedup_exact", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val norm = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-        .cast("binary"))
+      val norm = Dedup.textKey(col("text"))
       docs.agg(
         count(lit(1)).as("n_docs"),
         countDistinct(norm).as("n_distinct"),
@@ -153,48 +148,22 @@ object PipelineQueries extends QueryGroup {
     // bench number measures the operator, not the oracle arithmetic.
     Q.Def("q_dedup_minhash", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val norm = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-        .cast("binary"))
-      val hh = docs.select(col("doc_id").as("id"), norm.as("hh"))
-      // exact-dup PAIR count without a self-join: Σ g·(g-1)/2 per group;
-      // r18: n_docs = Σ g from the SAME aggregate (count(*) is the sum
-      // of group sizes by definition) — drops the separate corpus scan
-      // the old crossJoin(docs.count) paid
-      val exactPairs = hh.groupBy(col("hh")).agg(count(lit(1)).as("g"))
-        .agg(coalesce(sum(col("g")), lit(0L)).as("n_docs"),
-          coalesce(sum(col("g") * (col("g") - 1) / 2), lit(0.0))
-            .cast("long").as("n_exact_dup_pairs"))
-      // containment: annotate every pipeline pair (a tiny, broadcastable
-      // relation) with both text hashes; the count of jaccard-1.0 pairs
-      // with hh1 = hh2 must equal the combinatorial exact-pair count.
-      // r17: __f and the total pair count come from ONE aggregate over
-      // ONE evaluation of the LSH pipeline. r18 (guide §2.4): the hh
-      // annotation rides the SAME per-id relation the Jaccard verify
-      // already joins — (id, hs, hh) computed in one corpus pass — so
-      // the pipeline inlines Dedup.minhashDupPairs' verify step with hh
-      // as an extra payload: 2 joins and 2 corpus scans instead of 4.
-      // The threshold filter commutes with the row-preserving
-      // annotation, so the pair set (and __n/__f) is unchanged.
-      val hashedHH = docs.select(col("doc_id").as("id"),
-        Dedup.shingleHashes(col("text")).as("hs"), norm.as("hh"))
-      val cands = Dedup.candidatePairs(
-        Dedup.bucketTable(docs, "doc_id", "text"))
-      val pairs = cands
-        .join(hashedHH.select(col("id").as("id1"), col("hs").as("hs1"),
-          col("hh").as("hh1")), Seq("id1"))
-        .join(hashedHH.select(col("id").as("id2"), col("hs").as("hs2"),
-          col("hh").as("hh2")), Seq("id2"))
-        .select(col("id1"), col("id2"),
-          (size(array_intersect(col("hs1"), col("hs2"))).cast("double") /
-            size(array_union(col("hs1"), col("hs2")))).as("jaccard"),
-          col("hh1"), col("hh2"))
-        .filter(col("jaccard") >= 0.7)
+      // containment: annotate every pipeline pair (a tiny relation) with
+      // both text keys; the count of jaccard-1.0 pairs with hh1 = hh2
+      // must equal the combinatorial exact-pair count. hh rides the
+      // verify step's per-doc relation, so (id, hs, hh) come from one
+      // corpus pass, and __f and __n from one aggregate over one
+      // evaluation of the LSH pipeline.
+      val pairs = Dedup.verifyJaccard(
+        Dedup.candidatePairs(Dedup.bucketTable(docs, "doc_id", "text")),
+        docs, "doc_id", "text", threshold = 0.7,
+        carry = Seq("hh" -> Dedup.textKey(col("text"))))
       val pairStats = pairs
         .agg(
           coalesce(sum(when(col("jaccard") === 1.0 &&
             col("hh1") === col("hh2"), 1L).otherwise(0L)), lit(0L)).as("__f"),
           count(lit(1)).as("__n"))
-      exactPairs
+      Dedup.exactDupPairCount(docs, "text")
         .crossJoin(pairStats)
         .select(col("n_docs"), col("n_exact_dup_pairs"),
           (col("__f") === col("n_exact_dup_pairs")).as("exact_dups_at_j100"),
@@ -215,31 +184,17 @@ object PipelineQueries extends QueryGroup {
     // seeded kernel, measured containment holds at sf0.01 and sf0.1.
     Q.Def("q_dedup_minhash_gate", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val norm = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-        .cast("binary"))
-      val exactPairs = docs.select(norm.as("hh"))
-        .groupBy(col("hh")).agg(count(lit(1)).as("g"))
-        .agg(coalesce(sum(col("g") * (col("g") - 1) / 2), lit(0.0))
-          .cast("long").as("n_exact_dup_pairs"))
-      val hashed = docs.select(col("doc_id").as("id"),
-        Dedup.shingleHashes(col("text")).as("hs"))
+      // one candidate set for both the truth semi-join and the verify
       val cands = Dedup.candidatePairs(Dedup.bucketTable(docs, "doc_id", "text"))
-      val verified = cands
-        .join(hashed.select(col("id").as("id1"), col("hs").as("hs1")), Seq("id1"))
-        .join(hashed.select(col("id").as("id2"), col("hs").as("hs2")), Seq("id2"))
-        .select((size(array_intersect(col("hs1"), col("hs2"))).cast("double") /
-          size(array_union(col("hs1"), col("hs2")))).as("jaccard"))
       val truth = Dedup.jaccardPairsExact(
           docs.filter(col("doc_id") <= 200), "doc_id", "text", 3, 0.5)
         .select(col("id1"), col("id2"))
-      docs.select(count(lit(1)).as("n_docs"))
-        .crossJoin(exactPairs)
+      Dedup.exactDupPairCount(docs, "text")
         .crossJoin(truth.agg(count(lit(1)).as("n_slice_pairs_j50")))
         .crossJoin(truth.join(cands, Seq("id1", "id2"), "left_semi")
           .agg(count(lit(1)).as("__f")))
-        .crossJoin(verified.agg(
-          coalesce(sum(when(col("jaccard") >= 0.5, 1L).otherwise(0L)), lit(0L))
-            .as("__j50")))
+        .crossJoin(Dedup.verifyJaccard(cands, docs, "doc_id", "text", 0.5)
+          .agg(count(lit(1)).as("__j50")))
         .select(col("n_docs"), col("n_exact_dup_pairs"),
           col("n_slice_pairs_j50"),
           (col("__f") === col("n_slice_pairs_j50")).as("lsh_found_all_slice"),
@@ -278,27 +233,15 @@ object PipelineQueries extends QueryGroup {
     // invariant, not probabilistic), and near-pair count ≥ exact count.
     Q.Def("q_dedup_simhash", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val norm = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-        .cast("binary"))
-      val hh = docs.select(col("doc_id").as("id"), norm.as("hh"))
-      // r18 (guide §2.4): no materialized epairs relation at all — the
-      // exact-dup pair count is Σ g·(g-1)/2 over hh groups (and n_docs
-      // is Σ g from the same aggregate), and a candidate pair is an
-      // exact-dup pair iff hh1 = hh2, so the containment count __f
-      // annotates the (tiny) pairs relation with both text hashes
-      // instead of left-joining an O(pairs) self-join product. This is
-      // exactly q_dedup_minhash's shape; the r17 epairs formulation
-      // evaluated the hh self-join twice (once per crossJoined
-      // aggregate) — 2 corpus scans and a shuffle, gone.
-      val exactPairs = hh.groupBy(col("hh")).agg(count(lit(1)).as("g"))
-        .agg(coalesce(sum(col("g")), lit(0L)).as("n_docs"),
-          coalesce(sum(col("g") * (col("g") - 1) / 2), lit(0.0))
-            .cast("long").as("n_exact_dup_pairs"))
+      val hh = docs.select(col("doc_id").as("id"),
+        Dedup.textKey(col("text")).as("hh"))
       val pairs = Dedup.simhashDupPairs(docs, "doc_id", "text",
         chunks = 4, maxHamming = 10)
-      // r17: containment + total from ONE aggregate over ONE evaluation
-      // of the simhash pipeline. Both pair sets are distinct, so
-      // |epairs ⋉ pairs₀| == Σ over pairs of (hamming=0 ∧ hh1=hh2).
+      // a candidate pair is an exact-dup pair iff hh1 = hh2, so the
+      // containment count __f annotates the (tiny) pairs relation with
+      // both text keys; __f and __n10 come from one aggregate over one
+      // evaluation of the simhash pipeline. Both pair sets are distinct,
+      // so |exact pairs ⋉ pairs₀| == Σ over pairs of (hamming=0 ∧ hh1=hh2).
       val pairStats = pairs
         .join(hh.select(col("id").as("id1"), col("hh").as("hh1")), Seq("id1"))
         .join(hh.select(col("id").as("id2"), col("hh").as("hh2")), Seq("id2"))
@@ -306,7 +249,7 @@ object PipelineQueries extends QueryGroup {
           coalesce(sum(when(col("hamming") === 0 && col("hh1") === col("hh2"),
             1L).otherwise(0L)), lit(0L)).as("__f"),
           count(lit(1)).as("__n10"))
-      exactPairs
+      Dedup.exactDupPairCount(docs, "text")
         .crossJoin(pairStats)
         .select(col("n_docs"), col("n_exact_dup_pairs"),
           (col("__f") === col("n_exact_dup_pairs")).as("exact_dups_at_h0"),

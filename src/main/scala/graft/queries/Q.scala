@@ -93,4 +93,8 @@ object Q {
 
 trait QueryGroup {
   def defs: Seq[Q.Def]
+
+  /** Fixture table `n` of the data dir (memoised by [[graft.GraftSession.table]]). */
+  protected def t(s: SparkSession, dir: String, n: String): DataFrame =
+    graft.GraftSession.table(s, dir, n)
 }

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object SetOpQueries extends QueryGroup {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
-
   private def highValue(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders").filter(col("o_totalprice") > 450000.0)
       .select(col("o_orderkey"))

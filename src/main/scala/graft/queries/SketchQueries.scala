@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Queries exercising the custom Catalyst function layer
@@ -15,9 +13,6 @@ import org.apache.spark.sql.functions._
   * src/test/scala/graft/FunctionsSpec.scala.
   */
 object SketchQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Q.{dec2, frac2}
@@ -13,9 +12,6 @@ import Q.{dec2, frac2}
   * correlated above-average filters, and top-n-per-group.
   */
 object TpcdsQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   private def rev = dec2(col("l_extendedprice")) * (lit(1) - frac2(col("l_discount")))
 

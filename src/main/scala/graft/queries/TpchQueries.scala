@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q.{dec2, frac2, u2, uf2, sumUnscaledDbl}
 
@@ -25,9 +23,6 @@ import Q.{dec2, frac2, u2, uf2, sumUnscaledDbl}
   * double division at the end, formatted dates, total ORDER BY).
   */
 object TpchQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   /** Unscaled (scale-4) revenue term used by Q3/Q5/Q7/Q8/Q10/…: the
     * exact `dec2(price) * (1 - frac2(discount))` computed on unscaled

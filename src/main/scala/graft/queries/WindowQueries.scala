@@ -1,7 +1,5 @@
 package graft.queries
 
-import graft.GraftSession
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Q.dec2
@@ -19,9 +17,6 @@ import Q.dec2
   * ORDER BY.
   */
 object WindowQueries extends QueryGroup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    GraftSession.table(s, dir, n)
 
   def defs: Seq[Q.Def] = Seq(
 

@@ -104,9 +104,9 @@ class OperatorsSpec extends SparkSpecBase {
     assert(pairs.contains((1L, 2L))) // shared distinctive tail
     assert(pairs.size == 1, pairs)  // hot shingle produced no pair floods
     // unit: the agg buffer saturates at cap+1 under update AND merge
-    val agg = graft.functions.CollectCapped(
+    val agg = graft.functions.CollectCapped(Seq(
       org.apache.spark.sql.catalyst.expressions.BoundReference(
-        0, org.apache.spark.sql.types.LongType, nullable = false), 5)
+        0, org.apache.spark.sql.types.LongType, nullable = false)), 5)
     var buf = agg.createAggregationBuffer()
     (1L to 100L).foreach { v =>
       buf = agg.update(buf,
@@ -128,7 +128,7 @@ class OperatorsSpec extends SparkSpecBase {
     // come out (lo id, its payload, hi id, its payload), no self-pair
     val out = Seq(Tuple1(Seq((9L, 90L), (3L, 30L), (9L, 91L), (1L, 10L))))
       .toDF("arr")
-      .select(explode(call_function("sorted_pairs2",
+      .select(explode(call_function("sorted_pairs",
         col("arr").cast("array<struct<a:bigint,b:bigint>>"))).as("p"))
       .select("p.id1", "p.b1", "p.id2", "p.b2")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -144,9 +144,9 @@ class OperatorsSpec extends SparkSpecBase {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types.LongType
-    val agg = graft.functions.CollectCapped2(
+    val agg = graft.functions.CollectCapped(Seq(
       BoundReference(0, LongType, nullable = false),
-      BoundReference(1, LongType, nullable = false), 5)
+      BoundReference(1, LongType, nullable = false)), 5)
     var buf = agg.createAggregationBuffer()
     (1L to 100L).foreach { v =>
       buf = agg.update(buf, InternalRow(v, v * 10))
@@ -221,7 +221,7 @@ class OperatorsSpec extends SparkSpecBase {
   test("sorted_pairs kernels: pair-count sizing is Long-safe past 65536 ids") {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types.LongType
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
     // n=65537 → n*(n-1)/2 overflows Int to a negative number; the kernel
     // must fail loudly (posting lists are collect_capped in the shipped
     // pipelines, so this is the uncapped-caller guard), never allocate a
@@ -234,7 +234,8 @@ class OperatorsSpec extends SparkSpecBase {
     val bigStructs = new GenericArrayData(Array.tabulate(70000)(i =>
       org.apache.spark.sql.catalyst.InternalRow(i.toLong, 0L): Any))
     val e2 = intercept[IllegalArgumentException] {
-      graft.functions.SortedPairs2(Literal(null, LongType)).pairsFor(bigStructs)
+      graft.functions.SortedPairs(Literal(null, ArrayType(
+        new StructType().add("id", LongType).add("b", LongType)))).pairsFor(bigStructs)
     }
     assert(e2.getMessage.contains("cap the posting list"), e2.getMessage)
   }
@@ -333,6 +334,39 @@ class OperatorsSpec extends SparkSpecBase {
     assert(hs.toLongArray().sameElements(hs2.toLongArray()))
     assert(ShingleHashes.compute("a b", 3).numElements() == 1) // whole text
     assert(hs.toLongArray().forall(h => h >= 0 && h < MinHashImpl.P))
+  }
+
+  test("native tokeniser trims like SQL: leading tab, trailing newline") {
+    val spark2 = spark
+    import spark2.implicits._
+    // SQL TRIM strips spaces only, so a leading tab or a trailing newline
+    // survives it and splits into an empty first or last token; the
+    // native kernels must see the same words as the SQL shingle path
+    val edge = Seq(
+      (1L, "\tthe quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog\n"),
+      (3L, " \tthe quick brown fox jumps over the lazy cat \n "),
+      (4L, "\t a b"),
+      (5L, "completely different words about something else entirely"),
+    ).toDF("doc_id", "text")
+    val sizes = edge.select(col("doc_id"),
+        size(Dedup.shingleHashes(col("text"))).as("native"),
+        size(Dedup.shingleSet(col("text"))).as("sql"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+    sizes.foreach { case (id, native, sql) =>
+      assert(native == sql, s"doc $id: shingle_hashes $native, shingleSet $sql")
+    }
+    def pairs(df: DataFrame) =
+      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val exact = pairs(Dedup.jaccardPairsExact(edge, "doc_id", "text",
+      threshold = 0.0))
+    val inverted = pairs(Dedup.ngramJaccardPairs(edge, "doc_id", "text",
+      maxDocFreq = 10, minShared = 2))
+    // the planted pair: same 9 words, tab-led vs newline-ended
+    assert(inverted.contains((1L, 2L)), inverted)
+    assert(inverted((1L, 2L)) == exact((1L, 2L)),
+      s"inverted ${inverted((1L, 2L))} exact ${exact((1L, 2L))}")
+    assert(exact((1L, 2L)) < 1.0) // the edge tokens are real shingles
   }
 
   // --- similarity ------------------------------------------------------

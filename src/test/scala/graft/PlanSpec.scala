@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
 
+import graft.functions.CollectCapped
 import graft.operators.Similarity
 
 /** Plan-shape assertions for the 100 TB design goals: filters and
@@ -17,6 +21,15 @@ class PlanSpec extends SparkSpecBase {
     val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
+
+  /** Exchanges of a query's physical plan as planned, before adaptive
+    * execution re-plans any stage.
+    */
+  private def exchanges(name: String): Seq[Exchange] =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.collect { case e: Exchange => e }
+      case p => p.collect { case e: Exchange => e }
+    }
 
   test("scan-projection query pushes filter and prunes columns") {
     val p = plan("q_scan_project")
@@ -167,6 +180,24 @@ class PlanSpec extends SparkSpecBase {
     val p = plan("q_dedup_minhash")
     // signature kernels evaluate inside project/codegen, not UDF nodes
     assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"), p)
+    // exchange counts as planned before the posting-list kernels merged;
+    // a posting list shuffles (key, id[, payload]) entries, never text
+    Seq("q_dedup_minhash" -> (5, 3), "q_dedup_simhash" -> (5, 3),
+        "q_dedup_ngram" -> (3, 0)).foreach { case (q, (shuffles, broadcasts)) =>
+      val ex = exchanges(q)
+      val got = (ex.count(_.isInstanceOf[ShuffleExchangeLike]),
+        ex.count(_.isInstanceOf[BroadcastExchangeLike]))
+      assert(got == (shuffles, broadcasts) && ex.length == shuffles + broadcasts,
+        s"$q: (shuffle, broadcast) exchanges $got, want ${(shuffles, broadcasts)}")
+      val postings = ex.filter(_.child match {
+        case a: BaseAggregateExec => a.aggregateExpressions
+          .exists(_.aggregateFunction.isInstanceOf[CollectCapped])
+        case _ => false
+      })
+      assert(postings.nonEmpty, s"$q: no posting-list exchange")
+      postings.foreach(e => assert(!e.output.exists(_.name == "text"),
+        s"$q: posting-list exchange outputs ${e.output.mkString(", ")}"))
+    }
   }
 
   test("OPTIMIZE_PARTITION_KEY_SCANS executes metadata-only: zero file-scan tasks") {

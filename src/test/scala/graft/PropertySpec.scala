@@ -101,4 +101,81 @@ class PropertySpec extends SparkSpecBase {
       assert(math.abs(est - n).toDouble / n < 0.17, s"n=$n est=$est")
     }
   }
+
+  test("collect_capped + sorted_pairs match a brute-force reference (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    import org.scalacheck.util.Pretty
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.LongType
+    import graft.functions.{CollectCapped, SortedPairs}
+
+    // a posting list of (id, payload) entries with repeated ids (ids
+    // drawn from 0..9), a cap below, at or above its length, and cut
+    // points splitting it into partial buffers
+    case class Case(width: Int, entries: Seq[(Long, Long)], cap: Int, cuts: Seq[Int])
+    val cases = for {
+      width <- Gen.oneOf(1, 2)
+      n <- Gen.choose(0, 20)
+      entries <- Gen.listOfN(n, Gen.zip(Gen.choose(0L, 9L), Gen.choose(-99L, 99L)))
+      cap <- Gen.oneOf(Gen.choose(0, n), Gen.const(n), Gen.choose(n, n + 4))
+      cuts <- Gen.listOf(Gen.choose(0, n))
+    } yield Case(width, entries, cap, cuts.sorted)
+
+    // update each slice into its own buffer, ship it through the shuffle
+    // serializer, merge the buffers in order; the buffer never holds
+    // more than cap+1 entries
+    def kernels(c: Case): (Option[Seq[Seq[Long]]], Option[Seq[Seq[Long]]], Boolean) = {
+      val agg = CollectCapped(
+        (0 until c.width).map(i => BoundReference(i, LongType, nullable = false)), c.cap)
+      val bound = c.width * (c.cap + 1)
+      var bounded = true
+      val bufs = (0 +: c.cuts :+ c.entries.length).sliding(2).map { case Seq(a, b) =>
+        var buf = agg.createAggregationBuffer()
+        c.entries.slice(a, b).foreach { case (id, p) =>
+          buf = agg.update(buf, if (c.width == 1) InternalRow(id) else InternalRow(id, p))
+          bounded &&= buf.length <= bound
+        }
+        agg.deserialize(agg.serialize(buf))
+      }.toList
+      val merged = bufs.reduce { (a, b) =>
+        val m = agg.merge(a, b); bounded &&= m.length <= bound; m
+      }
+      def rows(a: ArrayData, w: Int): Seq[Seq[Long]] =
+        (0 until a.numElements()).map(i =>
+          if (w == 1) Seq(a.getLong(i)) else { val r = a.getStruct(i, w); (0 until w).map(r.getLong) })
+      Option(agg.eval(merged)).map(_.asInstanceOf[ArrayData]) match {
+        case None => (None, None, bounded)
+        case Some(list) =>
+          val pairs = SortedPairs(Literal(null, agg.dataType)).pairsFor(list)
+          (Some(rows(list, c.width)), Some(rows(pairs, 2 * c.width)), bounded)
+      }
+    }
+
+    def reference(c: Case): (Option[Seq[Seq[Long]]], Option[Seq[Seq[Long]]]) =
+      if (c.entries.length > c.cap) (None, None)
+      else {
+        def entry(e: (Long, Long)) = if (c.width == 1) Seq(e._1) else Seq(e._1, e._2)
+        val pairs = for {
+          i <- c.entries.indices
+          j <- i + 1 until c.entries.length
+          (x, y) = (c.entries(i), c.entries(j))
+          if x._1 != y._1
+        } yield if (x._1 < y._1) entry(x) ++ entry(y) else entry(y) ++ entry(x)
+        (Some(c.entries.map(entry)), Some(pairs))
+      }
+
+    val prop = Prop.forAllNoShrink(cases) { c =>
+      val (list, pairs, bounded) = kernels(c)
+      val (wantList, wantPairs) = reference(c)
+      (bounded :| "buffer past cap+1 entries") &&
+        ((list == wantList) :| s"collect_capped $list, want $wantList") &&
+        ((pairs == wantPairs) :| s"sorted_pairs $pairs, want $wantPairs")
+    }
+    val res = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(500).withInitialSeed(42L), prop)
+    assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+  }
 }
