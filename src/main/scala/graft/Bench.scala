@@ -1,5 +1,9 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR, one JSON
   * line on stdout (BASELINE.md "bench protocol": ≤2× recorded baseline at
   * the same scale factor).
@@ -37,13 +41,23 @@ object Bench {
       */
     def total: Double = if (failed.nonEmpty) -1.0 else times.map(_._2).sum
 
-    /** One counts line on stderr, then one line per failed or skipped name. */
+    /** One counts line on stderr, then one line per failed or skipped name
+      * and per query group that registered no queries. `compiled` counts
+      * the generated classes the JVM compiled (one run per JVM): a codegen
+      * cache too small for the run's working set shows as a jump here.
+      */
     def report(tag: String): Unit = {
-      System.err.println(
-        s"[$tag] attempted=${times.size} failed=${failed.size} skipped=${skipped.size}")
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      System.err.println(s"[$tag] attempted=${times.size} failed=${failed.size} " +
+        s"skipped=${skipped.size} compiled=$compiled")
       failed.foreach(n => System.err.println(s"[$tag] failed: $n"))
       skipped.foreach { case (n, why) =>
         System.err.println(s"[$tag] skipped: $n ($why)")
+      }
+      SparkEntry.emptyGroups.foreach { case (g, missing) =>
+        val why =
+          if (missing.isEmpty) "no input missing" else missing.mkString("missing ", ", ", "")
+        System.err.println(s"[$tag] empty group: $g ($why)")
       }
     }
   }
@@ -53,49 +67,47 @@ object Bench {
     val spark = GraftSession.local()
     val entry = SparkEntry.queries
 
-    // JVM/codegen/catalog warmup outside the timed region (lineitem for
-    // the TPC-H set, documents for the pipeline set — warms IO cache and
-    // the Generate/explode codegen paths).
-    GraftSession.table(spark, sfDir, "lineitem").count()
-    GraftSession.table(spark, sfDir, "documents").count()
-    entry("q1_agg")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
     // min over N runs: planning/JIT noise dominates at this scale, the
     // min is the stable per-query cost (single-run wall time is ±3×).
-    // GC before each query so one query's allocation debt (broadcast
-    // blowups, shuffle buffers) isn't billed to the next one's timings.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     // optional arg: comma-separated name filter (dev iteration; the
     // driver invokes with no args → full headline set)
     val keep: String => Boolean =
       if (args.nonEmpty) args(0).split(",").toSet else (_ => true)
     val (present, missing) = headline.filter(keep).partition(entry.contains)
-    val results = present.map { name =>
-      val fn = entry(name)
-      // one untimed pass per query: its codegen compilation, any
-      // first-touch IO and the build of its persisted index (once per
-      // JVM, which leaves the index files in page cache) land here, not
-      // in the first timed iteration (tpch_q1 was absorbing the whole
-      // suite's JIT warm-up)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(_) => }
+    def run(name: String): Unit =
+      entry(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // one untimed pass over the set: JVM warm-up, codegen compilation,
+    // catalog reads, first-touch IO and the build of each persisted index
+    // (once per JVM, which leaves the index files in page cache) land
+    // here, not in the first timed iteration
+    present.foreach(n => try run(n) catch { case NonFatal(_) => })
+    // sub-2s probe queries sit near the IO-noise floor: triple the sample
+    // count so min-of-N separates drift from noise
+    def samples(name: String): Int =
+      if (name.contains("_probe") || name == "q_sim_ivfpq") iters * 3 else iters
+    // Timed iterations run round-robin: iteration i runs every query once,
+    // so each timing sees the codegen, JIT and page caches as the rest of
+    // the set left them, not as the same query left them a moment ago.
+    // GC before each iteration so one iteration's allocation debt
+    // (broadcast blowups, shuffle buffers) isn't billed to the next.
+    val rounds = (0 until present.map(samples).maxOption.getOrElse(0)).map { i =>
       System.gc()
-      // sub-2s probe queries sit near the IO-noise floor: triple the
-      // sample count so min-of-N separates drift from noise
-      val qIters =
-        if (name.contains("_probe") || name == "q_sim_ivfpq") iters * 3
-        else iters
-      val times = (0 until qIters).map { _ =>
+      present.filter(i < samples(_)).map { name =>
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          run(name)
+          name -> (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            -1.0
+            name -> -1.0
         }
       }
+    }
+    val sampled = rounds.flatten.groupMap(_._1)(_._2)
+    val results = present.map { name =>
+      val times = sampled(name)
       name -> (if (times.contains(-1.0)) -1.0 else times.min)
     }
     val tally = Tally(results, missing.map(_ -> "not in SparkEntry.queries"))

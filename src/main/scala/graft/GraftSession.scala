@@ -46,12 +46,22 @@ object GraftSession {
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
   /** Idempotently apply parity + scale settings to an existing session.
-    * Runtime-settable confs only, so it works on a session we didn't build.
+    * Runtime-settable confs, plus the codegen cache size on the session's
+    * SQLConf, so it works on a session we didn't build.
     */
   def tune(spark: SparkSession): SparkSession = {
     if (tuned.add(spark)) {
+      sizeCodegenCache(spark)
       val c = spark.conf
       c.set("spark.sql.session.timeZone", "UTC")
+      // Name each whole-stage class `GeneratedIterator`, not after its
+      // codegen stage id. AQE numbers stages in the order it creates
+      // them, which varies between runs of one query (tpch_q21 swaps
+      // ids 4 and 5), and an id in the name makes the same pipeline a
+      // new source: a codegen cache miss. The id stays in a comment of
+      // the generated code. TPC-H 1-22 at sf0.001: 318 → 282 classes
+      // in a cold pass, and no recompiles in later passes (4 before).
+      c.set("spark.sql.codegen.useIdInClassName", "false")
       // AQE: runtime shuffle-partition coalescing, skew-join splitting,
       // dynamic broadcast conversion — the Spark analog of Impala's
       // cost-model distribution decisions (DistributedPlanner.java:479-575).
@@ -121,6 +131,44 @@ object GraftSession {
       functions.GraftFunctions.registerAll(spark)
     }
     spark
+  }
+
+  /** Capacity of Spark's JVM-wide LRU cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    * keyed by source and class loader, so a driver-side and a task-side
+    * compile of the same code are two entries. Distinct classes one cold
+    * pass compiles, with the rest of [[tune]] applied (4 cores): Verify's
+    * 140 queries at sf0.01, 1104; the 38 headline queries at sf0.01,
+    * 480; TPC-H 1-22 at sf0.001, 282. At 100 entries every later pass
+    * missed and recompiled its classes: 30% of the TPC-H latency
+    * geomean on a 10x replica. 2000 covers the Verify set with 80%
+    * headroom; the LRU is split into 4 segments that each evict at a
+    * quarter of the capacity. Each cached class retains about 21-23 KB
+    * of heap (perfbench retained heap: +11.2 MB for the 480 headline
+    * classes, +5.9 MB on TPC-H at 10x), so a full cache holds about
+    * 45 MB.
+    */
+  private val CodegenCacheEntries = 2000
+
+  private val codegenCacheChecked = new java.util.concurrent.atomic.AtomicBoolean()
+
+  /** The conf is static, so `spark.conf.set` rejects it; the session's
+    * SQLConf takes it, and `CodeGenerator` reads it once, when it first
+    * compiles in the JVM. Generated code compiled before the first
+    * [[tune]] has fixed the size already: say so rather than lose the
+    * cache quietly.
+    */
+  private def sizeCodegenCache(spark: SparkSession): Unit = {
+    spark.sessionState.conf.setConfString(
+      org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      CodegenCacheEntries.toString)
+    val compiled =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    if (codegenCacheChecked.compareAndSet(false, true) && compiled > 0)
+      System.err.println(s"[graft] $compiled generated classes were compiled " +
+        "before the first GraftSession.tune: Spark's codegen cache kept the " +
+        s"size it had then, not $CodegenCacheEntries entries, so queries may " +
+        "recompile their generated code")
   }
 
   /** Load one fixture table from an sf directory.

@@ -34,12 +34,23 @@ object SparkEntry {
     SketchQueries,
   )
 
+  private lazy val byGroup: Seq[(QueryGroup, Seq[Q.Def])] =
+    groups.map(g => g -> g.defs)
+
   lazy val all: Seq[Q.Def] = {
-    val ds = groups.flatMap(_.defs)
+    val ds = byGroup.flatMap(_._2)
     val dup = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dup.isEmpty, s"duplicate query names: ${dup.mkString(",")}")
     ds
   }
+
+  /** Each group that registered no queries, by name, with the inputs it
+    * found missing (none listed: the group is empty for another reason).
+    */
+  lazy val emptyGroups: Seq[(String, Seq[java.nio.file.Path])] =
+    byGroup.collect { case (g, Seq()) =>
+      g.getClass.getSimpleName.stripSuffix("$") -> g.missingInputs
+    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -129,8 +129,11 @@ object GoldenNestedMaskedQueries extends QueryGroup {
               WHERE p_name LIKE '%green%') AS n_green_masked
       FROM part WHERE p_partkey <= 20 ORDER BY p_partkey""")))
 
+  override def inputs: Seq[java.nio.file.Path] =
+    Seq(GoldenTest.tpchQueryDir, GoldenTest.tpchNestedQueryDir)
+
   def defs: Seq[Q.Def] =
-    if (!GoldenTest.available || !GoldenTest.nestedAvailable) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else controlDef +: maskedNums.map { n =>
       val flat = GoldenTest.tpchCase(n)
       val masked = GoldenTest.load(GoldenTest.tpchNestedQueryDir

@@ -34,8 +34,11 @@ object GoldenNestedQueries extends QueryGroup {
     3 -> Set(2),
     18 -> Set(3))
 
+  override def inputs: Seq[java.nio.file.Path] =
+    Seq(GoldenTest.tpchQueryDir, GoldenTest.tpchNestedQueryDir)
+
   def defs: Seq[Q.Def] =
-    if (!GoldenTest.available || !GoldenTest.nestedAvailable) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else (1 to 22).map { n =>
       val flat = GoldenTest.tpchCase(n)
       val nested = GoldenTest.tpchNestedCase(n)

@@ -173,8 +173,10 @@ object GoldenQueries extends QueryGroup {
     */
   val oracleGated: Seq[Int] = (1 to 22)
 
+  override def inputs: Seq[java.nio.file.Path] = Seq(GoldenTest.tpchQueryDir)
+
   def defs: Seq[Q.Def] =
-    if (!GoldenTest.available) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else oracleGated.map { n =>
       catalog.goldenDef(s"golden_q$n", GoldenTest.tpchCase(n),
         GoldenNestedQueries.decimalOverrides.getOrElse(n, Map.empty))

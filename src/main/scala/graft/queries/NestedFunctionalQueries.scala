@@ -104,9 +104,11 @@ object NestedFunctionalQueries extends QueryGroup {
             |  'IRAN', 'EGYPT')
             |GROUP BY pos""".stripMargin)
 
+  override def inputs: Seq[java.nio.file.Path] =
+    Seq(GoldenTest.tpchQueryDir, GoldenTest.tpchNestedQueryDir, file)
+
   def defs: Seq[Q.Def] =
-    if (!GoldenTest.available || !GoldenTest.nestedAvailable ||
-        !java.nio.file.Files.isRegularFile(file)) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else {
       val cases = GoldenTest.load(file)
       flatOracles.toSeq.sortBy(_._1).flatMap { case (i, flat) =>

@@ -203,8 +203,11 @@ object NestedSubplanQueries extends QueryGroup {
       |ORDER BY c_custkey, o_orderkey""".stripMargin,
     Seq("bigint", "bigint"))
 
+  override def inputs: Seq[java.nio.file.Path] =
+    Seq(GoldenTest.tpchQueryDir, GoldenTest.tpchNestedQueryDir)
+
   def defs: Seq[Q.Def] =
-    if (!GoldenTest.available || !GoldenTest.nestedAvailable) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else (qs ++ extraQs).map { sq =>
       val fake = GoldenTest.Case("", sq.flat, sq.types, 0)
       GoldenQueries.catalog.goldenDefVia(sq.name, fake, sq.types,

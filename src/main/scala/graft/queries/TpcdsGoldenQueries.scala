@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.GoldenTest
 
@@ -640,8 +640,10 @@ object TpcdsGoldenQueries extends QueryGroup {
     castDecRe.replaceAllIn(sql, m =>
       s"cast(round(${m.group(1)}, ${m.group(3)}) as decimal(${m.group(2)},${m.group(3)}))")
 
+  override def inputs: Seq[Path] = Seq(queryDir)
+
   def defs: Seq[Q.Def] =
-    if (!available) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else (nums ++ candidateNums ++ round7Nums ++ round8Nums)
       .filterNot(excludedNums)
       .map { n =>
@@ -685,8 +687,10 @@ object TpcdsAnalyticQueries extends QueryGroup {
       "/root/reference/testdata/workloads/functional-query/queries/QueryTest")
     ).resolve("analytic-fns-tpcds.test")
 
+  override def inputs: Seq[Path] = Seq(file)
+
   def defs: Seq[Q.Def] =
-    if (!Files.exists(file)) Seq.empty
+    if (missingInputs.nonEmpty) Seq.empty
     else GoldenTest.load(file).zipWithIndex.map { case (c, i) =>
       val decCols = c.types.zipWithIndex.collect {
         case (t, j) if t == "decimal" => j -> 6

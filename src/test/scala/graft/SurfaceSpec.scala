@@ -1,15 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 import scala.jdk.CollectionConverters._
 
 /** Surface-completeness check: every function name claimed in SURVEY §2.8
   * / §2.4 (the reference registry's user-facing names, minus the
   * intentionally-out-of-scope ones) must resolve in a tuned session —
   * as a Spark builtin, an alias, or a native expression. Also pins the
-  * entry-point surface: one session setup for every main and spec, and
-  * the run accounting the Bench and Verify mains report.
+  * entry-point surface: one session setup for every main and spec, a
+  * codegen cache that holds the TPC-H working set, and the run accounting
+  * the Bench and Verify mains report.
   */
 class SurfaceSpec extends SparkSpecBase {
 
@@ -122,6 +125,32 @@ class SurfaceSpec extends SparkSpecBase {
     assert(t.total == -1.0)
     assert(t.failed == Seq("b"))
     assert(Bench.Tally(Seq("a" -> 1.5, "c" -> 0.5), Nil).total == 2.0)
+  }
+
+  test("every query group that registers no queries names a missing input") {
+    val unexplained = SparkEntry.emptyGroups.collect { case (g, Seq()) => g }
+    assert(unexplained.isEmpty, unexplained.mkString(", "))
+  }
+
+  test("TPC-H 1-22 reuses its generated classes in a second pass") {
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Long = {
+      val c0 = compiled
+      (1 to 22).foreach(i => SparkEntry.queries(s"tpch_q$i")(spark, sfDir).collect())
+      compiled - c0
+    }
+    val first = pass()
+    val sparkDefault = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.defaultValue.get
+    assert(first > sparkDefault,
+      s"first pass compiled $first classes, no more than Spark's default cache holds")
+    // A cache of Spark's default size reuses at most that many classes.
+    // In a JVM of its own the second pass compiles nothing; in the shared
+    // test JVM it compiles a few classes again, because Spark keys the
+    // cache by the compiling thread's context class loader and the
+    // driver's exchange thread pools carry several.
+    val second = pass()
+    assert(first - second > sparkDefault,
+      s"second pass recompiled $second of $first classes")
   }
 
   test("only GraftSession.scala builds a Spark session") {
