@@ -51,6 +51,12 @@ object FunctionalTables {
   val abortOnErrorTables =
     scala.collection.mutable.HashMap.empty[String, String]
 
+  /** The reference checkout's `testdata/` dir (`GRAFT_REF_TESTDATA`
+    * overrides); the tables read from it register only where it exists.
+    */
+  val refRoot: java.nio.file.Path = java.nio.file.Paths.get(
+    sys.env.getOrElse("GRAFT_REF_TESTDATA", "/root/reference/testdata"))
+
   private val schema = StructType(Seq(
     StructField("id", IntegerType, nullable = false),
     StructField("bool_col", BooleanType, nullable = false),
@@ -441,8 +447,6 @@ object FunctionalTables {
     mk(allTypesAgg(writeNulls = false, nullDayCopy = false), aggSchema,
       "alltypesaggnonulls")
 
-    val refRoot = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_REF_TESTDATA", "/root/reference/testdata"))
     if (java.nio.file.Files.isDirectory(refRoot)) {
       csvTables.foreach { case (name, rel, ddl) =>
         val p = refRoot.resolve(rel)
@@ -620,8 +624,6 @@ object FunctionalTables {
       Row(2, 10, null), Row(3, null, null), Row(3, null, 50)),
       semiSchema, "semijointblb")
 
-    val refRoot = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_REF_TESTDATA", "/root/reference/testdata"))
     if (!java.nio.file.Files.isDirectory(refRoot)) return
 
     val decTiny = refRoot.resolve("data/decimal-tiny.txt")
@@ -1588,82 +1590,86 @@ object FunctionalTables {
       }
   }
 
-  /** `functional_parquet.complextypestbl` — registered straight from
-    * the reference's own parquet files (`testdata/ComplexTypesTbl/
-    * {nullable,nonnullable}.parq`, 8 rows), the exact fixture behind
-    * the `nested-types-*.test` goldens. The two files spell column /
-    * nested-field names with different CASE (`int_array_Array` vs
-    * `int_array_array` — the loader is Hive, case-insensitive), so
-    * each file is cast to the canonical lower-case schema before the
-    * union; `cast` renames struct fields without touching data.
+  /** `functional_parquet.complextypestbl`'s 8 rows, the fixture behind
+    * the `nested-types-*.test` goldens, as one JSON line per row. The
+    * values are upstream Impala's `testdata/ComplexTypesTbl/
+    * nullable.json` (ids 1-7) and `nonnullable.json` (id 8, whose field
+    * names that file spells in mixed case, e.g. `int_array_Array`; Hive
+    * loads them case-insensitively, so they are written lower-case
+    * here). The reference stores them as two parquet files,
+    * `nullable.parq` and `nonnullable.parq`, loaded in one transaction;
+    * `complextypestbl__acid` keeps that split (id 8 in its own bucket).
+    */
+  private val complexTypesRows = Seq(
+    """{"id": 1, "int_array": [1, 2, 3], "int_array_array": [[1, 2], [3, 4]], "int_map": {"k1": 1, "k2": 100}, "int_map_array": [{"k1": 1}], "nested_struct": {"a": 1, "b": [1], "c": {"d": [[{"e": 10, "f": "aaa"}, {"e": -10, "f": "bbb"}], [{"e": 11, "f": "c"}]]}, "g": {"foo": {"h": {"i": [1.1]}}}}}""",
+    """{"id": 2, "int_array": [null, 1, 2, null, 3, null], "int_array_array": [[null, 1, 2, null], [3, null, 4], [], null], "int_map": {"k1": 2, "k2": null}, "int_map_array": [{"k3": null, "k1": 1}, null, {}], "nested_struct": {"a": null, "b": [null], "c": {"d": [[{"e": null, "f": null}, {"e": 10, "f": "aaa"}, {"e": null, "f": null}, {"e": -10, "f": "bbb"}, {"e": null, "f": null}], [{"e": 11, "f": "c"}, null], [], null]}, "g": {"g1": {"h": {"i": [2.2, null]}}, "g2": {"h": {"i": []}}, "g3": null, "g4": {"h": {"i": null}}, "g5": {"h": null}}}}""",
+    """{"id": 3, "int_array": [], "int_array_array": [null], "int_map": {}, "int_map_array": [null, null], "nested_struct": {"a": null, "b": null, "c": {"d": []}, "g": {}}}""",
+    """{"id": 4, "int_array": null, "int_array_array": [], "int_map": {}, "int_map_array": [], "nested_struct": {"a": null, "b": null, "c": {"d": null}, "g": null}}""",
+    """{"id": 5, "int_array": null, "int_array_array": null, "int_map": {}, "nested_struct": {"a": null, "b": null, "c": null, "g": {"foo": {"h": {"i": [2.2, 3.3]}}}}}""",
+    """{"id": 6, "nested_struct": null}""",
+    """{"id": 7, "int_array": null, "int_array_array": [null, [5, 6]], "int_map": {"k1": null, "k3": null}, "int_map_array": null, "nested_struct": {"a": 7, "b": [2, 3, null], "c": {"d": [[], [null], null]}, "g": null}}""",
+    """{"id": 8, "int_array": [-1], "int_array_array": [[-1, -2], []], "int_map": {"k1": -1}, "int_map_array": [{}, {"k1": 1}, {}, {}], "nested_struct": {"a": -1, "b": [-1], "c": {"d": [[{"e": -1, "f": "nonnullable"}]]}, "g": {}}}""")
+
+  /** `complextypestbl`'s declared schema (schema template:743-751). */
+  val complexTypesSchema: StructType = StructType.fromDDL(
+    "id bigint, int_array array<int>, " +
+      "int_array_array array<array<int>>, int_map map<string,int>, " +
+      "int_map_array array<map<string,int>>, " +
+      "nested_struct struct<a:int, b:array<int>, " +
+      "c:struct<d:array<array<struct<e:int,f:string>>>>, " +
+      "g:map<string,struct<h:struct<i:array<double>>>>>")
+
+  /** `functional_parquet.complextypestbl` — the 8 rows of
+    * [[complexTypesRows]] read into [[complexTypesSchema]] (FAILFAST, so
+    * a malformed row fails instead of reading as NULLs) — plus the
+    * twins derived from it.
     */
   def registerComplexTypesTbl(spark: SparkSession): Unit = {
-    val refRoot = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_REF_TESTDATA", "/root/reference/testdata"))
-    val dir = refRoot.resolve("ComplexTypesTbl")
-    if (!java.nio.file.Files.isDirectory(dir)) return
-    val canonical = StructType.fromDDL(
-      "id bigint, int_array array<int>, " +
-        "int_array_array array<array<int>>, int_map map<string,int>, " +
-        "int_map_array array<map<string,int>>, " +
-        "nested_struct struct<a:int, b:array<int>, " +
-        "c:struct<d:array<array<struct<e:int,f:string>>>>, " +
-        "g:map<string,struct<h:struct<i:array<double>>>>>")
-    def load(file: String): DataFrame = {
-      val df = spark.read.parquet(dir.resolve(file).toString)
-      val cols = canonical.fields.map { f =>
-        val src = df.schema.fields
-          .find(_.name.equalsIgnoreCase(f.name)).map(_.name).getOrElse(f.name)
-        org.apache.spark.sql.functions.col(s"`$src`")
-          .cast(f.dataType).as(f.name)
-      }
-      df.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(cols): _*)
-    }
-    if (java.nio.file.Files.isRegularFile(dir.resolve("nullable.parq")) &&
-        java.nio.file.Files.isRegularFile(dir.resolve("nonnullable.parq"))) {
-      val base = load("nullable.parq").unionByName(load("nonnullable.parq"))
-      base.createOrReplaceTempView("complextypestbl")
-      // Full-ACID twins (full-acid-rowid.test, acid.test,
-      // full-acid-complex-type-scans.test): the generator's ORC tables
-      // carry the synthetic row__id struct
-      // (fe/.../util/AcidUtils.java getRowIdColumnType). The original
-      // load is ONE transaction over two files — nullable.parq holds
-      // ids 1-7 (ACID bucket 0 → encoded 536870912, rowids 0-6) and
-      // nonnullable.parq id 8 (statement 1 → 536936448, rowid 0).
-      base.selectExpr("*",
-        "named_struct('operation', 0, " +
-          "'originaltransaction', CAST(1 AS BIGINT), " +
-          "'bucket', CAST(IF(id = 8, 536936448, 536870912) AS INT), " +
-          "'rowid', CAST(IF(id = 8, 0, id - 1) AS BIGINT), " +
-          "'currenttransaction', CAST(1 AS BIGINT)) AS row__id")
-        .createOrReplaceTempView("complextypestbl__acid")
-      // complextypestbl_deleted_rows (schema template: the even ids are
-      // deleted by Hive) — rowids keep their original-file positions
-      base.where("id % 2 = 1").selectExpr("*",
-        "named_struct('operation', 0, " +
-          "'originaltransaction', CAST(1 AS BIGINT), " +
-          "'bucket', CAST(536870912 AS INT), " +
-          "'rowid', CAST(id - 1 AS BIGINT), " +
-          "'currenttransaction', CAST(1 AS BIGINT)) AS row__id")
-        .createOrReplaceTempView("complextypestbl_deleted_rows")
-      // complextypestbl_minor_compacted: eight single-row transactions
-      // minor-compacted into one delta — each row keeps its own write
-      // id as original/current transaction, rowid resets per delta
-      base.selectExpr("*",
-        "named_struct('operation', 0, " +
-          "'originaltransaction', CAST(id AS BIGINT), " +
-          "'bucket', CAST(536870912 AS INT), " +
-          "'rowid', CAST(0 AS BIGINT), " +
-          "'currenttransaction', CAST(id AS BIGINT)) AS row__id")
-        .createOrReplaceTempView("complextypestbl_minor_compacted")
-      // complextypestbl_medium = complextypestbl × alltypes (7,300
-      // copies of each row — functional_schema_template.sql:824's
-      // DEPENDENT_LOAD_HIVE INSERT joins the two with no condition);
-      // derived, not stored, so the per-row collections stay identical
-      scala.util.Try(spark.table("alltypes")).foreach { at =>
-        base.crossJoin(at.select()).createOrReplaceTempView(
-          "complextypestbl_medium")
-      }
+    val base = spark.read.schema(complexTypesSchema)
+      .option("mode", "FAILFAST")
+      .json(spark.createDataset(complexTypesRows)(
+        org.apache.spark.sql.Encoders.STRING))
+    base.createOrReplaceTempView("complextypestbl")
+    // Full-ACID twins (full-acid-rowid.test, acid.test,
+    // full-acid-complex-type-scans.test): the generator's ORC tables
+    // carry the synthetic row__id struct
+    // (fe/.../util/AcidUtils.java getRowIdColumnType). The original
+    // load is ONE transaction over two files — nullable.parq holds
+    // ids 1-7 (ACID bucket 0 → encoded 536870912, rowids 0-6) and
+    // nonnullable.parq id 8 (statement 1 → 536936448, rowid 0).
+    base.selectExpr("*",
+      "named_struct('operation', 0, " +
+        "'originaltransaction', CAST(1 AS BIGINT), " +
+        "'bucket', CAST(IF(id = 8, 536936448, 536870912) AS INT), " +
+        "'rowid', CAST(IF(id = 8, 0, id - 1) AS BIGINT), " +
+        "'currenttransaction', CAST(1 AS BIGINT)) AS row__id")
+      .createOrReplaceTempView("complextypestbl__acid")
+    // complextypestbl_deleted_rows (schema template: the even ids are
+    // deleted by Hive) — rowids keep their original-file positions
+    base.where("id % 2 = 1").selectExpr("*",
+      "named_struct('operation', 0, " +
+        "'originaltransaction', CAST(1 AS BIGINT), " +
+        "'bucket', CAST(536870912 AS INT), " +
+        "'rowid', CAST(id - 1 AS BIGINT), " +
+        "'currenttransaction', CAST(1 AS BIGINT)) AS row__id")
+      .createOrReplaceTempView("complextypestbl_deleted_rows")
+    // complextypestbl_minor_compacted: eight single-row transactions
+    // minor-compacted into one delta — each row keeps its own write
+    // id as original/current transaction, rowid resets per delta
+    base.selectExpr("*",
+      "named_struct('operation', 0, " +
+        "'originaltransaction', CAST(id AS BIGINT), " +
+        "'bucket', CAST(536870912 AS INT), " +
+        "'rowid', CAST(0 AS BIGINT), " +
+        "'currenttransaction', CAST(id AS BIGINT)) AS row__id")
+      .createOrReplaceTempView("complextypestbl_minor_compacted")
+    // complextypestbl_medium = complextypestbl × alltypes (7,300
+    // copies of each row — functional_schema_template.sql:824's
+    // DEPENDENT_LOAD_HIVE INSERT joins the two with no condition);
+    // derived, not stored, so the per-row collections stay identical
+    scala.util.Try(spark.table("alltypes")).foreach { at =>
+      base.crossJoin(at.select()).createOrReplaceTempView(
+        "complextypestbl_medium")
     }
   }
 }

@@ -4,8 +4,11 @@ import org.apache.spark.sql.Row
 
 /** Impala nested-collection table refs (NestedRefs) — each case's
   * expected rows come straight from the reference's
-  * `nested-types-scanner-*.test` goldens over the exact
-  * ComplexTypesTbl parquet fixture.
+  * `nested-types-scanner-*.test` goldens over `complextypestbl`'s 8
+  * rows, which `FunctionalTables.registerComplexTypesTbl` builds in the
+  * repo from upstream Impala's `ComplexTypesTbl/nullable.json` (ids
+  * 1-7) and `nonnullable.json` (id 8). The last test checks those rows
+  * against the reference's parquet copies wherever they exist.
   */
 class NestedRefsSpec extends SparkSpecBase {
 
@@ -164,5 +167,34 @@ class NestedRefsSpec extends SparkSpecBase {
         "not exists (select item from t.int_array)").head().getLong(0)
     // empty (id=3) and NULL (ids 4-7) collections both qualify
     assert(notEx == 5)
+  }
+
+  test("in-repo complextypestbl rows equal the reference's parquet files") {
+    import java.nio.file.Files
+    val dir = sources.FunctionalTables.refRoot.resolve("ComplexTypesTbl")
+    val files =
+      Seq("nullable.parq", "nonnullable.parq").map(f => dir.resolve(f))
+    files.foreach(f => assume(Files.isRegularFile(f), s"$f not present"))
+    // the two files spell column and nested-field names in different
+    // case; take each top-level column case-insensitively and cast it to
+    // the canonical type (a struct cast renames fields by position)
+    val canonical = sources.FunctionalTables.complexTypesSchema
+    def load(f: java.nio.file.Path) = {
+      val df = spark.read.parquet(f.toString)
+      df.select(canonical.fields.toSeq.map { c =>
+        val src = df.columns.find(_.equalsIgnoreCase(c.name))
+          .getOrElse(fail(s"$f has no column ${c.name}"))
+        org.apache.spark.sql.functions.col(s"`$src`")
+          .cast(c.dataType).as(c.name)
+      }: _*)
+    }
+    def byId(rs: Array[Row]) = rs.map(r => r.getLong(0) -> r).toMap
+    val want = byId(files.map(load).reduce(_ unionByName _).collect())
+    sources.FunctionalTables.register(spark)
+    val got = byId(spark.table("complextypestbl").collect())
+    assert(got.keySet == want.keySet)
+    val diff = want.keys.toSeq.sorted.filter(id => got(id) != want(id))
+    assert(diff.isEmpty, diff.map(id =>
+      s"id $id: repo ${got(id)} != reference ${want(id)}").mkString("\n"))
   }
 }
