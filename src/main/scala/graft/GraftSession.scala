@@ -42,8 +42,11 @@ object GraftSession {
     tune(spark)
   }
 
-  private val tuned = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+  /** Weakly held: a session copy planned once (EXPLAIN's static plan)
+    * drops out when it is no longer used. */
+  private val tuned = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Idempotently apply parity + scale settings to an existing session.
     * Runtime-settable confs, plus the codegen cache size on the session's
@@ -62,12 +65,9 @@ object GraftSession {
       // the generated code. TPC-H 1-22 at sf0.001: 318 → 282 classes
       // in a cold pass, and no recompiles in later passes (4 before).
       c.set("spark.sql.codegen.useIdInClassName", "false")
-      // AQE: runtime shuffle-partition coalescing, skew-join splitting,
-      // dynamic broadcast conversion — the Spark analog of Impala's
-      // cost-model distribution decisions (DistributedPlanner.java:479-575).
-      c.set("spark.sql.adaptive.enabled", "true")
-      c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      c.set("spark.sql.adaptive.skewJoin.enabled", "true")
+      // AQE (on by default, with partition coalescing and skew-join
+      // splitting): runtime distribution decisions, the Spark analog of
+      // Impala's cost model (DistributedPlanner.java:479-575).
       // r17 (guide §2.2/§9): AQE's coalescing floor is tuned for
       // IO-bound stages (1 MiB/partition). The engine's hot reduce
       // stages (signature kernels, decimal aggregation, pair
@@ -97,12 +97,10 @@ object GraftSession {
       // CBO + join reorder ≈ Impala's cardinality-based join ordering.
       c.set("spark.sql.cbo.enabled", "true")
       c.set("spark.sql.cbo.joinReorder.enabled", "true")
-      // Runtime bloom filters ≈ Impala's BLOOM runtime filters pushed from
-      // hash-join builds to scans (RuntimeFilterGenerator.java).
-      c.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // Runtime bloom filters (on by default) ≈ Impala's BLOOM runtime
+      // filters pushed from hash-join builds to scans
+      // (RuntimeFilterGenerator.java).
       c.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      // Partial-agg pushdown into parquet footers (count/min/max only).
-      c.set("spark.sql.parquet.aggregatePushdown", "true")
       // INSERT OVERWRITE ... PARTITION(dynamic) replaces only the
       // partitions the query produced — Impala's semantics
       // (HdfsTableSink dynamic partition overwrite); Spark's static
@@ -110,8 +108,9 @@ object GraftSession {
       c.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // Impala reads/writes dates and timestamps on the proleptic
       // Gregorian calendar with no hybrid-calendar rebase
-      // (runtime/date-value.h, IMPALA-8953); CORRECTED is exactly that
-      // — and without it Spark refuses to WRITE pre-1582 dates at all
+      // (runtime/date-value.h, IMPALA-8953); CORRECTED is exactly that.
+      // Spark 4.1's default is CORRECTED too; pinned here because a
+      // LEGACY or EXCEPTION mode would rebase or refuse pre-1582 dates
       // (hive2-pre-gregorian-date.test's INSERT of 1582-10-04).
       c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
       c.set("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
@@ -199,9 +198,9 @@ object GraftSession {
     })
   }
 
-  /** r18 (advisor): drop memo entries (and the tune() marker) for
-    * stopped sessions so a long-lived multi-session process doesn't
-    * retain dead sessions and their analyzed plans forever. O(live
+  /** r18 (advisor): drop memo entries for stopped sessions so a
+    * long-lived multi-session process doesn't retain dead sessions
+    * and their analyzed plans forever. O(live
     * entries) per table() call — tens of keys. The fixture dirs are
     * immutable driver inputs (TESTDATA.md), so no mtime check: a
     * rewritten dir in-process would need a new SparkSession (or dir) to
@@ -210,8 +209,6 @@ object GraftSession {
   private def purgeStopped(): Unit = {
     val it = tableCache.keySet.iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    val it2 = tuned.iterator()
-    while (it2.hasNext) if (it2.next().sparkContext.isStopped) it2.remove()
   }
 
   /** Catalog-metadata memo (r17, guide §1.2 per-task → per-QUERY work):

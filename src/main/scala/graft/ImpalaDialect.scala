@@ -23,6 +23,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[graft.functions.GraftFunctions]]).
   */
 object ImpalaDialect {
+  import SqlText.{depthMap, isWordChar, matchingParen, replaceOutside}
 
   /** ISO-SQL datetime format tokens → Spark/Java pattern letters,
     * longest-first so e.g. `MI` wins over `M`.
@@ -135,39 +136,17 @@ object ImpalaDialect {
     // grammar (FORMAT 'YYYY-MM-DD"MID"') — never tokens
     timeTokRe.findFirstIn(fmt.replaceAll("\"[^\"]*\"", "")).isDefined
 
-  private def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-
-  /** Index of the ')' matching the '(' at `open`, honoring quoted
-    * strings; -1 when unbalanced.
-    */
-  private def matchingParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** Rewrite every FORMAT-clause CAST (Spark has no such grammar); the
     * target type picks the direction (parse vs print). A balanced-paren
     * scan, innermost-first, so nested `CAST(CAST(x AS STRING FORMAT …)
     * AS TIMESTAMP FORMAT …)` round-trips correctly.
     */
   def rewriteCastFormat(sql: String): String = {
+    val span = SqlText.lex(sql).span
     val out = new StringBuilder
     var i = 0
     while (i < sql.length) {
-      if (sql.regionMatches(true, i, "CAST", 0, 4) &&
+      if (span(i) == SqlText.Code && sql.regionMatches(true, i, "CAST", 0, 4) &&
           (i == 0 || !isWordChar(sql.charAt(i - 1)))) {
         var j = i + 4
         while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
@@ -289,7 +268,7 @@ object ImpalaDialect {
 
   def rewriteHints(sql: String): String = {
     val hints = scala.collection.mutable.ArrayBuffer.empty[String]
-    val stripped = joinHintRe.replaceAllIn(sql, m => {
+    val stripped = replaceOutside(sql, joinHintRe) { m =>
       val hint = Option(m.group(1)).getOrElse(m.group(2)).toUpperCase
       val table = m.group(3)
       val alias = Option(m.group(5))
@@ -300,14 +279,13 @@ object ImpalaDialect {
         case "SHUFFLE" => hints += s"SHUFFLE_HASH($target)"
         case _ => // NOSHUFFLE: advisory no-op under AQE
       }
-      java.util.regex.Matcher.quoteReplacement(
-        s"JOIN $table${m.group(4) match { case null => ""; case s => s }}")
-    })
+      s"JOIN $table${m.group(4) match { case null => ""; case s => s }}"
+    }
     // fallback: hints in positions the lift cannot target (before a
     // derived table or quoted name) are still removed so the statement
     // parses — hint lost, semantics kept (hints are advisory)
-    val bareStripped = bareHintRe.replaceAllIn(stripped, "")
-    val noStraight = straightJoinRe.replaceAllIn(bareStripped, "SELECT")
+    val bareStripped = replaceOutside(stripped, bareHintRe)(_ => "")
+    val noStraight = replaceOutside(bareStripped, straightJoinRe)(_ => "SELECT")
     if (hints.isEmpty) noStraight
     else {
       val at = outerSelectOffset(noStraight)
@@ -332,27 +310,9 @@ object ImpalaDialect {
     * would reference relations out of scope and be silently dropped.
     */
   private[graft] def outerSelectOffset(sql: String): Int = {
-    var depth = 0
-    var inStr = false
-    var i = 0
-    def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'S' | 's' if depth == 0 &&
-            sql.regionMatches(true, i, "SELECT", 0, 6) &&
-            (i == 0 || !isWord(sql.charAt(i - 1))) &&
-            (i + 6 >= sql.length || !isWord(sql.charAt(i + 6))) =>
-          return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
+    val (d, q) = depthMap(sql)
+    """(?i)\bSELECT\b""".r.findAllMatchIn(sql)
+      .find(m => !q(m.start) && d(m.start) == 0).map(_.start).getOrElse(-1)
   }
 
   /** Impala puts IGNORE NULLS *inside* the analytic call
@@ -379,54 +339,12 @@ object ImpalaDialect {
     """(?i)\bextract\s*\(([^(),]+?),\s*([^()]+?)\)""".r
 
   private def rewriteFunctionForms(sql: String): String = {
-    val a = ignoreNullsRe.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)}(${m.group(2)}, true)"))
-    val b = countEmptyRe.replaceAllIn(a, "count(*)")
-    val c = typedLitRe.replaceAllIn(b, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} '${m.group(2)}'"))
-    extract2Re.replaceAllIn(c, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"impala_extract(${m.group(1).trim}, ${m.group(2).trim})"))
-  }
-
-  /** Per-index paren depth and "inside string literal OR comment" flags
-    * (one pass). Comment awareness (`-- eol`, slash-star) keeps keyword
-    * scans (set-ops, VALUES) from matching words in comment text.
-    */
-  private[graft] def depthMap(sql: String): (Array[Int], Array[Boolean]) = {
-    val d = new Array[Int](sql.length)
-    val q = new Array[Boolean](sql.length)
-    var depth = 0
-    var quote: Char = 0
-    var lineComment = false
-    var blockComment = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (lineComment) { q(i) = true; if (c == '\n') lineComment = false }
-      else if (blockComment) {
-        q(i) = true
-        if (c == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-          q(i + 1) = true; d(i + 1) = depth; i += 1; blockComment = false
-        }
-      }
-      else if (quote != 0) { q(i) = true; if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; q(i) = true
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          lineComment = true; q(i) = true
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          blockComment = true; q(i) = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      d(i) = depth
-      i += 1
-    }
-    (d, q)
+    val a = replaceOutside(sql, ignoreNullsRe)(m =>
+      s"${m.group(1)}(${m.group(2)}, true)")
+    val b = replaceOutside(a, countEmptyRe)(_ => "count(*)")
+    val c = replaceOutside(b, typedLitRe)(m => s"${m.group(1)} '${m.group(2)}'")
+    replaceOutside(c, extract2Re)(m =>
+      s"impala_extract(${m.group(1).trim}, ${m.group(2).trim})")
   }
 
   private val rightSemiAntiRe = """(?i)\bRIGHT\s+(SEMI|ANTI)\s+JOIN\b""".r
@@ -440,10 +358,9 @@ object ImpalaDialect {
     * untouched rather than risk a wrong swap.
     */
   def rewriteRightSemiAnti(sql: String): String = {
-    val m = rightSemiAntiRe.findFirstMatchIn(sql).orNull
-    if (m == null) return sql
     val (d, q) = depthMap(sql)
-    if (q(m.start)) return sql
+    val m = rightSemiAntiRe.findAllMatchIn(sql).find(m => !q(m.start)).orNull
+    if (m == null) return sql
     val depth = d(m.start)
     val froms = """(?i)\bFROM\b""".r
       .findAllMatchIn(sql.substring(0, m.start)).toSeq
@@ -527,64 +444,26 @@ object ImpalaDialect {
   private val hugeLimitSmallOffsetRe =
     """(?i)\bLIMIT\s+(\d{10,19})\s+OFFSET\s+(\d{1,9})\b""".r
 
-  /** Regex replacement that skips matches starting inside a string
-    * literal or comment (depthMap recomputed per pass — replacement
-    * positions refer to this pass's input). Keeps text-level rewrites
-    * from corrupting literals like `'a && b'` or `'xyz!!qwe'`
-    * (both occur in the reference corpus: data-source-tables.test,
-    * exprs.test:2321).
-    */
-  private def replaceUnquoted(sql: String, re: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => String): String = {
-    val (_, q) = depthMap(sql)
-    re.replaceAllIn(sql, m =>
-      if (q(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else java.util.regex.Matcher.quoteReplacement(f(m)))
-  }
-
   private def rewriteMiscForms(sql: String): String = {
-    val a0 = replaceUnquoted(sql, realAliasRe)(_ => "AS DOUBLE")
-    val a = replaceUnquoted(a0, quotedAliasRe)(m => "AS `" + m.group(1) + "`")
-    val b = replaceUnquoted(a, andAmpRe)(_ => " AND ")
-    val c = replaceUnquoted(b, factorialRe)(m => s"factorial(${m.group(1)})")
-    val e = replaceUnquoted(c, columnIntervalRe)(m =>
+    val a0 = replaceOutside(sql, realAliasRe)(_ => "AS DOUBLE")
+    val a = replaceOutside(a0, quotedAliasRe)(m => "AS `" + m.group(1) + "`")
+    val b = replaceOutside(a, andAmpRe)(_ => " AND ")
+    val c = replaceOutside(b, factorialRe)(m => s"factorial(${m.group(1)})")
+    val e = replaceOutside(c, columnIntervalRe)(m =>
       s"(${m.group(1)} * INTERVAL 1 ${m.group(2)})")
-    val f0 = replaceUnquoted(e, hugeOffsetRe)(m =>
+    val f0 = replaceOutside(e, hugeOffsetRe)(m =>
       if (BigInt(m.group(1)) > Int.MaxValue) "LIMIT 0" else m.matched)
-    val f = replaceUnquoted(f0, hugeLimitSmallOffsetRe) { m =>
+    val f = replaceOutside(f0, hugeLimitSmallOffsetRe) { m =>
       val off = m.group(2).toLong
       if (BigInt(m.group(1)) > Int.MaxValue && off <= Int.MaxValue)
         s"LIMIT ${Int.MaxValue - off} OFFSET $off"
       else m.matched
     }
-    val g = replaceUnquoted(f, hugeLimitRe)(m =>
+    val g = replaceOutside(f, hugeLimitRe)(m =>
       if (BigInt(m.group(2)) > Int.MaxValue) s"${m.group(1)} ${Int.MaxValue}"
       else m.matched)
-    replaceUnquoted(g, insertColsPartitionRe)(m =>
+    replaceOutside(g, insertColsPartitionRe)(m =>
       s"${m.group(1)} PARTITION (${m.group(3)}) (${m.group(2)})")
-  }
-
-  /** Comma-split a fragment at paren depth 0, quote-aware. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var quote: Char = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
   }
 
   private val itemAliasRe =
@@ -594,21 +473,6 @@ object ImpalaDialect {
     "then", "else", "end", "as", "when", "in", "is", "between", "like",
     "from", "where", "on", "group", "order", "limit", "join", "union",
     "intersect", "except", "select", "values", "interval")
-
-  private def balanced(s: String): Boolean = {
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { ch =>
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth < 0) return false
-        case _ =>
-      }
-    }
-    depth == 0 && quote == 0
-  }
 
   /** Impala names inline-view VALUES columns by aliasing the FIRST row's
     * exprs — `(VALUES((1 x), (2), (3))) T`, `(values ('a' as s), ('b'))
@@ -652,7 +516,7 @@ object ImpalaDialect {
     if (c0 < 0) return None
     val inner = s.substring(r0 + 1, c0)
     if (!inner.trim.startsWith("(")) return None
-    val items = splitTopLevel(inner).map(_.trim)
+    val items = SqlText.split(inner).map(_.trim)
     if (items.length < 2 ||
         !items.forall(i => i.startsWith("(") && i.endsWith(")"))) return None
     var after = c0 + 1
@@ -709,13 +573,13 @@ object ImpalaDialect {
       s.substring(c0 + 1, close).trim.isEmpty
     val (rowsFrom, rowsTo) =
       if (wrapped) (r0 + 1, c0) else (ve, close)
-    val rows = splitTopLevel(s.substring(rowsFrom, rowsTo))
+    val rows = SqlText.split(s.substring(rowsFrom, rowsTo))
     val first = rows.head.trim
     if (!(first.startsWith("(") && first.endsWith(")"))) return None
-    val items = splitTopLevel(first.substring(1, first.length - 1)).map(_.trim)
+    val items = SqlText.split(first.substring(1, first.length - 1)).map(_.trim)
     val parsed = items.zipWithIndex.map { case (item, i) =>
       itemAliasRe.findFirstMatchIn(item) match {
-        case Some(m) if balanced(m.group(1)) &&
+        case Some(m) if SqlText.balanced(m.group(1)) &&
             !aliasGuard.contains(m.group(2).toLowerCase) =>
           (m.group(1).trim, Some(m.group(2)))
         case _ => (item, None)
@@ -836,7 +700,7 @@ object ImpalaDialect {
             if (close > 0) {
               val inner = out.substring(p + 1, close)
               def mapItems(s: String): String =
-                splitTopLevel(s).map { it =>
+                SqlText.split(s).map { it =>
                   val t = it.trim
                   if (t.equalsIgnoreCase("null")) " CAST(NULL AS BOOLEAN)"
                   else if (t.startsWith("(") && t.endsWith(")"))
@@ -995,7 +859,7 @@ object ImpalaDialect {
               """(?i)\bfrom\b""".r.findAllMatchIn(body)
                 .find(f => !bq(f.start) && bd(f.start) == 0)
             }
-          } yield NestedRefs.splitTop(body.substring(sel.end, fromM.start))
+          } yield SqlText.split(body.substring(sel.end, fromM.start))
             .map(_.trim)
           selItems match {
             case Some(items) if items.length > labels.length =>
@@ -1042,7 +906,7 @@ object ImpalaDialect {
           from <- fromRe2.findAllMatchIn(sql)
             .find(f => f.start > sel.end && !q(f.start) && d(f.start) == dep)
         } {
-        val items = NestedRefs.splitTop(sql.substring(sel.end, from.start))
+        val items = SqlText.split(sql.substring(sel.end, from.start))
           .map(_.trim).map(_.stripPrefix("distinct").trim)
         // the ORDER BY list extent: until depth drops below dep or a
         // depth-dep LIMIT/OFFSET keyword
@@ -1057,7 +921,7 @@ object ImpalaDialect {
         }
         val listTxt = sql.substring(m.end, end)
         val sortRe = """(?is)^(.*?)(\s+(?:asc|desc))?(\s+nulls\s+(?:first|last))?\s*$""".r
-        val newItems = NestedRefs.splitTop(listTxt).map { raw =>
+        val newItems = SqlText.split(listTxt).map { raw =>
           raw match {
             case sortRe(expr, dir, nulls)
                 if norm(expr).contains("over(") =>
@@ -1068,7 +932,7 @@ object ImpalaDialect {
             case _ => raw
           }
         }
-        if (newItems != NestedRefs.splitTop(listTxt))
+        if (newItems != SqlText.split(listTxt))
           out.replace(m.end, end, newItems.mkString(","))
         }
       }
@@ -1101,7 +965,7 @@ object ImpalaDialect {
         val from = """(?i)\bfrom\b""".r.findAllMatchIn(sql)
           .find(f => f.start > m.end && !q(f.start) && d(f.start) == dep)
         from.foreach { f =>
-          NestedRefs.splitTop(sql.substring(m.end, f.start)).foreach {
+          SqlText.split(sql.substring(m.end, f.start)).foreach {
             case selectItemAliasRe(expr, alias) =>
               aliasOf(norm(expr)) = alias
             case _ =>
@@ -1129,7 +993,7 @@ object ImpalaDialect {
         val close = matchingParen(s, open)
         if (close < 0) s
         else {
-          val args = NestedRefs.splitTop(s.substring(open + 1, close))
+          val args = SqlText.split(s.substring(open + 1, close))
             .map { a =>
               expandable.get(a.trim.toLowerCase)
                 .map(e => s"($e)").getOrElse(a)
@@ -1198,39 +1062,8 @@ object ImpalaDialect {
   private val hiveClusterByRe =
     """(?i)\b(?:cluster|distribute)\s+by\b""".r
 
-  /** Blank out string-literal contents and comments (same length, so
-    * match offsets map back to the original text) — the grammar/date
-    * validators below scan with regexes and must never fire on text
-    * INSIDE a literal or comment (e.g. WHERE c = 'distribute by x').
-    */
-  private def maskQuotedAndComments(text: String): String = {
-    val out = text.toCharArray
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      val c = text(i)
-      if (c == '\'' || c == '"') {
-        i += 1
-        while (i < n && text(i) != c) {
-          if (text(i) == '\\' && i + 1 < n) { out(i) = ' '; out(i + 1) = ' '; i += 2 }
-          else { out(i) = ' '; i += 1 }
-        }
-        i += 1
-      } else if (c == '-' && i + 1 < n && text(i + 1) == '-') {
-        while (i < n && text(i) != '\n') { out(i) = ' '; i += 1 }
-      } else if (c == '/' && i + 1 < n && text(i + 1) == '*') {
-        out(i) = ' '; out(i + 1) = ' '; i += 2
-        while (i < n && !(text(i) == '*' && i + 1 < n && text(i + 1) == '/')) {
-          out(i) = ' '; i += 1
-        }
-        if (i + 1 < n) { out(i) = ' '; out(i + 1) = ' '; i += 2 }
-      } else i += 1
-    }
-    new String(out)
-  }
-
   private def validateImpalaGrammar(text: String): Unit = {
-    val masked = maskQuotedAndComments(text)
+    val masked = SqlText.mask(text)
     if (hiveSortByRe.findFirstIn(masked).isDefined ||
         hiveClusterByRe.findFirstIn(masked).isDefined)
       throw new IllegalStateException(
@@ -1244,7 +1077,7 @@ object ImpalaDialect {
     // scan the masked text (a DATE keyword inside a string or comment
     // is invisible), then read the literal back from the original via
     // the group offsets — masking is length-preserving
-    val masked = maskQuotedAndComments(text)
+    val masked = SqlText.mask(text)
     dateLitRe.findAllMatchIn(masked).foreach { m =>
       val g = if (m.group(1) != null) 1 else 2
       val v = text.substring(m.start(g), m.end(g))

@@ -846,24 +846,24 @@ object ImpalaMeta {
     * explicit ASC.
     */
   def canonicalizeViewBody(body: String): String = {
-    var b = body.split("\\s+").mkString(" ").trim.stripSuffix(";")
-    b = """([A-Za-z_]\w*)\(""".r.replaceAllIn(b, mm => {
+    var b = SqlText.replaceOutside(body, """\s+""".r)(_ => " ").trim.stripSuffix(";")
+    b = SqlText.replaceOutside(b, """([A-Za-z_]\w*)\(""".r) { mm =>
       val w = mm.group(1)
       (if (sqlKeywords(w.toLowerCase)) w else w.toLowerCase) + "("
-    })
+    }
     // Impala's toSql backtick-quotes identifiers Hive cannot lex
     // (leading underscore — HiveLexer Identifier starts with a
     // letter/digit); views-compatibility.test pins that the
-    // regenerated text parses in Hive. Quote-aware scan: string
-    // literals and already-backticked spans stay untouched.
-    b = quoteUnderscoreIds(b)
+    // regenerated text parses in Hive. String literals and
+    // already-backticked spans stay untouched.
+    b = SqlText.replaceOutside(b, """(?<![\w.])_\w*""".r)(mm => s"`${mm.matched}`")
     // ORDER BY items: explicit ASC when no direction is given; a
     // trailing NULLS FIRST/LAST rides after the direction (Impala
     // SortInfo toSql — views-compatibility's nulls-last views)
     val obRe = """(?i)\bORDER BY\b(.*?)(\bLIMIT\b.*|$)""".r
-    b = obRe.replaceAllIn(b, mm => {
+    b = SqlText.replaceOutside(b, obRe) { mm =>
       val nullsRe = """(?i)\s+nulls\s+(first|last)\s*$""".r
-      val items = mm.group(1).split(",").map(_.trim).map { it0 =>
+      val items = SqlText.split(mm.group(1)).map(_.trim).map { it0 =>
         val nulls = nullsRe.findFirstIn(it0).map(_.trim).getOrElse("")
         val it = nullsRe.replaceAllIn(it0, "")
         val directed =
@@ -871,43 +871,15 @@ object ImpalaMeta {
           else it + " ASC"
         if (nulls.isEmpty) directed else s"$directed $nulls"
       }
-      java.util.regex.Matcher.quoteReplacement(
-        "ORDER BY " + items.mkString(", ") +
-          (if (mm.group(2).nonEmpty) " " + mm.group(2) else ""))
-    })
+      "ORDER BY " + items.mkString(", ") +
+        (if (mm.group(2).nonEmpty) " " + mm.group(2) else "")
+    }
     b
   }
 
   /** Quote identifiers Impala's toSql backtick-quotes (leading '_'). */
   def quoteId(id: String): String =
     if (id.startsWith("_")) s"`$id`" else id
-
-  /** Backtick-quote every bare leading-underscore identifier outside
-    * string literals and existing backtick spans.
-    */
-  private def quoteUnderscoreIds(s: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        out.append(c); if (c == quote) quote = 0; i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; out.append(c); i += 1
-        case '_' if i == 0 ||
-            !(Character.isLetterOrDigit(s.charAt(i - 1)) ||
-              s.charAt(i - 1) == '_' || s.charAt(i - 1) == '.') =>
-          var j = i
-          while (j < s.length && (Character.isLetterOrDigit(s.charAt(j)) ||
-              s.charAt(j) == '_')) j += 1
-          out.append('`').append(s.substring(i, j)).append('`')
-          i = j
-        case other => out.append(other); i += 1
-      }
-    }
-    out.toString
-  }
 
   /** Regenerate a view's stored SQL. With explicit column aliases the
     * reference expands into an inline view whose select items re-alias
@@ -930,7 +902,7 @@ object ImpalaMeta {
     val selRe = """(?is)^SELECT\s+(.*?)\s+(FROM\s+.*)$""".r
     canon match {
       case selRe(list, rest) =>
-        val items = NestedRefs.splitTop(list).map(_.trim)
+        val items = SqlText.split(list).map(_.trim)
         val parsed = items.zipWithIndex.map { case (it, i) =>
           val aliasRe =
             """(?is)^(.*?)(?:\s+(?:AS\s+)?(`[^`]+`|[A-Za-z_]\w*))?$""".r

@@ -132,7 +132,7 @@ object ImpalaStats {
       val partCols = m.partCols()
       val keys = m.partitions().map(_.values)
       if (partCols.isEmpty || keys.isEmpty) return Some(Nil)
-      val pred = NestedRefs.splitTop(predTxt).map(_.trim)
+      val pred = SqlText.split(predTxt).map(_.trim)
         .filter(_.nonEmpty).mkString(" AND ")
         .replaceAll("(?i)=\\s*NULL\\b", " IS NULL")
         .replaceAll("=\\s*''", " IS NULL")

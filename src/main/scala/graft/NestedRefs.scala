@@ -48,6 +48,7 @@ import org.apache.spark.sql.types._
   * (`t JOIN t.int_array ON …`) are left untouched.
   */
 object NestedRefs {
+  import SqlText.{depthMap, isWordChar}
 
   private case class Scope(
       aliases: scala.collection.mutable.Map[String, DataType]) {
@@ -72,7 +73,7 @@ object NestedRefs {
     * (…)`) — rewriting would emit an invalid filter lambda, so such
     * chains fall back to the generic path instead. */
   private def hasTopLevelJoin(s: String): Boolean = {
-    val (d, q) = ImpalaDialect.depthMap(s)
+    val (d, q) = depthMap(s)
     """(?i)\bjoin\b""".r.findAllMatchIn(s)
       .exists(m => !q(m.start) && d(m.start) == 0)
   }
@@ -210,12 +211,12 @@ object NestedRefs {
     */
   private def collapseDotWhitespace(s: String): String = {
     if (!s.contains('.')) return s
-    val (_, q) = ImpalaDialect.depthMap(s)
+    val (_, q) = depthMap(s)
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (!q(i) && c.isWhitespace && sb.nonEmpty && isWord(sb.last)) {
+      if (!q(i) && c.isWhitespace && sb.nonEmpty && isWordChar(sb.last)) {
         var j = i
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
         // only join when what follows the dot starts an identifier —
@@ -226,7 +227,7 @@ object NestedRefs {
             k < s.length && k >= 0 &&
             (s.charAt(k).isLetter || s.charAt(k) == '_')) i = j // drop ws
         else { sb.append(c); i += 1 }
-      } else if (!q(i) && c == '.' && sb.nonEmpty && isWord(sb.last)) {
+      } else if (!q(i) && c == '.' && sb.nonEmpty && isWordChar(sb.last)) {
         var j = i + 1
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
         if (j > i + 1 && j < s.length &&
@@ -256,13 +257,13 @@ object NestedRefs {
     */
   private def recurseParens(spark: SparkSession, s: String,
       outer: Seq[(String, DataType)], used: UsedOuter): String = {
-    val (d, q) = ImpalaDialect.depthMap(s)
+    val lexed = SqlText.lex(s)
     val sb = new java.lang.StringBuilder
     var i = 0
     var last = 0
     while (i < s.length) {
-      if (s.charAt(i) == '(' && !q(i) && i >= last) {
-        val close = matching(s, i, d, q)
+      if (i >= last) {
+        val close = lexed.close(i)
         if (close > i) {
           val inner = s.substring(i + 1, close)
           val t = inner.trim.toLowerCase
@@ -281,17 +282,6 @@ object NestedRefs {
     sb.toString
   }
 
-  private def matching(s: String, open: Int, d: Array[Int],
-      q: Array[Boolean]): Int = {
-    val base = d(open)
-    var i = open + 1
-    while (i < s.length) {
-      if (s.charAt(i) == ')' && !q(i) && d(i) == base - 1) return i
-      i += 1
-    }
-    -1
-  }
-
   /** Rewrite every depth-0 FROM clause of one scope (subqueries were
     * already handled by the paren recursion, and their text is opaque
     * here because clause scanning sticks to depth 0). After each FROM
@@ -304,7 +294,7 @@ object NestedRefs {
     */
   private def rewriteScope(spark: SparkSession, s: String,
       outer: Seq[(String, DataType)], used: UsedOuter): String = {
-    val (d, q) = ImpalaDialect.depthMap(s)
+    val (d, q) = depthMap(s)
     val froms = fromRe.findAllMatchIn(s).toSeq.filter { m =>
       !q(m.start) && d(m.start) == 0 && isKeywordAt(s, m.start, "from") &&
         // not the FROM of `IS [NOT] DISTINCT FROM` — word-bounded, so
@@ -313,7 +303,7 @@ object NestedRefs {
         ! {
           val p = s.substring(0, m.start).trim.toLowerCase
           p.endsWith("distinct") &&
-            (p.length == 8 || !isWord(p.charAt(p.length - 9)))
+            (p.length == 8 || !isWordChar(p.charAt(p.length - 9)))
         }
     }
     if (froms.isEmpty) return s
@@ -386,7 +376,7 @@ object NestedRefs {
       case Some(h) => prefixEnd += h.end
       case None => look = false
     }
-    val items = splitTop(listTxt.substring(prefixEnd))
+    val items = SqlText.split(listTxt.substring(prefixEnd))
     // star expansion from the scope is only sound when the scope saw
     // EVERY FROM item's aliases — a FROM-subquery or unresolved table
     // contributes columns the scope can't enumerate, and expanding
@@ -501,7 +491,7 @@ object NestedRefs {
     val whereRe = """(?is)^(\s*)where\b(.*)$""".r
     tail match {
       case whereRe(ws, rest) =>
-        val (d2, q2) = ImpalaDialect.depthMap(rest)
+        val (d2, q2) = depthMap(rest)
         val stop = clauseEnd(rest, 0, d2, q2)
         s"$ws WHERE $predTxt AND (${rest.substring(0, stop)}) " +
           rest.substring(stop)
@@ -510,53 +500,25 @@ object NestedRefs {
   }
 
   private def isKeywordAt(s: String, pos: Int, kw: String): Boolean = {
-    val before = pos == 0 || !isWord(s.charAt(pos - 1))
-    val after = pos + kw.length >= s.length || !isWord(s.charAt(pos + kw.length))
+    val before = pos == 0 || !isWordChar(s.charAt(pos - 1))
+    val after = pos + kw.length >= s.length || !isWordChar(s.charAt(pos + kw.length))
     before && after
   }
-
-  private def isWord(c: Char) = Character.isLetterOrDigit(c) || c == '_'
 
   private def clauseEnd(s: String, start: Int, d: Array[Int],
       q: Array[Boolean]): Int = {
     var i = start
     while (i < s.length) {
       if (!q(i) && d(i) == 0 && Character.isLetter(s.charAt(i)) &&
-          (i == 0 || !isWord(s.charAt(i - 1)))) {
+          (i == 0 || !isWordChar(s.charAt(i - 1)))) {
         val rest = s.substring(i, math.min(s.length, i + 10)).toUpperCase
         if (clauseEnders.exists(k => rest.startsWith(k) &&
-            (i + k.length >= s.length || !isWord(s.charAt(i + k.length)))))
+            (i + k.length >= s.length || !isWordChar(s.charAt(i + k.length)))))
           return i
       }
       i += 1
     }
     s.length
-  }
-
-  /** Public top-level comma split (quote/paren-aware) — shared with
-    * ImpalaDialect's select-list scans. */
-  def splitTop(str: String): Seq[String] = splitTopLevel(str)
-
-  private def splitTopLevel(str: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var quote: Char = 0
-    var start = 0
-    var i = 0
-    while (i < str.length) {
-      val ch = str.charAt(i)
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' | '`' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += str.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += str.substring(start)
-    out.toSeq
   }
 
   /** `<plain ref> [LEFT [OUTER]|INNER] JOIN <path> [alias] [ON cond]` —
@@ -614,7 +576,7 @@ object NestedRefs {
   /** Split one join operand's optional trailing `ON <cond>` (depth-0,
     * quote-aware). */
   private def splitOn(s: String): (String, Option[String]) = {
-    val (d, q) = ImpalaDialect.depthMap(s)
+    val (d, q) = depthMap(s)
     """(?i)\bon\b""".r.findAllMatchIn(s)
       .find(mm => !q(mm.start) && d(mm.start) == 0) match {
       case Some(mm) => (s.substring(0, mm.start), Some(s.substring(mm.end)))
@@ -633,7 +595,7 @@ object NestedRefs {
   private def rewriteFromClause(spark: SparkSession, clause: String,
       outer: Seq[(String, DataType)], used: UsedOuter)
       : (Option[String], Scope, Seq[String]) = {
-    val items = splitTopLevel(clause)
+    val items = SqlText.split(clause)
     val scope = Scope(scala.collection.mutable.LinkedHashMap.empty)
     val baseItems = scala.collection.mutable.ArrayBuffer.empty[String]
     val laterals = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -876,7 +838,7 @@ object NestedRefs {
       * Returns false to fall back to the raw item untouched.
       */
     def rewriteJoinChain(raw: String): Boolean = {
-      val (d, q) = ImpalaDialect.depthMap(raw)
+      val (d, q) = depthMap(raw)
       val kws = joinKwRe.findAllMatchIn(raw).toSeq
         .filter(m => !q(m.start) && d(m.start) == 0)
       if (kws.isEmpty) return false
@@ -1295,22 +1257,14 @@ object NestedRefs {
   private def qualifyCond(cond: String, alias: String,
       elemType: DataType, lambdaVar: String,
       outerCols: Set[String] = Set.empty): String = {
-    def replace(s: String, re: scala.util.matching.Regex,
-        f: scala.util.matching.Regex.Match => String): String = {
-      val (_, qq) = ImpalaDialect.depthMap(s)
-      re.replaceAllIn(s, m =>
-        if (qq(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-        else java.util.regex.Matcher.quoteReplacement(f(m)))
-    }
     val a = java.util.regex.Pattern.quote(alias)
     // alias.item.f → __x.f ; alias.item → __x
-    var out = replace(cond,
-      ("""(?i)(?<![\w.])""" + a + """\s*\.\s*item\s*\.""").r,
-      _ => lambdaVar + ".")
-    out = replace(out,
-      ("""(?i)(?<![\w.])""" + a + """\s*\.\s*item\b""").r, _ => lambdaVar)
-    out = replace(out,
-      ("""(?i)(?<![\w.])""" + a + """\s*\.""").r, _ => lambdaVar + ".")
+    var out = SqlText.replaceOutside(cond,
+      ("""(?i)(?<![\w.])""" + a + """\s*\.\s*item\s*\.""").r)(_ => lambdaVar + ".")
+    out = SqlText.replaceOutside(out,
+      ("""(?i)(?<![\w.])""" + a + """\s*\.\s*item\b""").r)(_ => lambdaVar)
+    out = SqlText.replaceOutside(out,
+      ("""(?i)(?<![\w.])""" + a + """\s*\.""").r)(_ => lambdaVar + ".")
     elemType match {
       case st: StructType =>
         st.fields.map(_.name)
@@ -1318,12 +1272,12 @@ object NestedRefs {
           .foreach { f =>
             val fre = ("""(?i)(?<![\w.])""" + java.util.regex.Pattern.quote(f) +
               """\b(?!\s*\()""").r
-            out = replace(out, fre, _ => s"$lambdaVar.$f")
+            out = SqlText.replaceOutside(out, fre)(_ => s"$lambdaVar.$f")
           }
       case _ =>
         // scalar elements: the bare implicit `item` is the element
-        out = replace(out, """(?i)(?<![\w.])item\b(?!\s*[(.])""".r,
-          _ => lambdaVar)
+        out = SqlText.replaceOutside(out,
+          """(?i)(?<![\w.])item\b(?!\s*[(.])""".r)(_ => lambdaVar)
     }
     out
   }
@@ -1377,7 +1331,7 @@ object NestedRefs {
         }
         val aggRe =
           """(?is)^\s*(sum|count|min|max)\s*\(\s*(distinct\s+)?(.*)\)\s+(?:as\s+)?([A-Za-z_]\w*)\s*$""".r
-        val entries = splitTopLevel(selectList).map {
+        val entries = SqlText.split(selectList).map {
           case aggRe(fn, distinct, arg, name) =>
             val a = arg.trim
             // DISTINCT folds through array_distinct over the projected
@@ -1439,13 +1393,13 @@ object NestedRefs {
   private def rewriteExists(text: String, scope: Scope): String = {
     if (scope.aliases.isEmpty) return text
     val existsRe = """(?i)\b(not\s+)?exists\s*\(""".r
-    val (d, q) = ImpalaDialect.depthMap(text)
+    val lexed = SqlText.lex(text)
     val ms = existsRe.findAllMatchIn(text).toSeq
-      .filter(m => !q(m.start)).reverse
+      .filter(m => lexed.span(m.start) == SqlText.Code).reverse
     var out = text
     ms.foreach { m =>
       val open = m.end - 1
-      val close = matching(text, open, d, q)
+      val close = lexed.close(open)
       if (close > open) {
         val body = text.substring(open + 1, close)
         val lower = body.toLowerCase

@@ -86,7 +86,7 @@ object ImpalaExplain {
       .flatMap(_.toIntOption).getOrElse(1)
     // DISABLE_STREAMING_PREAGGREGATIONS renders phase-1 aggregates
     // without the [STREAMING] tag (Impala's non-streaming preagg)
-    noStreamingAgg = spark.conf
+    val noStreamingAgg = spark.conf
       .getOption("graft.explain.noStreamingAgg").contains("true")
     val (stripped, names) = resolveNames(spark, body)
     partitionKeyScan(spark, body, stripped, sqlRunner).foreach { lines =>
@@ -104,21 +104,18 @@ object ImpalaExplain {
     val statsScan = statsScanNode(spark, body, names, level)
     val scanExtras = parquetStatsPredicates(spark, body, names, level)
     // the rendered plan is the STATIC one, like Impala's (AQE re-plans
-    // at runtime; EXPLAIN describes the compile-time plan)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val lines =
-      try {
-        val df = sqlRunner(spark, stripped)
-        render(spark, df, names, level, statsScan, scanExtras)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    // at runtime; EXPLAIN describes the compile-time plan). It is planned
+    // on a copy of the session, so queries running on the caller's
+    // session meanwhile keep adaptive execution.
+    val static = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    val lines = render(spark, sqlRunner(static, stripped), names, level,
+      noStreamingAgg, statsScan, scanExtras)
     val rows = new java.util.ArrayList[Row](lines.length)
     lines.foreach(l => rows.add(Row(l)))
     spark.createDataFrame(rows,
       StructType(Seq(StructField("Explain String", StringType))))
   }
-
-  @volatile private var noStreamingAgg = false
 
   /** OPTIMIZE_PARTITION_KEY_SCANS: an aggregate whose inputs are all
     * partition-key columns of a registered table collapses to a UNION
@@ -312,7 +309,7 @@ object ImpalaExplain {
     if (parts.isEmpty || parts.exists(_.fileBytes.isEmpty)) return None
     val partColNames = m.partCols().fields.map(_.name.toLowerCase).toSet
     val whereTxt = Option(mt.group(2)).getOrElse("")
-    val conjuncts = splitTopAnd(whereTxt).filter(_.nonEmpty)
+    val conjuncts = splitTopAnd(whereTxt)
     if (conjuncts.exists(c => identifiers(c).isEmpty ||
         !identifiers(c).forall(partColNames))) return None
     val sel =
@@ -456,32 +453,8 @@ object ImpalaExplain {
     else Seq("parquet statistics predicates: " + preds.mkString(", "))
   }
 
-  private def splitTopAnd(txt: String): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var inQ = false
-    val s = txt
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') inQ = !inQ
-      else if (!inQ && c == '(') depth += 1
-      else if (!inQ && c == ')') depth -= 1
-      else if (!inQ && depth == 0 && (c == 'a' || c == 'A') &&
-          i + 3 <= s.length &&
-          s.regionMatches(true, i, "and", 0, 3) &&
-          (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-          (i + 3 == s.length || !Character.isLetterOrDigit(s.charAt(i + 3)))) {
-        out += s.substring(start, i).trim
-        start = i + 3
-        i += 2
-      }
-      i += 1
-    }
-    out += s.substring(start).trim
-    out.filter(_.nonEmpty).toSeq
-  }
+  private def splitTopAnd(txt: String): Seq[String] =
+    graft.SqlText.split(txt, "AND").map(_.trim).filter(_.nonEmpty)
 
   private val sqlWords = Set("and", "or", "not", "in", "is", "null",
     "true", "false", "like", "rlike", "regexp", "between", "cast", "as",
@@ -489,8 +462,7 @@ object ImpalaExplain {
     "string", "char", "varchar", "date", "timestamp", "boolean")
 
   private def identifiers(c: String): Seq[String] = {
-    val noStrings = c.replaceAll("'[^']*'", " ")
-    """[A-Za-z_]\w*""".r.findAllIn(noStrings).map(_.toLowerCase)
+    """[A-Za-z_]\w*""".r.findAllIn(graft.SqlText.mask(c)).map(_.toLowerCase)
       .filterNot(sqlWords).toSeq
   }
 
@@ -514,7 +486,7 @@ object ImpalaExplain {
     * relation spellings in text order, consumed by scans left to right.
     */
   private[plans] def render(spark: SparkSession, df: DataFrame,
-      names: Seq[String], level: Int,
+      names: Seq[String], level: Int, noStreamingAgg: Boolean,
       statsScan: Option[Node] = None,
       scanExtras: Seq[String] = Nil): Seq[String] = {
     val plan = df.queryExecution.executedPlan
@@ -548,7 +520,7 @@ object ImpalaExplain {
     if (scanExtras.nonEmpty)
       tree.allNodes.find(_.kind == "SCAN")
         .foreach(n => n.details = n.details ++ scanExtras)
-    tagAggs(tree)
+    tagAggs(tree, noStreamingAgg)
     number(tree)
     planRuntimeFilters(tree)
     val sink = new Node("SINK", "PLAN-ROOT SINK", child = Some(tree))
@@ -804,7 +776,7 @@ object ImpalaExplain {
     * below a merge (unless DISABLE_STREAMING_PREAGGREGATIONS), plain
     * AGGREGATE on intermediate merges and non-grouping phase-1 aggs.
     */
-  private def tagAggs(root: Node): Unit = {
+  private def tagAggs(root: Node, noStreamingAgg: Boolean): Unit = {
     def walk(n: Node, aggAbove: Boolean): Unit = {
       if (n.kind == "AGG") {
         val merge = n.child.exists(_.kind == "EXCHANGE")

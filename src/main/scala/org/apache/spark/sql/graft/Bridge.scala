@@ -13,6 +13,12 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 
+  /** A copy of the session (conf, temp views, functions) over the same
+    * context and catalog; settings made on the copy stay there.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSession].cloneSession()
+
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     spark.asInstanceOf[ClassicSession].sessionState.sqlParser.parsePlan(sql)
 

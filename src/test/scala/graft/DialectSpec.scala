@@ -4,6 +4,16 @@ package graft
 class DialectSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Checks every (name, actual, expected) row and reports all the
+    * failing ones together. */
+  private def assertRows(rows: Seq[(String, () => Any, Any)]): Unit = {
+    val bad = rows.flatMap { case (name, got, want) =>
+      val g = scala.util.Try(got()).fold(e => s"threw $e", identity)
+      if (g == want) None else Some(s"$name: got $g, want $want")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("dialect ORDER BY uses Impala default NULL ordering") {
     Seq(Some(2), None, Some(1)).toDF("x").createOrReplaceTempView("d_nulls")
     // plain ORDER BY x: Spark default puts NULL first; Impala puts it last
@@ -176,6 +186,75 @@ class DialectSpec extends SparkSpecBase {
     val c = ImpalaDialect.sql(spark,
       "select count(*) n -- x && y! AS REAL\nfrom (values (1 x)) t").head()
     assert(c.getLong(0) == 1L)
+    // every other text rewrite leaves literals alone as well, and a
+    // backslash-escaped quote does not end a literal
+    def one(q: String): Seq[Any] = ImpalaDialect.sql(spark, q).head().toSeq
+    val rows: Seq[(String, () => Any, Any)] = Seq(
+      ("count() in a literal", () => one("SELECT 'count()' AS s"),
+        Seq("count()")),
+      ("bracket hint in a literal", () => one("SELECT '[SHUFFLE] x' AS h"),
+        Seq("[SHUFFLE] x")),
+      ("comment hint in a literal",
+        () => ImpalaDialect.rewrite("SELECT 'a /* +BROADCAST */ b'"),
+        "SELECT 'a /* +BROADCAST */ b'"),
+      ("IGNORE NULLS in a literal",
+        () => ImpalaDialect.rewrite("SELECT 'first_value(x ignore nulls)'"),
+        "SELECT 'first_value(x ignore nulls)'"),
+      ("typed literal in a literal",
+        () => one("""SELECT 'DATE "2020-01-01"' AS s"""),
+        Seq("DATE \"2020-01-01\"")),
+      ("&& after an escaped quote",
+        () => one("SELECT 'it\\'s' AS s, true && false AS b"),
+        Seq("it's", false)),
+      ("CAST in a literal", () => one("SELECT 'CAST(1 AS CHAR(3))' AS c"),
+        Seq("CAST(1 AS CHAR(3))")),
+      ("RIGHT SEMI JOIN after one in a literal",
+        () => ImpalaDialect.rewrite(
+          "SELECT 'x RIGHT SEMI JOIN y' s FROM a RIGHT SEMI JOIN b ON a.k = b.k"),
+        "SELECT 'x RIGHT SEMI JOIN y' s FROM b LEFT SEMI JOIN a ON a.k = b.k"),
+      ("comma in a comment", () => SqlText.split("a, f -- g,h\n"),
+        Seq("a", " f -- g,h\n")),
+      ("double-quoted paren before the outer SELECT",
+        () => ImpalaDialect.outerSelectOffset(
+          "WITH x AS (SELECT \"(\" AS p) SELECT * FROM x"), 28),
+      ("view text: spaces in a literal",
+        () => ImpalaMeta.canonicalizeViewBody("select 'a  b' as s from t"),
+        "select 'a  b' as s from t"),
+      ("view text: function call in a literal",
+        () => ImpalaMeta.canonicalizeViewBody("select 'ABC(' from t"),
+        "select 'ABC(' from t"),
+      ("view text: comma inside an ORDER BY call",
+        () => ImpalaMeta.canonicalizeViewBody(
+          "select a from t order by concat(a, b)"),
+        "select a from t ORDER BY concat(a, b) ASC"))
+    assertRows(rows)
+  }
+
+  test("one lexer: split, matching paren, outer SELECT and mask") {
+    // each row pairs one scanner with one lexical case: a backslash-
+    // escaped quote, a backtick identifier holding '(' and ',', a
+    // comment holding a quote, '(' and ',', and a double-quoted "("
+    val rows: Seq[(String, () => Any, Any)] = Seq(
+      ("split: escaped quote", () => SqlText.split("'a\\',b', c"),
+        Seq("'a\\',b'", " c")),
+      ("split: comment", () => SqlText.split("f(x) -- it's (a, b\n, y"),
+        Seq("f(x) -- it's (a, b\n", " y")),
+      ("matching paren: backtick identifier",
+        () => SqlText.matchingParen("f(`a(b,c` + 1) + 2", 1), 13),
+      ("matching paren: comment",
+        () => SqlText.matchingParen("f(x -- it's (a, b\n) + 2", 1), 18),
+      ("outer SELECT: double-quoted paren",
+        () => ImpalaDialect.outerSelectOffset(
+          "WITH v AS (SELECT \"(\" c) SELECT c FROM v"), 25),
+      ("outer SELECT: escaped quote",
+        () => ImpalaDialect.outerSelectOffset(
+          "WITH v AS (SELECT 'a\\'(' c) SELECT c FROM v"), 28),
+      ("outer SELECT: comment",
+        () => ImpalaDialect.outerSelectOffset("-- it's (a, b\nSELECT 1"), 14),
+      ("mask: backtick identifier",
+        () => SqlText.mask("SELECT `sort by (x, y` FROM t"),
+        "SELECT `             ` FROM t"))
+    assertRows(rows)
   }
 
   test("set-op branches with ORDER BY/LIMIT parenthesize; trailing binds to last operand") {

@@ -99,4 +99,21 @@ class ExplainSpec extends SparkSpecBase {
       spark.conf.unset("graft.explain.analyzed")
     }
   }
+
+  test("EXPLAIN plans without AQE and leaves the caller's session conf alone") {
+    GraftSession.registerAll(spark, sfDir)
+    val aqe = "spark.sql.adaptive.enabled"
+    var shared, planning = ""
+    val out = plans.ImpalaExplain.explainSql(spark,
+      "select l_returnflag, count(*) from tpch.lineitem group by l_returnflag",
+      (s, q) => {
+        shared = spark.conf.get(aqe)
+        planning = s.conf.get(aqe)
+        ImpalaDialect.sql(s, q)
+      }).collect().map(_.getString(0))
+    assert(shared == "true", "EXPLAIN wrote the shared session's conf")
+    assert(planning == "false", "the rendered plan must be the static one")
+    assert(out.exists(_.contains("AGGREGATE [FINALIZE]")), out.mkString("\n"))
+    assert(spark.conf.get(aqe) == "true")
+  }
 }

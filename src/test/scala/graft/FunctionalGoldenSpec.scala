@@ -1367,7 +1367,7 @@ class FunctionalGoldenSpec extends SparkSpecBase {
     val schema = spark.table(table).schema
     val colList = colsTxt.split(",").map(_.trim).filter(_.nonEmpty)
     // depth-aware split: spec values may be cast(…) expressions
-    val partEntries = NestedRefs.splitTop(Option(partTxt).getOrElse(""))
+    val partEntries = SqlText.split(Option(partTxt).getOrElse(""))
       .map(_.trim).filter(_.nonEmpty)
     val static = partEntries.filter(_.contains("=")).map { e =>
       val Array(k, v) = e.split("=", 2); k.trim -> v.trim

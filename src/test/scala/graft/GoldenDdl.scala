@@ -1373,7 +1373,7 @@ final class GoldenDdl(spark: SparkSession) {
   }
 
   private def partKey(t: Tbl, specTxt: String): Seq[Option[String]] = {
-    val entries = NestedRefs.splitTop(specTxt)
+    val entries = SqlText.split(specTxt)
       .map(_.trim).filter(_.nonEmpty)
     val m = entries.flatMap { e =>
       val i = e.indexOf('=')
@@ -1487,7 +1487,7 @@ final class GoldenDdl(spark: SparkSession) {
     // (AlterTableDropPartitionStmt accepts both spec and predicate
     // forms); Impala matches the DEFAULT partition on `col=NULL` and
     // `col=''` (empty string maps to the null partition)
-    val pred = NestedRefs.splitTop(predTxt).map(_.trim)
+    val pred = SqlText.split(predTxt).map(_.trim)
       .filter(_.nonEmpty).mkString(" AND ")
       .replaceAll("(?i)=\\s*NULL\\b", " IS NULL")
       .replaceAll("=\\s*''", " IS NULL")
@@ -1601,7 +1601,7 @@ final class GoldenDdl(spark: SparkSession) {
       pred: Option[String]): Unit = {
     val t = tables(name)
     val p = pred.getOrElse("true")
-    val assigns = NestedRefs.splitTop(setTxt).map(_.trim).filter(_.nonEmpty)
+    val assigns = SqlText.split(setTxt).map(_.trim).filter(_.nonEmpty)
       .flatMap { a =>
         val i = a.indexOf('=')
         if (i < 0) None else Some(a.take(i).trim.toLowerCase -> a.drop(i + 1).trim)
@@ -1772,7 +1772,7 @@ final class GoldenDdl(spark: SparkSession) {
     }
     // static entries bind by name; dynamic partition columns take the
     // trailing source columns (InsertStmt.java)
-    val entries = partSpec.map(NestedRefs.splitTop(_)
+    val entries = partSpec.map(SqlText.split(_)
       .map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
     val static = entries.filter(_.contains("=")).map { e =>
       val i = e.indexOf('=')

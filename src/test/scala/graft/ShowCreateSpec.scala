@@ -82,7 +82,7 @@ class ShowCreateSpec extends SparkSpecBase {
     re.r.findFirstMatchIn(s).map(_.group(1))
 
   private def parseCols(txt: String): Seq[ColDef] =
-    NestedRefs.splitTop(txt).map(_.trim).filter(_.nonEmpty).map { it =>
+    SqlText.split(txt).map(_.trim).filter(_.nonEmpty).map { it =>
       val m = """(?is)^([A-Za-z_]\w*)\s+(.+?)(?:\s+COMMENT\s+'([^']*)')?$""".r
         .findFirstMatchIn(it).get
       ColDef(m.group(1), ImpalaMeta.upperTypeSql(DataType.fromDDL(m.group(2))),
