@@ -22,10 +22,8 @@ object Bench {
     (1 to 22).map(i => s"tpch_q$i") ++ Seq(
       "q_events_session", "q_events_tumbling",
       "q_dedup_minhash", "q_dedup_ngram", "q_dedup_simhash",
-      "q_sim_ann", "q_sim_ivf",
-      // persisted-index probes at a listing-free layout (steady-state
-      // probe cost; the build runs in the untimed pass)
-      "q_sim_ann_probe", "q_sim_ivf_probe", "q_sim_ivfpq",
+      "q_sim_ann", "q_sim_ivf", "q_sim_ann_probe", "q_sim_ivf_probe",
+      "q_sim_ivfpq",
       "q_text_stats", "q_lang_id", "q_fingerprint",
       "q_sketch_hll", "q_nested_array_struct", "q_window_running")
 
@@ -78,22 +76,17 @@ object Bench {
     def run(name: String): Unit =
       entry(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
     // one untimed pass over the set: JVM warm-up, codegen compilation,
-    // catalog reads, first-touch IO and the build of each persisted index
-    // (once per JVM, which leaves the index files in page cache) land
-    // here, not in the first timed iteration
+    // catalog reads and first-touch IO land here, not in the first timed
+    // iteration
     present.foreach(n => try run(n) catch { case NonFatal(_) => })
-    // sub-2s probe queries sit near the IO-noise floor: triple the sample
-    // count so min-of-N separates drift from noise
-    def samples(name: String): Int =
-      if (name.contains("_probe") || name == "q_sim_ivfpq") iters * 3 else iters
     // Timed iterations run round-robin: iteration i runs every query once,
     // so each timing sees the codegen, JIT and page caches as the rest of
     // the set left them, not as the same query left them a moment ago.
     // GC before each iteration so one iteration's allocation debt
     // (broadcast blowups, shuffle buffers) isn't billed to the next.
-    val rounds = (0 until present.map(samples).maxOption.getOrElse(0)).map { i =>
+    val rounds = (0 until iters).map { _ =>
       System.gc()
-      present.filter(i < samples(_)).map { name =>
+      present.map { name =>
         val t0 = System.nanoTime()
         try {
           run(name)

@@ -312,12 +312,12 @@ object ImpalaStats {
             .filter(contributing)
             .map(v => st.partRows.getOrElse(v, 0L)).sum
           if (!m.partitions().map(_.values).forall(contributing)) {
-            val marker = " NULL "
-            val keyed = concat_ws("",
+            val marker = "\u0000NULL\u0000"
+            val keyed = concat_ws("\u0001",
               partCols.fields.toSeq.map(f =>
                 coalesce(col(f.name).cast(StringType), lit(marker))): _*)
             val keys = contributing.map(_.map(_.getOrElse(marker))
-              .mkString("")).toSeq
+              .mkString("\u0001")).toSeq
             df = df.where(keyed.isin(keys: _*))
           }
         } else {

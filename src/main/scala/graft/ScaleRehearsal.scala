@@ -68,64 +68,6 @@ object ScaleRehearsal {
       f""""$n":{"t1":$t1%.2f,"t$mult":$tN%.2f,"exponent":$e%.2f}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"dedup_scaling","mult":$mult,"rows_1x":${x1.count()},"pipelines":$json}""")
-
-    // ---- ANN/IVF scaling (r17): index BUILD and steady-state PROBE at
-    // 1× and N× corpus replicas (ids shifted, vectors identical — the
-    // probed cells/buckets carry exactly N× the candidates, so the
-    // exponent isolates the engine). Probe cost at 100 TB is the claim
-    // that matters: partition pruning keeps it proportional to the
-    // probed slice, not the corpus.
-    val emb = GraftSession.table(spark, sfDir, "embeddings")
-      .select("vec_id", "embedding")
-    def replicateEmb(n: Int): DataFrame = {
-      val m = 10000000L
-      (0 until n).map { k =>
-        emb.select((col("vec_id") + lit(k * m)).as("vec_id"), col("embedding"))
-      }.reduce(_ unionAll _)
-    }
-    emb.write.mode("overwrite").parquet(s"$base/e1")
-    replicateEmb(mult).write.mode("overwrite").parquet(s"$base/e$mult")
-    val e1 = spark.read.parquet(s"$base/e1")
-    val eN = spark.read.parquet(s"$base/e$mult")
-    e1.count(); eN.count()
-    import graft.operators.Similarity
-    val qVec = Similarity.queryVector(e1, "vec_id", "embedding", 0L)
-    def annCase(df: DataFrame, tag: String): (Double, Double) = {
-      var index: Similarity.PersistedLsh = null
-      val build = time {
-        index = Similarity.signAndWriteCorpus(df, s"$base/ann_$tag",
-          "vec_id", "embedding", m = 4, tables = 4)
-      }
-      noop(Similarity.annTopKPersisted(spark, index, "vec_id", "embedding",
-        qVec, 0L, 10)) // warm
-      val probe = time(noop(Similarity.annTopKPersisted(spark, index,
-        "vec_id", "embedding", qVec, 0L, 10)))
-      (build, probe)
-    }
-    def ivfCase(df: DataFrame, tag: String): (Double, Double) = {
-      var index: Similarity.PersistedIvf = null
-      val build = time {
-        index = Similarity.ivfWriteCorpus(df, s"$base/ivf_$tag",
-          "vec_id", "embedding", k = 16)
-      }
-      noop(Similarity.ivfTopKPersisted(spark, index, "vec_id", "embedding",
-        qVec, 0L, 10, 4))
-      val probe = time(noop(Similarity.ivfTopKPersisted(spark, index,
-        "vec_id", "embedding", qVec, 0L, 10, 4)))
-      (build, probe)
-    }
-    val (ab1, ap1) = annCase(e1, "x1")
-    val (abN, apN) = annCase(eN, s"x$mult")
-    val (ib1, ip1) = ivfCase(e1, "x1")
-    val (ibN, ipN) = ivfCase(eN, s"x$mult")
-    def ex(t1: Double, tN: Double): Double =
-      math.log(tN / t1) / math.log(mult.toDouble)
-    val annJson =
-      f""""ann_build":{"t1":$ab1%.2f,"t$mult":$abN%.2f,"exponent":${ex(ab1, abN)}%.2f},""" +
-      f""""ann_probe":{"t1":$ap1%.2f,"t$mult":$apN%.2f,"exponent":${ex(ap1, apN)}%.2f},""" +
-      f""""ivf_build":{"t1":$ib1%.2f,"t$mult":$ibN%.2f,"exponent":${ex(ib1, ibN)}%.2f},""" +
-      f""""ivf_probe":{"t1":$ip1%.2f,"t$mult":$ipN%.2f,"exponent":${ex(ip1, ipN)}%.2f}"""
-    println(s"""{"metric":"ann_scaling","mult":$mult,"rows_1x":${e1.count()},"pipelines":{$annJson}}""")
     spark.stop()
   }
 }

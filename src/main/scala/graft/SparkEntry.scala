@@ -60,13 +60,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(d => d.name -> d.fn).toMap
 
-  /** Bench-only entries: approximate-by-design probe layouts whose
-    * selection no SQL oracle can replay (their exactness-gated twins
-    * are `q_sim_ann_persisted`/`q_sim_ivf_persisted`). Benched in
-    * graft.Bench, skipped by graft.Verify's correctness dump.
-    */
-  val benchOnly: Set[String] = Set("q_sim_ann_probe", "q_sim_ivf_probe")
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -11,9 +11,7 @@ object Verify {
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val entry = SparkEntry.queries
-    val (benchOnly, run) = entry.toSeq.filter(kv => keep(kv._1))
-      .partition(kv => SparkEntry.benchOnly(kv._1))
-    val results = run.map { case (name, fn) =>
+    val results = entry.toSeq.filter(kv => keep(kv._1)).map { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -25,9 +23,8 @@ object Verify {
       }
     }
     val tally = Bench.Tally(results,
-      benchOnly.map(_._1 -> "bench-only: no oracle replays its selection") ++
-        filter.getOrElse(Set.empty).diff(entry.keySet).toSeq.sorted
-          .map(_ -> "not in SparkEntry.queries"))
+      filter.getOrElse(Set.empty).diff(entry.keySet).toSeq.sorted
+        .map(_ -> "not in SparkEntry.queries"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -226,11 +226,6 @@ object GraftFunctions {
     "marker_hits" -> (a => MarkerHits(a(0),
       a(1).eval().toString.split(",").toSeq)),
     // vector kernels (graft.operators.Similarity)
-    "lsh_signatures" -> (a => LshSignatures(a(0),
-      a(1).eval().asInstanceOf[Number].intValue,
-      a(2).eval().asInstanceOf[Number].intValue,
-      a(3).eval().asInstanceOf[Number].intValue,
-      a(4).eval().asInstanceOf[Number].longValue)),
     "vec_dot" -> (a => VecDot(a(0), a(1))),
     "vec_cosine" -> (a => VecCosine(a(0), a(1))),
     "vec_norm" -> (a => VecNorm(a.head)),

@@ -89,53 +89,6 @@ case class VecCosine(left: Expression, right: Expression) extends BinaryExpressi
   override def prettyName: String = "vec_cosine"
 }
 
-/** `ivf_assign(vec)` → INT index of the nearest centroid (argmin of
-  * ||v−c||² ≡ argmin(||c||² − 2·c·v)), centroids held once in the
-  * expression — one JVM loop per row, replacing an interpreted
-  * zip_with/transform/array_position pipeline over the whole corpus
-  * (the same HOF→native move as LshSignatures/MinHashSignature).
-  */
-case class IvfAssign(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression {
-  @transient private lazy val cs: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-  @transient private lazy val n2: Array[Double] =
-    cs.map(c => VectorImpl.dot(c, c))
-
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(a: Any): Any =
-    assign(VectorExprs.toArr(child.dataType, a))
-
-  /** Codegen entry. */
-  def assignFor(a: ArrayData): Int =
-    assign(child.dataType match {
-      case ArrayType(FloatType, _) => VectorImpl.arrF(a)
-      case _ => VectorImpl.arrD(a)
-    })
-
-  private def assign(v: Array[Double]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val d = n2(c) - 2.0 * VectorImpl.dot(cs(c), v)
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfExpr", this, classOf[IvfAssign].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.assignFor($c)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): IvfAssign =
-    copy(child = c)
-  override def prettyName: String = "ivf_assign"
-}
-
 /** `vec_norm(a)` → DOUBLE L2 norm. */
 case class VecNorm(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
@@ -147,106 +100,4 @@ case class VecNorm(child: Expression) extends UnaryExpression {
         s"graft.functions.VectorImpl.${VectorExprs.conv(child.dataType)}($c))")
   override protected def withNewChildInternal(c: Expression): VecNorm = copy(c)
   override def prettyName: String = "vec_norm"
-}
-
-/** `pq_encode(vec)` → BINARY: one code byte per subspace — byte `m` is
-  * the index of the nearest codebook centroid for the vector's m-th
-  * contiguous slice. Product quantization (Jégou et al., "Product
-  * Quantization for Nearest Neighbor Search", TPAMI 2011): a D-dim
-  * float vector compresses to M bytes, so a 100 TB embedding corpus
-  * scans as an M-byte-per-row code column while the exact vectors stay
-  * in the source table for candidate re-ranking. One JVM loop per row,
-  * codegen-friendly via the same reference-object pattern as
-  * [[IvfAssign]].
-  */
-case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
-  @transient private lazy val cb: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-  // per-centroid squared norms: argmin ||s-c||² ≡ argmin(||c||² - 2 c·s)
-  @transient private lazy val n2: Array[Array[Double]] =
-    cb.map(_.map(c => VectorImpl.dot(c, c)))
-
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(a: Any): Any =
-    encode(VectorExprs.toArr(child.dataType, a))
-
-  /** Codegen entry. */
-  def encodeFor(a: ArrayData): Array[Byte] =
-    encode(child.dataType match {
-      case ArrayType(FloatType, _) => VectorImpl.arrF(a)
-      case _ => VectorImpl.arrD(a)
-    })
-
-  private def encode(v: Array[Double]): Array[Byte] = {
-    val m = cb.length
-    val dsub = v.length / m
-    val out = new Array[Byte](m)
-    var s = 0
-    while (s < m) {
-      val off = s * dsub
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cb(s).length) {
-        val cc = cb(s)(c)
-        var dot = 0.0
-        var i = 0
-        while (i < dsub) { dot += cc(i) * v(off + i); i += 1 }
-        val d = n2(s)(c) - 2.0 * dot
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      out(s) = best.toByte
-      s += 1
-    }
-    out
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqExpr", this, classOf[PqEncode].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.encodeFor($c)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): PqEncode =
-    copy(child = c)
-  override def prettyName: String = "pq_encode"
-}
-
-/** `pq_adc(codes)` → DOUBLE: the query's asymmetric-distance lookup —
-  * Σ over subspaces of `lut(m)(code_m)`, where the LUT holds the query
-  * subvector · centroid inner products (built once driver-side per
-  * query: M × ksub doubles). Each corpus row pays M byte-indexed table
-  * lookups — no float vector is read at scan time.
-  */
-case class PqAdc(child: Expression, lut: Seq[Seq[Double]])
-    extends UnaryExpression {
-  @transient private lazy val t: Array[Array[Double]] =
-    lut.map(_.toArray).toArray
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any): Any =
-    score(a.asInstanceOf[Array[Byte]])
-
-  /** Codegen entry. */
-  def score(codes: Array[Byte]): Double = {
-    var s = 0.0
-    var m = 0
-    while (m < codes.length) {
-      s += t(m)(codes(m) & 0xff)
-      m += 1
-    }
-    s
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("adcExpr", this, classOf[PqAdc].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.score($c)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): PqAdc =
-    copy(child = c)
-  override def prettyName: String = "pq_adc"
 }

@@ -202,7 +202,7 @@ object Dedup {
   /** Exact n-gram Jaccard over every pair of a corpus slice. O(n²)
     * pairs: this is the verification-grade kernel for a *blocked*
     * candidate set — at 100 TB the pair space must be pruned first
-    * (LSH bands, [[ngramJaccardPairs]]' inverted index, or IVF cells);
+    * (LSH bands or [[ngramJaccardPairs]]' inverted index);
     * here the blocking predicate is the caller's id bound.
     */
   def jaccardPairsExact(df: DataFrame, idCol: String, textCol: String,
@@ -220,8 +220,8 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs, exact: norms once per row
     * (map-side, no shuffle), then a pair join verified by the native
-    * dot kernel. The pair space is O(n²) — use [[embedDupPairsIvf]]
-    * to block by coarse-quantizer cell at scale.
+    * dot kernel. The pair space is O(n²): every pair is scored, so the
+    * answer is exact on any data.
     */
   def embedDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
@@ -230,28 +230,6 @@ object Dedup {
     w.select(col("id").as("id1"), col("v").as("v1"), col("nrm").as("n1"))
       .join(w.select(col("id").as("id2"), col("v").as("v2"),
         col("nrm").as("n2")), col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        (call_function("vec_dot", col("v1"), col("v2")) /
-          (col("n1") * col("n2"))).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-  }
-
-  /** Embedding near-dup at scale: block pairs by IVF cell (each vector
-    * joins only within its own coarse-quantizer cell), then exact-verify
-    * with the dot kernel. Equi-join on `ivf_cell` shuffles each cell's
-    * vectors together — pair work drops from O(n²) to Σ|cell|²; recall
-    * vs [[embedDupPairs]] is asserted in OperatorsSpec.
-    */
-  def embedDupPairsIvf(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, k: Int = 16): DataFrame = {
-    val (indexed, _) = Similarity.ivfIndex(df, idCol, vecCol, k)
-    val w = indexed.select(col(idCol).as("id"), col(vecCol).as("v"),
-      col("ivf_cell"), call_function("vec_norm", col(vecCol)).as("nrm"))
-    w.select(col("ivf_cell"), col("id").as("id1"), col("v").as("v1"),
-        col("nrm").as("n1"))
-      .join(w.select(col("ivf_cell"), col("id").as("id2"),
-        col("v").as("v2"), col("nrm").as("n2")), Seq("ivf_cell"))
-      .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
         (call_function("vec_dot", col("v1"), col("v2")) /
           (col("n1") * col("n2"))).as("cos_sim"))

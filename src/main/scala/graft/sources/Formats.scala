@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
   *
   *  - Impala TEXT tables (`be/src/exec/hdfs-text-scanner.h:49`, writer
   *    `hdfs-text-table-writer.h:43`): delimited text, default field
-  *    terminator Ctrl-A (), `\N` for NULL, no header, no quoting —
+  *    terminator Ctrl-A, `\N` for NULL, no header, no quoting —
   *    [[readTextTable]]/[[writeTextTable]] set those defaults so a file
   *    written by the reference round-trips.
   *  - CSV with explicit delimiter/escape (the `FIELDS TERMINATED BY`
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   */
 object Formats {
 
-  val ImpalaFieldDelim = ""
+  val ImpalaFieldDelim = "\u0001"
   val ImpalaNullMarker = "\\N"
 
   private def textReader(spark: SparkSession, delim: String): DataFrameReader =

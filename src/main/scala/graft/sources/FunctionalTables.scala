@@ -640,7 +640,7 @@ object FunctionalTables {
     val grep = refRoot.resolve("hive_benchmark/grepTiny/part-00000")
     if (java.nio.file.Files.isRegularFile(grep)) {
       val sch = StructType.fromDDL("field string")
-      mk(loadTextSerde(grep, sch, delim = ""), sch, "greptiny")
+      mk(loadTextSerde(grep, sch, delim = "\u0001"), sch, "greptiny")
     }
     val charsPq = refRoot.resolve("data/chars-formats.parquet")
     if (java.nio.file.Files.isRegularFile(charsPq)) {

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
 
 import graft.functions.CollectCapped
-import graft.operators.Similarity
 
 /** Plan-shape assertions for the 100 TB design goals: filters and
   * projections reach the parquet scan, small dimensions broadcast,
@@ -120,60 +119,6 @@ class PlanSpec extends SparkSpecBase {
     // so the take-ordered happens below the window
     assert(push.contains("TakeOrderedAndProject") ||
       push.contains("WindowGroupLimit"), push)
-  }
-
-  test("persisted ANN probe reads only probed (tbl, bucket) partitions") {
-    val emb = GraftSession.table(spark, sfDir, "embeddings")
-    val index = Similarity.cachedLsh(spark, sfDir, "embeddings", "vec_id",
-      "embedding", m = 6, tables = 12)
-    val probe = Similarity.annTopKPersisted(spark, index, "vec_id",
-      "embedding", Similarity.queryVector(emb, "vec_id", "embedding", 0L),
-      excludeId = 0L, k = 10)
-    // the probe predicate must reach the scan as a partition filter …
-    val p = probe.queryExecution.explainString(
-      ExplainMode.fromString("formatted"))
-    assert(p.contains("PartitionFilters") && p.contains("tbl") &&
-      p.contains("bucket"), p)
-    // … and actually skip files: ≤ tables·(m+1) = 84 of the up-to-768
-    // (tbl, bucket) partitions may be read.
-    assertPrunedScan(probe, index.path)
-  }
-
-  test("persisted IVF probe reads only the nprobe of k cell partitions") {
-    val emb = GraftSession.table(spark, sfDir, "embeddings")
-    val index = Similarity.cachedIvf(spark, sfDir, "embeddings", "vec_id",
-      "embedding", k = 16)
-    val probe = Similarity.ivfTopKPersisted(spark, index, "vec_id",
-      "embedding", Similarity.queryVector(emb, "vec_id", "embedding", 0L),
-      excludeId = 0L, k = 10, nprobe = 6)
-    // the cell predicate must reach the scan as a partition filter …
-    val p = probe.queryExecution.explainString(
-      ExplainMode.fromString("formatted"))
-    assert(p.contains("PartitionFilters") && p.contains("ivf_cell"), p)
-    // … and actually skip files: only the 6 probed of 16 cell
-    // partitions may be read.
-    assertPrunedScan(probe, index.path)
-  }
-
-  test("q_sim_ivf_probe and q_sim_ivf_persisted probe one IVF index") {
-    // identical k=16 builds under two names used to write the corpus
-    // twice; both now resolve to the one cached handle
-    val index = Similarity.cachedIvf(spark, sfDir, "embeddings", "vec_id",
-      "embedding", k = 16)
-    Seq("q_sim_ivf_probe", "q_sim_ivf_persisted").foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      df.collect()
-      assert(scannedPaths(df) == Seq(index.path), s"$n scans ${scannedPaths(df)}")
-    }
-  }
-
-  test("ad-hoc ANN probe predicate is HOF-free (native array_contains only)") {
-    val p = plan("q_sim_ann")
-    // the round-3 form evaluated transform(sequence(0,m),…) per corpus
-    // row — tables·(m+1) interpreted lambda evals each; the probe arrays
-    // must now come precomputed from the broadcast query row
-    assert(!p.contains("transform(") && !p.contains("sequence("), p)
-    assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"), p)
   }
 
   test("dedup bucket pipeline shuffles only compact key tuples") {

@@ -165,4 +165,22 @@ class SurfaceSpec extends SparkSpecBase {
     assert(hits.map(_.getFileName.toString) == Seq("GraftSession.scala"),
       hits.mkString(", "))
   }
+
+  test("no source file under src/ holds a raw control byte") {
+    // git diffs a file with a NUL byte as binary; a control character in
+    // a literal belongs in a unicode escape
+    val root = java.nio.file.Paths.get("src")
+    assert(Files.isDirectory(root), "run from the repository root")
+    val files = scala.util.Using.resource(Files.walk(root))(
+      _.iterator.asScala.filter(Files.isRegularFile(_)).toList)
+    val hits = files.flatMap { p =>
+      val lines = new String(Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.ISO_8859_1).split("\n", -1)
+      lines.zipWithIndex.collect {
+        case (l, i) if l.exists(c => c < ' ' && c != '\t' && c != '\r') =>
+          s"$p:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
 }
