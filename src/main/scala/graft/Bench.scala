@@ -39,10 +39,10 @@ object Bench {
       */
     def total: Double = if (failed.nonEmpty) -1.0 else times.map(_._2).sum
 
-    /** One counts line on stderr, then one line per failed or skipped name
-      * and per query group that registered no queries. `compiled` counts
-      * the generated classes the JVM compiled (one run per JVM): a codegen
-      * cache too small for the run's working set shows as a jump here.
+    /** One counts line on stderr, then one line per failed or skipped
+      * name. `compiled` counts the generated classes the JVM compiled (one
+      * run per JVM): a codegen cache too small for the run's working set
+      * shows as a jump here.
       */
     def report(tag: String): Unit = {
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -51,11 +51,6 @@ object Bench {
       failed.foreach(n => System.err.println(s"[$tag] failed: $n"))
       skipped.foreach { case (n, why) =>
         System.err.println(s"[$tag] skipped: $n ($why)")
-      }
-      SparkEntry.emptyGroups.foreach { case (g, missing) =>
-        val why =
-          if (missing.isEmpty) "no input missing" else missing.mkString("missing ", ", ", "")
-        System.err.println(s"[$tag] empty group: $g ($why)")
       }
     }
   }

@@ -14,13 +14,6 @@ object SparkEntry {
   private def groups: Seq[QueryGroup] = Seq(
     CoreQueries,
     TpchQueries,
-    GoldenQueries,
-    GoldenNestedQueries,
-    GoldenNestedMaskedQueries,
-    NestedFunctionalQueries,
-    NestedSubplanQueries,
-    TpcdsGoldenQueries,
-    TpcdsAnalyticQueries,
     TpcdsQueries,
     JoinQueries,
     SetOpQueries,
@@ -34,23 +27,22 @@ object SparkEntry {
     SketchQueries,
   )
 
-  private lazy val byGroup: Seq[(QueryGroup, Seq[Q.Def])] =
-    groups.map(g => g -> g.defs)
+  lazy val all: Seq[Q.Def] = defsOf(groups)
 
-  lazy val all: Seq[Q.Def] = {
+  /** Every group's queries. A group is a fixed set of queries over the
+    * repo's own fixtures, so an empty one is a bug: it would shrink the
+    * oracle count without a word.
+    */
+  private[graft] def defsOf(gs: Seq[QueryGroup]): Seq[Q.Def] = {
+    val byGroup = gs.map(g => g -> g.defs)
+    val empty = byGroup.collect { case (g, Seq()) =>
+      g.getClass.getSimpleName.stripSuffix("$") }
+    require(empty.isEmpty, s"query groups with no queries: ${empty.mkString(",")}")
     val ds = byGroup.flatMap(_._2)
     val dup = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dup.isEmpty, s"duplicate query names: ${dup.mkString(",")}")
     ds
   }
-
-  /** Each group that registered no queries, by name, with the inputs it
-    * found missing (none listed: the group is empty for another reason).
-    */
-  lazy val emptyGroups: Seq[(String, Seq[java.nio.file.Path])] =
-    byGroup.collect { case (g, Seq()) =>
-      g.getClass.getSimpleName.stripSuffix("$") -> g.missingInputs
-    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -11,16 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Double-precision dot product of two array columns, evaluated
-    * strictly in index order (deterministic) by the native
-    * [[graft.functions.VecDot]] kernel — one JVM loop per row instead of
-    * a zip_with+aggregate lambda pipeline (matters when cosine runs over
-    * millions of candidate pairs).
-    */
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  def l2Norm(a: Column): Column = call_function("vec_norm", a)
-
   def cosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
 
   /** Brute-force cosine top-k against one query vector (taken from the

@@ -94,15 +94,6 @@ object Q {
 trait QueryGroup {
   def defs: Seq[Q.Def]
 
-  /** Inputs outside the repository the group's queries are read from. A
-    * group registers no queries while one is missing, and
-    * [[graft.SparkEntry.emptyGroups]] names it.
-    */
-  def inputs: Seq[java.nio.file.Path] = Nil
-
-  final def missingInputs: Seq[java.nio.file.Path] =
-    inputs.filterNot(java.nio.file.Files.exists(_))
-
   /** Fixture table `n` of the data dir (memoised by [[graft.GraftSession.table]]). */
   protected def t(s: SparkSession, dir: String, n: String): DataFrame =
     graft.GraftSession.table(s, dir, n)

@@ -1657,7 +1657,7 @@ class FunctionalGoldenSpec extends SparkSpecBase {
     // tpch_nested_parquet. customer/region/supplier resolve to the
     // derived nested catalog (parquet-filtering's nested blocks),
     // whose top-level columns equal the flat views
-    sources.NestedTpchTables.register(spark, "/root/testdata/sf0.01")
+    NestedTpchTables.register(spark, "/root/testdata/sf0.01")
     var pass = 0
     var skip = 0
     var errorSkip = 0

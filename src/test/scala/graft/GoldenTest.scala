@@ -1,21 +1,18 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
-/** Runner for the reference's golden `.test` workload files
+/** Parser for the reference's golden `.test` workload files
   * (`testdata/workloads/...`, format per
   * `tests/common/impala_test_suite.py`): `====`-delimited sections,
   * each with a `---- QUERY[: name]` block of Impala SQL and further
   * `---- <SECTION>` blocks (RESULTS, TYPES, CATCH, LABELS, …).
   *
-  * The QUERY text is executed VERBATIM through [[ImpalaDialect.sql]] —
-  * the run-rate counterpart to DialectCorpusSpec's parse rate. TPC-H/DS
-  * goldens are value-verified through the driver's DuckDB oracle over a
-  * substituted fixture (their RESULTS are bound to reference-scale
-  * loads that cannot be materialized here); functional-query goldens
-  * over the deterministic alltypes tables are verified DIRECTLY against
-  * their `---- RESULTS` rows ([[GoldenResult]],
-  * graft.sources.FunctionalTables).
+  * FunctionalGoldenSpec executes the QUERY text VERBATIM through
+  * [[ImpalaDialect.sql]] over the deterministic alltypes tables
+  * (graft.sources.FunctionalTables) and checks it DIRECTLY against its
+  * `---- RESULTS` rows ([[GoldenResult]]); LineageSpec reads
+  * `lineage.test` with it.
   */
 object GoldenTest {
 
@@ -89,31 +86,6 @@ object GoldenTest {
   def load(path: Path): Seq[Case] =
     parse(new String(Files.readAllBytes(path),
       java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Reference workload dir (absent outside the build sandbox — callers
-    * must guard on [[available]]).
-    */
-  val tpchQueryDir: Path = Paths.get(
-    sys.env.getOrElse("GRAFT_GOLDEN_TPCH_DIR",
-      "/root/reference/testdata/workloads/tpch/queries"))
-
-  def available: Boolean = Files.isDirectory(tpchQueryDir)
-
-  /** First QUERY section of `tpch-qN.test`. */
-  def tpchCase(n: Int): Case =
-    load(tpchQueryDir.resolve(s"tpch-q$n.test")).head
-
-  /** The nested-schema TPC-H workload (`tpch_nested-qN.test`, runner
-    * `tests/query_test/test_tpch_nested_queries.py`).
-    */
-  val tpchNestedQueryDir: Path = Paths.get(
-    sys.env.getOrElse("GRAFT_GOLDEN_TPCH_NESTED_DIR",
-      "/root/reference/testdata/workloads/tpch_nested/queries"))
-
-  def nestedAvailable: Boolean = Files.isDirectory(tpchNestedQueryDir)
-
-  def tpchNestedCase(n: Int): Case =
-    load(tpchNestedQueryDir.resolve(s"tpch_nested-q$n.test")).head
 }
 
 /** Golden `---- RESULTS` comparator mirroring

@@ -1,6 +1,6 @@
-package graft.sources
+package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
@@ -17,11 +17,8 @@ import org.apache.spark.sql.SparkSession
   *     ps_availqty,ps_supplycost,ps_comment>>`;
   *   - `part` stays flat.
   *
-  * Source data is the same substituted flat catalog the verbatim golden
-  * TPC-H gate runs on (graft.queries.GoldenQueries) — so every nested
-  * query's results must equal its flat counterpart's, which is exactly
-  * how the driver's DuckDB oracle verifies them (the oracle replays the
-  * FLAT golden SQL over the raw parquet).
+  * Source data is the substituted flat catalog ([[TpchSubstitutions]]),
+  * so every nested query's results equal its flat counterpart's.
   *
   * Dates ride as STRING inside the nested structs, mirroring
   * load_nested.py's schema (predicates compare lexicographically, which
@@ -29,17 +26,16 @@ import org.apache.spark.sql.SparkSession
   * ('YYYY-MM-DD', as load_nested's source data renders) — boundary
   * predicates like `l_shipdate <= '1998-09-02'` must admit the boundary
   * day, which a 'YYYY-MM-DD HH:MM:SS' rendering would lexicographically
-  * exclude. Date-valued OUTPUT columns are normalized oracle-side via
-  * goldenDefVia's dateCols. Customers/orders/suppliers with no
+  * exclude. Customers/orders/suppliers with no
   * children carry EMPTY arrays — load_nested's RIGHT JOIN + text load
   * yields NULL collections instead, but every gated query treats the
   * two identically (LEFT JOIN counts 0, EXISTS false), and the
   * null-safe HOF rewrites in graft.NestedRefs handle both.
   *
-  * Built once per fixture dir and persisted as parquet (customer
-  * bucket-free single write; two shuffles — group lineitems by order,
-  * orders by customer — the same shape load_nested.py uses, which
-  * partitions and scales linearly on a cluster).
+  * Built once per fixture dir and JVM into a fresh temp dir as parquet
+  * (customer bucket-free single write; two shuffles — group lineitems
+  * by order, orders by customer — the same shape load_nested.py uses,
+  * which partitions and scales linearly on a cluster).
   */
 object NestedTpchTables {
 
@@ -52,41 +48,31 @@ object NestedTpchTables {
       |l_shipinstruct: STRING, l_shipmode: STRING, l_comment: STRING>>"""
       .stripMargin.replace("\n", " ")
 
+  /** fixture dir -> the temp dir its nested tables were built into */
+  private val built = scala.collection.mutable.Map.empty[String, String]
+
   /** Register the nested catalog over a fixture dir: flat substituted
-    * views first (GoldenQueries), then customer/region/supplier
-    * replaced by their nested forms read from the per-dir parquet
-    * build (created on first use).
+    * views first ([[TpchSubstitutions]]), then customer/region/supplier
+    * replaced by their nested forms read from the parquet build (created
+    * on the JVM's first use of the dir).
     */
   def register(spark: SparkSession, dir: String): Unit = synchronized {
-    graft.queries.GoldenQueries.register(spark, dir)
-    val leaf = Paths.get(dir).getFileName.toString
-    // cache key carries the fixture path + the build SQL + the UPSTREAM
-    // flat substitution SQL (the build reads the substituted views, so
-    // an edit there must also invalidate this cache): a derivation edit
-    // at either layer (or a leaf-name collision between fixture dirs)
-    // rebuilds automatically instead of serving stale nested parquet
-    val fp = graft.queries.Sub.fingerprint(
-      dir +: (buildSqls.map(t => t._1 + t._2) ++
-        graft.queries.GoldenQueries.catalog.subs.map(s => s.table + s.sparkSql)))
-    val root = s"/tmp/graft_tpch_nested/$leaf-$fp"
-    if (!Files.exists(Paths.get(root, "_SUCCESS_ALL"))) {
-      build(spark, root)
-      Files.createFile(Paths.get(root, "_SUCCESS_ALL"))
-    }
+    TpchSubstitutions.register(spark, dir)
+    val root = built.getOrElseUpdate(dir, build(spark))
     Seq("customer", "region", "supplier").foreach { t =>
       spark.read.parquet(s"$root/$t").createOrReplaceTempView(t)
     }
   }
 
-  private def build(spark: SparkSession, root: String): Unit = {
-    Files.createDirectories(Paths.get(root))
+  private def build(spark: SparkSession): String = {
+    val root = Files.createTempDirectory("graft-tpch-nested").toString
     buildSqls.foreach { case (table, sql) =>
-      spark.sql(sql).write.mode("overwrite").parquet(s"$root/$table")
+      spark.sql(sql).write.parquet(s"$root/$table")
     }
+    root
   }
 
-  /** table -> derivation SQL, in build order (also the cache-key
-    * fingerprint input — see [[register]]). */
+  /** table -> derivation SQL, in build order. */
   private def buildSqls: Seq[(String, String)] = Seq(
     "customer" ->
       s"""WITH li AS (

@@ -127,9 +127,15 @@ class SurfaceSpec extends SparkSpecBase {
     assert(Bench.Tally(Seq("a" -> 1.5, "c" -> 0.5), Nil).total == 2.0)
   }
 
-  test("every query group that registers no queries names a missing input") {
-    val unexplained = SparkEntry.emptyGroups.collect { case (g, Seq()) => g }
-    assert(unexplained.isEmpty, unexplained.mkString(", "))
+  test("the query registry refuses an empty group and a duplicate name") {
+    val empty = new queries.QueryGroup { def defs: Seq[queries.Q.Def] = Nil }
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.defsOf(Seq(queries.CoreQueries, empty)))
+    assert(e.getMessage.contains("query groups with no queries"), e.getMessage)
+    val d = intercept[IllegalArgumentException](
+      SparkEntry.defsOf(Seq(queries.CoreQueries, queries.CoreQueries)))
+    assert(d.getMessage.contains("duplicate query names"), d.getMessage)
+    assert(SparkEntry.defsOf(Seq(queries.CoreQueries)).nonEmpty)
   }
 
   test("TPC-H 1-22 reuses its generated classes in a second pass") {

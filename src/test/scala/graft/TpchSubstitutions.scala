@@ -1,15 +1,12 @@
-package graft.queries
+package graft
 
-import graft.GoldenTest
 import org.apache.spark.sql.SparkSession
 
-/** The reference's golden TPC-H `.test` queries executed VERBATIM
-  * (`testdata/workloads/tpch/queries/tpch-q*.test`, runner
-  * `tests/common/impala_test_suite.py`) over the driver fixture, with
-  * the fixture's missing TPC-H columns supplied by deterministic
-  * substitution views — the text of each view is plain ANSI SQL that
-  * runs identically in Spark and DuckDB, so the driver's oracle gate
-  * value-verifies the reference SQL end-to-end on identical data.
+/** The substituted flat TPC-H catalog FunctionalGoldenSpec runs the
+  * reference's `tpch.`-prefixed functional queries over: the fixture's
+  * missing TPC-H columns supplied by deterministic substitution views
+  * (plain ANSI SQL over the raw fixture tables), and the base of
+  * [[NestedTpchTables]].
   *
   * Substitutions (all keyed on existing integer columns, documented
   * deltas from the real TPC-H generator):
@@ -25,29 +22,19 @@ import org.apache.spark.sql.SparkSession
   *   - orders.o_shippriority/o_comment, lineitem.l_shipmode/
   *     l_shipinstruct/l_commitdate/l_receiptdate → deterministic buckets
   *   - partsupp → distinct (l_partkey, l_suppkey) with min sale price as
-  *     ps_supplycost (exact DECIMAL — no division, keeping both engines
-  *     bit-identical) and a count-derived ps_availqty
+  *     ps_supplycost and a count-derived ps_availqty
   *   - all dates shifted back 730 days (fixture spans 1995-2001; the
   *     golden queries' literal windows span 1993-1998)
-  *   - money columns served as DECIMAL(12,2) so sums are exact and
-  *     order-independent in both engines (Q.scala parity rules)
-  *
-  * All 22 queries are oracle-gated. q1/q8/q14/q17's decimal
-  * avg/division outputs — where Spark returns exact DECIMAL at its
-  * scale rules and DuckDB DOUBLE — are pinned to DECIMAL(38,6) on both
-  * engines (goldenDefVia decimalCols), comparing the value rather than
-  * the representation.
+  *   - money columns served as DECIMAL(12,2)
   */
-object GoldenQueries extends QueryGroup {
+object TpchSubstitutions {
 
   private val colorCase =
     """CASE (%s %% 7) WHEN 0 THEN 'forest' WHEN 1 THEN 'green'
       |  WHEN 2 THEN 'red' WHEN 3 THEN 'blue' WHEN 4 THEN 'ivory'
       |  WHEN 5 THEN 'navy' ELSE 'misty' END""".stripMargin
 
-  /** tableName → substitution SELECT over the raw fixture table; the
-    * SQL is dual-dialect (Spark temp view AND DuckDB CTE, verbatim).
-    */
+  /** tableName → substitution SELECT over the raw fixture tables. */
   val substitutions: Seq[(String, String)] = Seq(
     "nation" ->
       """SELECT n_nationkey,
@@ -154,31 +141,16 @@ object GoldenQueries extends QueryGroup {
         |GROUP BY l_partkey, l_suppkey""".stripMargin,
   )
 
-  /** Shared dual-engine catalog (`region` is served raw — its fixture
-    * values are already the spec names).
+  /** Register the fixture tables, then the substitutions as temp views
+    * under the target names (`region` is served raw: its fixture values
+    * are already the spec names). Every derivation frame is resolved
+    * against the RAW fixture views first (DataFrames hold resolved
+    * plans), then the views are replaced, so substitutions never see
+    * each other.
     */
-  val catalog = new SubstitutionCatalog(
-    substitutions.map { case (n, sql) => Sub(n, sql) })
-
-  def register(spark: SparkSession, dir: String): Unit =
-    catalog.register(spark, dir)
-
-  def oracleSql(goldenQuery: String): String = catalog.oracleSql(goldenQuery)
-
-  /** Golden queries in the driver oracle gate: ALL 22 — q1/q8/q14/q17's
-    * avg / decimal-division output columns pin both engines to
-    * DECIMAL(38,6) instead of DOUBLE (Spark computes them as exact
-    * decimals at scale 6, DuckDB as DOUBLE; rounding both to the same
-    * scale compares the value, not the representation).
-    */
-  val oracleGated: Seq[Int] = (1 to 22)
-
-  override def inputs: Seq[java.nio.file.Path] = Seq(GoldenTest.tpchQueryDir)
-
-  def defs: Seq[Q.Def] =
-    if (missingInputs.nonEmpty) Seq.empty
-    else oracleGated.map { n =>
-      catalog.goldenDef(s"golden_q$n", GoldenTest.tpchCase(n),
-        GoldenNestedQueries.decimalOverrides.getOrElse(n, Map.empty))
-    }
+  def register(spark: SparkSession, dir: String): Unit = {
+    GraftSession.registerAll(spark, dir)
+    val frames = substitutions.map { case (n, sql) => n -> spark.sql(sql) }
+    frames.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+  }
 }
