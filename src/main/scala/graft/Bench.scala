@@ -28,10 +28,13 @@ object Bench {
       "q_sketch_hll", "q_nested_array_struct", "q_window_running")
 
   /** Run accounting shared by Bench and Verify: each attempted query's
-    * seconds (-1.0 when it failed) and each skipped name with the reason.
+    * seconds (-1.0 when it failed), each skipped name with the reason,
+    * and, for each query that was built, whether it took the small path
+    * ([[GraftSession.route]]).
     */
   private[graft] final case class Tally(
-      times: Seq[(String, Double)], skipped: Seq[(String, String)]) {
+      times: Seq[(String, Double)], skipped: Seq[(String, String)],
+      smallPath: Map[String, Boolean] = Map.empty) {
     val failed: Seq[String] = times.collect { case (n, t) if t < 0 => n }
 
     /** Sum over every attempted query, or the per-query failure sentinel
@@ -40,14 +43,16 @@ object Bench {
     def total: Double = if (failed.nonEmpty) -1.0 else times.map(_._2).sum
 
     /** One counts line on stderr, then one line per failed or skipped
-      * name. `compiled` counts the generated classes the JVM compiled (one
-      * run per JVM): a codegen cache too small for the run's working set
-      * shows as a jump here.
+      * name. `small` and `adaptive` count the built queries on each
+      * execution path. `compiled` counts the generated classes the JVM
+      * compiled (one run per JVM): a codegen cache too small for the
+      * run's working set shows as a jump here.
       */
     def report(tag: String): Unit = {
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       System.err.println(s"[$tag] attempted=${times.size} failed=${failed.size} " +
-        s"skipped=${skipped.size} compiled=$compiled")
+        s"skipped=${skipped.size} small=${smallPath.count(_._2)} " +
+        s"adaptive=${smallPath.count(!_._2)} compiled=$compiled")
       failed.foreach(n => System.err.println(s"[$tag] failed: $n"))
       skipped.foreach { case (n, why) =>
         System.err.println(s"[$tag] skipped: $n ($why)")
@@ -68,8 +73,12 @@ object Bench {
     val keep: String => Boolean =
       if (args.nonEmpty) args(0).split(",").toSet else (_ => true)
     val (present, missing) = headline.filter(keep).partition(entry.contains)
-    def run(name: String): Unit =
-      entry(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    val smallPath = scala.collection.mutable.Map[String, Boolean]()
+    def run(name: String): Unit = {
+      val df = entry(name)(spark, sfDir)
+      smallPath(name) = GraftSession.onSmallPath(df)
+      df.write.format("noop").mode("overwrite").save()
+    }
     // one untimed pass over the set: JVM warm-up, codegen compilation,
     // catalog reads and first-touch IO land here, not in the first timed
     // iteration
@@ -98,7 +107,8 @@ object Bench {
       val times = sampled(name)
       name -> (if (times.contains(-1.0)) -1.0 else times.min)
     }
-    val tally = Tally(results, missing.map(_ -> "not in SparkEntry.queries"))
+    val tally = Tally(results, missing.map(_ -> "not in SparkEntry.queries"),
+      smallPath.toMap)
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")

@@ -1,18 +1,33 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode}
+import org.apache.spark.sql.graft.Bridge
 
 /** Session bootstrap for the graft engine.
   *
   * Mirrors the reference's performance-relevant session defaults
   * (Apache Impala fork — see SURVEY.md §4/§6,
   * `common/thrift/ImpalaInternalService.thrift`) with Spark-native
-  * equivalents: AQE for runtime re-planning. CBO join reorder (after
-  * the planner's greedy join ordering,
-  * `fe/.../planner/SingleNodePlanner.java:495`) and runtime bloom
-  * filters (after Impala's runtime-filter propagation,
+  * equivalents. CBO join reorder (after the planner's greedy join
+  * ordering, `fe/.../planner/SingleNodePlanner.java:495`) and runtime
+  * bloom filters (after Impala's runtime-filter propagation,
   * `fe/.../planner/RuntimeFilterGenerator.java`) are switched on, but
   * neither changes a plan at the input sizes used here (see [[tune]]).
+  *
+  * Every query of [[SparkEntry.queries]] takes one of two execution
+  * paths, chosen per query by [[route]] from its estimated input size,
+  * after Impala's small-query rule (`Planner.checkForSmallQueryOptimization`
+  * runs a query on one node, without exchanges, under
+  * `EXEC_SINGLE_NODE_ROWS_THRESHOLD`):
+  *   - the adaptive path: the caller's session, where AQE re-plans at
+  *     runtime (the Spark analog of Impala's distributed cost model,
+  *     `DistributedPlanner.java:479-575`);
+  *   - the small path: a companion of the caller's session with AQE off
+  *     and one shuffle partition, so a small query plans once and runs
+  *     as few jobs and tasks as its exchanges allow.
+  * No session-wide setting changes per query: concurrent clients of one
+  * session each get their own query's path.
   */
 object GraftSession {
 
@@ -27,9 +42,10 @@ object GraftSession {
     * [[tune]] applied before the caller sees the session. Cores default
     * to `SPARK_GRAFT_CPUS`, then to the machine's processor count.
     *
-    * Each session gets a fresh temp warehouse dir: DDL-running callers
-    * create real tables, and a stale ./spark-warehouse from a previous
-    * run would fail CREATE TABLE with LOCATION_ALREADY_EXISTS.
+    * Each session gets a fresh temp warehouse dir ([[tempDir]]):
+    * DDL-running callers create real tables, and a stale
+    * ./spark-warehouse from a previous run would fail CREATE TABLE with
+    * LOCATION_ALREADY_EXISTS.
     */
   def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
@@ -37,11 +53,96 @@ object GraftSession {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft-wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
+  }
+
+  /** A fresh directory under `java.io.tmpdir`, named `<prefix>-<uuid>`,
+    * that is deleted with its contents when the JVM exits (Spark's
+    * shutdown-hook delete). Every temp dir the engine makes comes from
+    * here, so a run leaves nothing behind in the temp dir.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = Bridge.tempDir(prefix)
+
+  /** Estimated input bytes at or under which a query takes the small
+    * path. Estimates are the planner's `sizeInBytes`, which scales file
+    * bytes by `fileCompressionFactor` (4.0, see [[tune]]), so 32 MB of
+    * estimate is 8 MB of files. The 38 headline queries at sf0.01
+    * estimate at most 9.1 MB (tpch_q21). TPC-H on perfbench's 10x
+    * replica estimates 12.5 MB (q13) and 13.6 MB (q22), then 47-61 MB,
+    * then 94-105 MB (q11, q15, q17, q21). With every 10x query on the
+    * small path, q3, q17, q18 and q21 (59 MB and up) ran 10-18% slower:
+    * one task then does shuffle work that AQE spreads over every core.
+    * Paired `tpch-x10` runs at 10, 32, 50 and 59 MB could not tell the
+    * candidates apart within their run-to-run spread (sweep table in
+    * CHANGES.md), so the threshold sits between the two clusters: 3.5x
+    * the largest headline estimate, under every 10x query but q13 and
+    * q22.
+    */
+  private[graft] val SmallQueryBytes: Long = 32L << 20
+
+  /** The planner's estimate of a query's input: `sizeInBytes` summed
+    * over the leaves of its analyzed plan, subqueries included. A CTE
+    * reference counts as nothing: the leaves of its definition are in
+    * the plan too (before inlining, a reference reports Long.MaxValue).
+    * A leaf of unknown size (an RDD, a source without statistics)
+    * reports `spark.sql.defaultSizeInBytes`, Long.MaxValue by default,
+    * which keeps the query off the small path. None when a leaf cannot
+    * estimate at all.
+    */
+  def estimatedInputBytes(df: DataFrame): Option[BigInt] =
+    try Some(df.queryExecution.analyzed.collectWithSubqueries {
+      case _: CTERelationRef => BigInt(0)
+      case l: LeafNode => l.stats.sizeInBytes
+    }.sum)
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The query `df` on its execution path: on the small path (a plan
+    * over the same analyzed plan in the caller's [[smallPathSession]])
+    * when its estimated input is at most [[SmallQueryBytes]], else `df`
+    * itself. Streaming queries stay on the caller's session.
+    */
+  def route(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
+    else estimatedInputBytes(df) match {
+      case Some(b) if b <= SmallQueryBytes =>
+        Bridge.ofRows(smallPathSession(df.sparkSession), df.queryExecution.analyzed)
+      case _ => df
+    }
+
+  /** Whether `df` runs on the small path. */
+  def onSmallPath(df: DataFrame): Boolean =
+    smallPaths.containsValue(df.sparkSession)
+
+  /** What the small path changes from its caller's session. */
+  private val SmallPathConf = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "1")
+
+  /** Each caller's small-path companion, made once. A companion is a
+    * clone, and a clone's session state refers to the state and so to
+    * the session it was cloned from: with weak keys no entry could ever
+    * drop. Entries go instead when the caller's context stops, as in
+    * [[tableCache]].
+    */
+  private val smallPaths =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+
+  /** The caller's companion, its settings brought up to the caller's:
+    * a conf the caller set after the companion was made applies on the
+    * small path too, except for [[SmallPathConf]]'s own two.
+    */
+  private def smallPathSession(spark: SparkSession): SparkSession = {
+    purgeStopped()
+    val small = smallPaths.computeIfAbsent(spark, s => tune(Bridge.cloneSession(s)))
+    val want = spark.sessionState.conf.getAllConfs ++ SmallPathConf
+    val conf = small.sessionState.conf
+    val have = conf.getAllConfs
+    want.foreach { case (k, v) => if (!have.get(k).contains(v)) conf.setConfString(k, v) }
+    have.keys.filterNot(want.contains).foreach(conf.unsetConf)
+    small
   }
 
   /** Weakly held: a session copy planned once (EXPLAIN's static plan)
@@ -68,8 +169,11 @@ object GraftSession {
       // in a cold pass, and no recompiles in later passes (4 before).
       c.set("spark.sql.codegen.useIdInClassName", "false")
       // AQE (on by default, with partition coalescing and skew-join
-      // splitting): runtime distribution decisions, the Spark analog of
-      // Impala's cost model (DistributedPlanner.java:479-575).
+      // splitting) plans the adaptive path: runtime distribution
+      // decisions, the Spark analog of Impala's cost model
+      // (DistributedPlanner.java:479-575). The small path turns it off
+      // (see [[route]]), so the coalescing floor below applies only to
+      // queries over more than SmallQueryBytes of estimated input.
       // r17 (guide §2.2/§9): AQE's coalescing floor is tuned for
       // IO-bound stages (1 MiB/partition). The engine's hot reduce
       // stages (signature kernels, decimal aggregation, pair
@@ -139,6 +243,7 @@ object GraftSession {
       c.set("spark.sql.analyzer.maxIterations", "600")
       c.set("spark.sql.optimizer.maxIterations", "600")
       functions.GraftFunctions.registerAll(spark)
+      spark.experimental.extraStrategies :+= plans.PruningBarrier.Strategy
     }
     spark
   }
@@ -209,9 +314,9 @@ object GraftSession {
     })
   }
 
-  /** r18 (advisor): drop memo entries for stopped sessions so a
-    * long-lived multi-session process doesn't retain dead sessions
-    * and their analyzed plans forever. O(live
+  /** r18 (advisor): drop memo entries and small-path companions of
+    * stopped sessions so a long-lived multi-session process doesn't
+    * retain dead sessions and their analyzed plans forever. O(live
     * entries) per table() call — tens of keys. The fixture dirs are
     * immutable driver inputs (TESTDATA.md), so no mtime check: a
     * rewritten dir in-process would need a new SparkSession (or dir) to
@@ -220,6 +325,7 @@ object GraftSession {
   private def purgeStopped(): Unit = {
     val it = tableCache.keySet.iterator()
     while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
+    smallPaths.keySet.removeIf(_.sparkContext.isStopped)
   }
 
   /** Catalog-metadata memo (r17, guide §1.2 per-task → per-QUERY work):

@@ -3,7 +3,9 @@ package graft
 /** Measurement tooling (optimization guide §1.1/§7.2): dump
   * `.explain("formatted")` for bench-headline queries to files, so plan
   * claims (Exchange counts, join strategies, PushedFilters/ReadSchema)
-  * are checkable without running Spark.
+  * are checkable without running Spark. Each file starts with one
+  * header line: the query's execution path ([[GraftSession.route]]) and
+  * its estimated input bytes.
   *
   * Usage: runMain graft.PlanDump <outDir> [nameFilter,csv]
   * Reads the same env contract as [[Bench]] (SPARK_GRAFT_SF_DIR /
@@ -26,8 +28,11 @@ object PlanDump {
       SparkEntry.queries.get(name).foreach { fn =>
         try {
           val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val path = if (GraftSession.onSmallPath(df)) "small" else "adaptive"
+          val bytes = GraftSession.estimatedInputBytes(df).fold("unknown")(_.toString)
+          val txt = s"-- path=$path estimated_input_bytes=$bytes\n" +
+            df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.write(
             java.nio.file.Paths.get(outDir, s"$name.txt"),
             txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))

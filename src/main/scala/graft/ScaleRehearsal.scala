@@ -33,7 +33,7 @@ object ScaleRehearsal {
       .select("doc_id", "text")
     // materialize both inputs to parquet so timed runs scan files, not
     // the replication expression
-    val base = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    val base = GraftSession.tempDir("graft_scale").toString
     docs.write.mode("overwrite").parquet(s"$base/x1")
     replicate(docs, mult).write.mode("overwrite").parquet(s"$base/x$mult")
     val x1 = spark.read.parquet(s"$base/x1")

@@ -48,9 +48,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each query
+    * comes back on its execution path ([[GraftSession.route]]).
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(d => d.name -> d.fn).toMap
+    all.map(d => d.name -> ((s: SparkSession, dir: String) =>
+      GraftSession.route(d.fn(s, dir)))).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

@@ -11,11 +11,13 @@ object Verify {
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val entry = SparkEntry.queries
+    val smallPath = scala.collection.mutable.Map[String, Boolean]()
     val results = entry.toSeq.filter(kv => keep(kv._1)).map { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        val df = fn(spark, sfDir)
+        smallPath(name) = GraftSession.onSmallPath(df)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         name -> (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -24,7 +26,7 @@ object Verify {
     }
     val tally = Bench.Tally(results,
       filter.getOrElse(Set.empty).diff(entry.keySet).toSeq.sorted
-        .map(_ -> "not in SparkEntry.queries"))
+        .map(_ -> "not in SparkEntry.queries"), smallPath.toMap)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -29,16 +29,13 @@ case class PruningBarrier(child: LogicalPlan) extends UnaryNode {
 }
 
 object PruningBarrier {
-  /** Wrap `df` in a barrier, registering the planning strategy on
-    * first use (idempotent per session).
+  /** Wrap `df` in a barrier. [[graft.GraftSession.tune]] registers the
+    * planning strategy, so every tuned session, the small-path companion
+    * included, can plan the barrier.
     */
-  def apply(spark: SparkSession, df: DataFrame): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
-    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+  def apply(spark: SparkSession, df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.Bridge.ofRows(graft.GraftSession.tune(spark),
       PruningBarrier(df.queryExecution.analyzed))
-  }
 
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

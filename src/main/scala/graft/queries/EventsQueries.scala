@@ -230,8 +230,7 @@ object EventsQueries extends QueryGroup {
     Q.Def("q_write_ctas", (s, dir) => {
       // per-run temp dir: concurrent verify/bench runs must not share
       // (and race on) a fixed output path
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_ctas_events").toString
+      val out = graft.GraftSession.tempDir("graft_ctas_events").toString
       t(s, dir, "events")
         .withColumn("day", date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
         .write.mode(SaveMode.Overwrite)
@@ -259,8 +258,7 @@ object EventsQueries extends QueryGroup {
     // commit/read cycle is lossless (ref write side:
     // fe/.../service/IcebergCatalogOpExecutor.java appendFiles).
     Q.Def("q_iceberg_write_read", (s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_iceberg_events")
+      val out = graft.GraftSession.tempDir("graft_iceberg_events")
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       graft.sources.IcebergLayout.create(out,
@@ -288,8 +286,7 @@ object EventsQueries extends QueryGroup {
     // partitions present in the incoming frame, leave the rest intact.
     // Final state: 'click' rows doubled, all other partitions original.
     Q.Def("q_write_dynpart", (s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dynpart_events").toString
+      val out = graft.GraftSession.tempDir("graft_dynpart_events").toString
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       ev.write.mode(SaveMode.Overwrite).partitionBy("event_type").parquet(out)

@@ -44,7 +44,7 @@ object AcidFixtures {
     */
   def warehouse(spark: SparkSession): Path = synchronized {
     if (builtWh != null) return builtWh
-    val wh = Files.createTempDirectory("graft-acid-wh")
+    val wh = graft.GraftSession.tempDir("graft-acid-wh")
 
     val att = spark.table("alltypestiny")
     AcidLayout.writeInsert(spark, wh.resolve("alltypestiny"),

@@ -37,21 +37,26 @@ object AcidLayout {
   private def baseName(w: Long, padded: Boolean = true): String =
     if (padded) f"base_$w%07d" else s"base_$w"
 
-  /** Move the single ORC part-file Spark wrote under `tmp` to `dest`.
-    * A zero-row write may produce no part-file at all — the layout
-    * directory is still created (an empty base/delta is a valid,
-    * everything-hiding state).
+  /** Write one ORC file at `dest`: `write` runs a one-partition Spark
+    * write into the path it is given, under a staging dir, and the single
+    * part-file it leaves moves to `dest`. A zero-row write may produce no
+    * part-file at all — the layout directory is still created (an empty
+    * base/delta is a valid, everything-hiding state). The staging dir is
+    * deleted right after the move.
     */
-  private def moveSparkFile(tmp: Path, dest: Path): Unit = {
-    val s = Files.list(tmp)
-    val part =
-      try s.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".orc"))
-      finally s.close()
-    Files.createDirectories(dest.getParent)
-    part.foreach(p =>
-      Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING))
-    deleteRecursively(tmp)
+  private def writeOrcFile(dest: Path)(write: String => Unit): Unit = {
+    val tmp = graft.GraftSession.tempDir("graft-acid-w")
+    try {
+      write(tmp.resolve("d").toString)
+      val s = Files.list(tmp.resolve("d"))
+      val part =
+        try s.iterator().asScala
+          .find(_.getFileName.toString.endsWith(".orc"))
+        finally s.close()
+      Files.createDirectories(dest.getParent)
+      part.foreach(p =>
+        Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING))
+    } finally deleteRecursively(tmp)
   }
 
   private def deleteRecursively(p: Path): Unit = {
@@ -144,11 +149,10 @@ object AcidLayout {
       partCols: Seq[String] = Nil, fileName: String = "000000_0"): Unit = {
     val dataCols = df.columns.filterNot(partCols.contains)
     eachPartition(df, partCols) { case (partVals, part) =>
-      val tmp = Files.createTempDirectory("graft-acid-w")
-      part.select(dataCols.map(col).toIndexedSeq: _*).coalesce(1)
-        .write.mode("overwrite").orc(tmp.resolve("d").toString)
-      moveSparkFile(tmp.resolve("d"),
-        partDirOf(tableDir, partCols, partVals).resolve(fileName))
+      writeOrcFile(partDirOf(tableDir, partCols, partVals).resolve(fileName)) {
+        part.select(dataCols.map(col).toIndexedSeq: _*).coalesce(1)
+          .write.mode("overwrite").orc(_)
+      }
     }
   }
 
@@ -166,12 +170,11 @@ object AcidLayout {
       else deltaName(writeId, writeId, None, delete = false,
         padded = padded)
     eachPartition(df, partCols) { case (partVals, part) =>
-      val tmp = Files.createTempDirectory("graft-acid-w")
-      part.select(dataCols.map(col).toIndexedSeq: _*).coalesce(1)
-        .write.mode("overwrite").orc(tmp.resolve("d").toString)
-      moveSparkFile(tmp.resolve("d"),
-        partDirOf(tableDir, partCols, partVals)
-          .resolve(dirName).resolve("000000_0"))
+      writeOrcFile(partDirOf(tableDir, partCols, partVals)
+          .resolve(dirName).resolve("000000_0")) {
+        part.select(dataCols.map(col).toIndexedSeq: _*).coalesce(1)
+          .write.mode("overwrite").orc(_)
+      }
     }
   }
 
@@ -201,12 +204,11 @@ object AcidLayout {
     } else {
       val dataCols = snapshot.columns.filterNot(partCols.contains)
       eachPartition(snapshot, partCols) { case (partVals, part) =>
-        val tmp = Files.createTempDirectory("graft-acid-w")
-        part.select(dataCols.map(col).toIndexedSeq: _*).coalesce(1)
-          .write.mode("overwrite").orc(tmp.resolve("d").toString)
-        moveSparkFile(tmp.resolve("d"),
-          partDirOf(tableDir, partCols, partVals)
-            .resolve(dirName).resolve("000000_0"))
+        writeOrcFile(partDirOf(tableDir, partCols, partVals)
+            .resolve(dirName).resolve("000000_0")) {
+          part.select(dataCols.map(col).toIndexedSeq: _*).coalesce(1)
+            .write.mode("overwrite").orc(_)
+        }
       }
     }
   }
@@ -219,13 +221,11 @@ object AcidLayout {
       schema: StructType, writeId: Long, wrapped: Boolean,
       padded: Boolean): Unit =
     if (!wrapped) {
-      val tmp = Files.createTempDirectory("graft-acid-w")
-      spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        .coalesce(1).write.mode("overwrite")
-        .orc(tmp.resolve("d").toString)
-      moveSparkFile(tmp.resolve("d"),
-        tableDir.resolve(baseName(writeId, padded)).resolve("empty"))
+      writeOrcFile(tableDir.resolve(baseName(writeId, padded)).resolve("empty")) {
+        spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+          .coalesce(1).write.mode("overwrite").orc(_)
+      }
     } else writeTruncate(spark, tableDir, schema, writeId,
       padded = padded)
 
@@ -233,7 +233,6 @@ object AcidLayout {
   def writeTruncate(spark: SparkSession, tableDir: Path,
       schema: StructType, writeId: Long,
       padded: Boolean = true): Unit = {
-    val tmp = Files.createTempDirectory("graft-acid-w")
     val acidSchema = StructType(Seq(
       StructField("operation", IntegerType),
       StructField("originalTransaction", LongType),
@@ -241,11 +240,11 @@ object AcidLayout {
       StructField("rowId", LongType),
       StructField("currentTransaction", LongType),
       StructField("row", schema)))
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        acidSchema)
-      .coalesce(1).write.mode("overwrite").orc(tmp.resolve("d").toString)
-    moveSparkFile(tmp.resolve("d"),
-      tableDir.resolve(baseName(writeId, padded)).resolve("bucket_00000"))
+    writeOrcFile(tableDir.resolve(baseName(writeId, padded)).resolve("bucket_00000")) {
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          acidSchema)
+        .coalesce(1).write.mode("overwrite").orc(_)
+    }
   }
 
   private def eachPartition(df: DataFrame, partCols: Seq[String])(
@@ -266,15 +265,14 @@ object AcidLayout {
       val buckets = part.select(col("_gf_bucket")).distinct()
         .collect().map(_.getInt(0)).sorted
       buckets.foreach { b =>
-        val tmp = Files.createTempDirectory("graft-acid-w")
-        part.where(col("_gf_bucket") === b)
-          .drop("_gf_bucket").drop(partCols: _*)
-          .coalesce(1)
-          .sortWithinPartitions(col("originalTransaction"), col("rowId"))
-          .write.mode("overwrite").orc(tmp.resolve("d").toString)
-        moveSparkFile(tmp.resolve("d"),
-          partDirOf(tableDir, partCols, partVals)
-            .resolve(dirName).resolve(f"bucket_$b%05d"))
+        writeOrcFile(partDirOf(tableDir, partCols, partVals)
+            .resolve(dirName).resolve(f"bucket_$b%05d")) {
+          part.where(col("_gf_bucket") === b)
+            .drop("_gf_bucket").drop(partCols: _*)
+            .coalesce(1)
+            .sortWithinPartitions(col("originalTransaction"), col("rowId"))
+            .write.mode("overwrite").orc(_)
+        }
       }
     }
 }

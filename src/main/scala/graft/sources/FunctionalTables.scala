@@ -1421,9 +1421,7 @@ object FunctionalTables {
         // would eagerly evaluate a poisoned projection over a
         // LocalRelation, firing the raise for queries that never
         // touch bin_col
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-unsupported-types")
-        tmp.toFile.deleteOnExit()
+        val tmp = graft.GraftSession.tempDir("graft-unsupported-types")
         local.write.mode("overwrite").parquet(tmp.toString)
         val df = spark.read.parquet(tmp.toString)
         df.select(df.schema.fields.map { f =>

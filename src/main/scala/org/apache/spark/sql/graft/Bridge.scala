@@ -19,6 +19,12 @@ object Bridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[ClassicSession].cloneSession()
 
+  /** A fresh `<prefix>-<uuid>` directory under `java.io.tmpdir` that
+    * Spark's shutdown hook deletes, contents and all, when the JVM exits.
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).toPath
+
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     spark.asInstanceOf[ClassicSession].sessionState.sqlParser.parsePlan(sql)
 
