@@ -1203,13 +1203,6 @@ object ImpalaDialect {
         first)
       s.withNewPlan(Aggregate(Nil,
         Seq(Alias(guarded, "__impala_scalar_guard")()), s.plan))
-    // trunc()'s unit argument validates against Impala's unit table
-    // ("Invalid Truncate Unit: …") — unknown units RAISE, known ones
-    // evaluate natively
-    case t: org.apache.spark.sql.catalyst.expressions.TruncDate
-        if t.format.resolved &&
-          !t.format.isInstanceOf[graft.functions.ImpalaTruncUnit] =>
-      t.copy(format = graft.functions.ImpalaTruncUnit(t.format))
     // APPX_COUNT_DISTINCT=1 rewrites count(DISTINCT x) onto ndv(x)
     // (FunctionCallExpr.java rewrite; the bit-exact HLL pipeline) —
     // at scale this trades the distinct shuffle for a fixed sketch

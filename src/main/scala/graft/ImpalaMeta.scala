@@ -38,204 +38,12 @@ object ImpalaMeta {
   private val showFilesRe =
     ("""(?is)^\s*show\s+files\s+in\s+((?:`[^`]+`|[$\w.])+)""" +
       """(?:\s+partition\s*\((.*)\))?\s*;?\s*$""").r
-
-  /** Databases of the warehouse model (CREATE/DROP DATABASE —
-    * `CatalogOpExecutor.createDatabase`). DESCRIBE DATABASE renders the
-    * reference's location spellings verbatim (the runner-variable
-    * forms $NAMENODE/$EXTERNAL_WAREHOUSE_DIR…, which the goldens carry
-    * unsubstituted here); HIVE-24175: a specified managedlocation is
-    * ignored, the default always prints.
-    */
-  final case class DbInfo(comment: String, location: Option[String],
-      params: Seq[(String, String)] = Nil)
-  val dbRegistry =
-    scala.collection.mutable.LinkedHashMap.empty[String, DbInfo]
-
-  /** Per-db registered functions: (signature, return type, aggregate?)
-    * — SHOW [AGGREGATE] FUNCTIONS IN db renders them
-    * (`fe/.../service/Frontend.getFunctions`).
-    */
-  val fnRegistry = scala.collection.mutable.LinkedHashMap
-    .empty[String, scala.collection.mutable.ArrayBuffer[(String, String, Boolean)]]
-
-  /** A representative _impala_builtins inventory by kind (scalar /
-    * aggregate / analytic) — the SHOW FUNCTIONS IN _impala_builtins
-    * subset/not-in probes pin these (functions-ddl.test; the full
-    * surface is asserted in SurfaceSpec).
-    */
-  private val builtinFns: Seq[(String, String, String)] = Seq(
-    // (kind, return type, signature)
-    ("scalar", "STRING", "upper(STRING)"),
-    ("scalar", "STRING", "lower(STRING)"),
-    ("scalar", "DOUBLE", "sin(DOUBLE)"),
-    ("scalar", "DOUBLE", "cos(DOUBLE)"),
-    ("scalar", "BIGINT", "length(STRING)"),
-    ("scalar", "STRING", "concat(STRING...)"),
-    ("scalar", "DOUBLE", "abs(DOUBLE)"),
-    ("aggregate", "DOUBLE", "avg(BIGINT)"),
-    ("aggregate", "DOUBLE", "avg(DOUBLE)"),
-    ("aggregate", "BIGINT", "count()"),
-    ("aggregate", "STRING", "group_concat(STRING)"),
-    ("aggregate", "BIGINT", "sum(INT)"),
-    ("aggregate", "BIGINT", "ndv(INT)"),
-    ("analytic", "BIGINT", "rank()"),
-    ("analytic", "BIGINT", "dense_rank()"),
-    ("analytic", "BIGINT", "row_number()"),
-    ("analytic", "DOUBLE", "percent_rank()"))
-
-  /** Hive-metastore table metadata twin for DESCRIBE FORMATTED over
-    * modeled (non-Iceberg) tables: the table-parameters map (Impala
-    * writes sort.columns / sort.order / user TBLPROPERTIES there —
-    * `AlterTableSortByStmt`, `TableDef.analyzeSortColumns`) plus the
-    * storage format (Avro columns DESCRIBE with the `from
-    * deserializer` comment Hive's serde reports).
-    */
-  final class TableMeta(var format: String = "TEXT") {
-    val params: scala.collection.mutable.LinkedHashMap[String, String] =
-      scala.collection.mutable.LinkedHashMap.empty
-  }
-  val tableMeta =
-    scala.collection.mutable.LinkedHashMap.empty[String, TableMeta]
-
   private val describeDbRe =
     ("""(?is)^\s*describe\s+database\s+((?:extended|formatted)\s+)?""" +
       """([A-Za-z_]\w*)\s*;?\s*$""").r
-  private val describeFormattedRe =
-    """(?is)^\s*describe\s+(?:formatted|extended)\s+([A-Za-z_]\w*(?:\.\w+)?)\s*;?\s*$""".r
   private val describeHistoryRe =
     ("""(?is)^\s*describe\s+history\s+""" +
       """((?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*)\s*;?\s*$""").r
-
-  /** Iceberg tables of the warehouse model: physical layout dir +
-    * the MODEL location/properties the observability statements
-    * render (`fe/.../analysis/DescribeTableStmt.java`,
-    * `IcebergUtil.java`). Populated by the harness sim or by a user
-    * registering a layout-backed table.
-    */
-  final class IcebergTbl(
-      val dir: String, val location: String, val external: Boolean,
-      val props: scala.collection.mutable.LinkedHashMap[String, String],
-      var owner: String = "impala", var ownerType: String = "USER")
-  val icebergRegistry =
-    scala.collection.mutable.LinkedHashMap.empty[String, IcebergTbl]
-
-  /** Registered user-function overloads with the detail SHOW CREATE
-    * FUNCTION regenerates (`fe/.../catalog/Function.toSql(true)`):
-    * the resolved — mangled — symbols derive from the C++ signatures
-    * via [[graft.functions.ItaniumMangle]].
-    */
-  final case class FnOverload(aggregate: Boolean, argsSql: String,
-      retSql: String, location: Option[String], symbol: String)
-  val fnDetails = scala.collection.mutable.LinkedHashMap
-    .empty[String, scala.collection.mutable.ArrayBuffer[FnOverload]]
-  private val showCreateFnRe =
-    ("""(?is)^\s*show\s+create\s+(?:aggregate\s+)?function\s+""" +
-      """([\w$]+\.)?([A-Za-z_]\w*)\s*;?\s*$""").r
-
-  /** The shipped test UDA libraries' exported families (udasample.cc /
-    * test-udas.cc): symbols absent from the binary render no line.
-    */
-  private val udaMissingParts: Map[String, Set[String]] =
-    Map("TwoArg" -> Set("FINALIZE"))
-
-  private def showCreateFunction(spark: SparkSession, db0: String,
-      name: String): Option[DataFrame] = {
-    import graft.functions.ItaniumMangle
-    val db = Option(db0).map(_.stripSuffix(".")).getOrElse("")
-    if (db.equalsIgnoreCase("_impala_builtins")) {
-      // builtins: member symbols of impala::MathFunctions /
-      // impala::AggregateFunctions, derived by the same mangler
-      // (AvgUpdate<T> via member-template mangling); overload shapes
-      // per BuiltinsDb.java's avg registration
-      import ItaniumMangle.{ConstRef, Ptr, TRef}
-      val aggFns = ("impala", "AggregateFunctions")
-      def member(nm: String, params: Seq[ItaniumMangle.Param],
-          targ: Option[String] = None): String =
-        ItaniumMangle.mangle(nm,
-          Ptr("FunctionContext") +: params, Some(aggFns), targ)
-      if (name.equalsIgnoreCase("sin")) {
-        val sym = ItaniumMangle.mangle("Sin",
-          Seq(Ptr("FunctionContext"), ConstRef("DoubleVal")),
-          Some(("impala", "MathFunctions")))
-        return Some(strDf(spark, Seq("result"), Seq(Seq(
-          s"CREATE FUNCTION _impala_builtins.sin(DOUBLE)\n" +
-            s" RETURNS DOUBLE\n SYMBOL='$sym'\n"))))
-      }
-      if (!name.equalsIgnoreCase("avg")) return None
-      val inter = "StringVal"
-      def upd(tpl: Option[String], nm: String, arg: String): String =
-        tpl match {
-          case Some(t) => member("AvgUpdate",
-            Seq(TRef, Ptr(inter)), Some(t))
-          case None => member(nm, Seq(ConstRef(arg), Ptr(inter)))
-        }
-      case class Ov(argSql: String, retSql: String, size: Int,
-        tpl: Option[String], updNm: String, argVal: String,
-        initNm: String, mergeNm: String, finNm: String)
-      val overloads = Seq(
-        Ov("BIGINT", "DOUBLE", 16, Some("BigIntVal"), "", "",
-          "AvgInit", "AvgMerge", "AvgFinalize"),
-        Ov("DECIMAL(*,*)", "DECIMAL(*,*)", 24, None,
-          "DecimalAvgUpdate", "DecimalVal", "DecimalAvgInit",
-          "DecimalAvgMerge", "DecimalAvgFinalize"),
-        Ov("DOUBLE", "DOUBLE", 16, Some("DoubleVal"), "", "",
-          "AvgInit", "AvgMerge", "AvgFinalize"),
-        Ov("TIMESTAMP", "TIMESTAMP", 16, None, "TimestampAvgUpdate",
-          "TimestampVal", "AvgInit", "AvgMerge",
-          "TimestampAvgFinalize"))
-      val stmts = overloads.map { o =>
-        s"CREATE AGGREGATE FUNCTION _impala_builtins.avg(${o.argSql})\n" +
-          s" RETURNS ${o.retSql}\n" +
-          s" INTERMEDIATE FIXED_UDA_INTERMEDIATE(${o.size})\n" +
-          s" LOCATION 'null'\n" +
-          s" UPDATE_FN='${upd(o.tpl, o.updNm, o.argVal)}'\n" +
-          s" INIT_FN='${member(o.initNm, Seq(Ptr(inter)))}'\n" +
-          s" MERGE_FN='${member(o.mergeNm,
-            Seq(ConstRef(inter), Ptr(inter)))}'\n" +
-          s" FINALIZE_FN='${member(o.finNm, Seq(ConstRef(inter)))}'"
-      }
-      return Some(strDf(spark, Seq("result"),
-        Seq(Seq(stmts.mkString(";\n") + "\n"))))
-    }
-    fnDetails.get(name.toLowerCase).filter(_.nonEmpty).map { ovs =>
-      val dbLabel = spark.conf
-        .getOption("graft.meta.sessiondb.label")
-        .orElse(Option(db).filter(_.nonEmpty)).getOrElse("default")
-      val stmts = ovs.map { o =>
-        val args = o.argsSql
-        val varArgs = args.endsWith("...")
-        val argTypes = args.stripSuffix("...").split(",")
-          .map(_.trim).filter(_.nonEmpty).toSeq
-        val loc = o.location.map(l =>
-          s" LOCATION '${l.replace("$FILESYSTEM_PREFIX", "$NAMENODE")}'\n")
-          .getOrElse("")
-        if (!o.aggregate) {
-          val sym = ItaniumMangle.udfSymbol(o.symbol, argTypes, varArgs)
-          s"CREATE FUNCTION $dbLabel.$name($args)\n RETURNS ${o.retSql}\n" +
-            loc + s" SYMBOL='$sym'"
-        } else {
-          val inter = ItaniumMangle.valClass(o.retSql)
-          val prefix = o.symbol.stripSuffix("Update")
-          val missing = udaMissingParts.getOrElse(prefix, Set.empty)
-          val lines = Seq(
-            "UPDATE_FN" ->
-              ItaniumMangle.udaUpdate(o.symbol, argTypes, inter),
-            "INIT_FN" -> ItaniumMangle.udaInit(prefix + "Init", inter),
-            "MERGE_FN" -> ItaniumMangle.udaMerge(prefix + "Merge", inter),
-            "FINALIZE_FN" ->
-              ItaniumMangle.udaFinalize(prefix + "Finalize", inter))
-            .filterNot { case (k, _) =>
-              missing(k.stripSuffix("_FN"))
-            }
-            .map { case (k, v) => s" $k='$v'" }.mkString("\n")
-          s"CREATE AGGREGATE FUNCTION $dbLabel.$name($args)\n" +
-            s" RETURNS ${o.retSql}\n" + loc + lines
-        }
-      }
-      strDf(spark, Seq("result"),
-        Seq(Seq(stmts.mkString(";\n") + "\n")))
-    }
-  }
 
   /** External data sources (`CREATE DATA SOURCE` —
     * `fe/.../analysis/CreateDataSrcStmt.java`; SHOW DATA SOURCES shape
@@ -255,8 +63,6 @@ object ImpalaMeta {
   private val showDataSrcRe =
     """(?is)^\s*show\s+data\s+sources(?:\s+like\s+'([^']*)')?\s*;?\s*$""".r
 
-  private def pad20(s: String): String = s.padTo(20, ' ')
-
   private def strDf(spark: SparkSession, cols: Seq[String],
       rows: Seq[Seq[String]]): DataFrame =
     spark.createDataFrame(
@@ -265,185 +71,18 @@ object ImpalaMeta {
           rows.map(r => Row(r: _*))).asJava),
       StructType(cols.map(c => StructField(c, StringType))))
 
-  /** Hive's DESCRIBE FORMATTED table layout (key/value/NULL section
-    * rows, 20-char-padded parameter rows) for a registered iceberg
-    * table — the subset the goldens pin plus the standard sections.
+  /** DESCRIBE DATABASE default, with the locations spelled as the
+    * reference's runner variables ($NAMENODE/$EXTERNAL_WAREHOUSE_DIR).
+    * Any other database goes to Spark's own DESCRIBE DATABASE.
     */
-  private def describeFormatted(spark: SparkSession, name0: String)
-      : Option[DataFrame] = {
-    // the qualifier (when written) names the database; bare names are
-    // the session default — not a hardcoded literal
-    val parts = name0.split('.')
-    val name = parts.last
-    val dbName = if (parts.length > 1) parts.head else "default"
-    icebergRegistry.get(name.toLowerCase).map { t =>
-    val dirPath = java.nio.file.Paths.get(t.dir)
-    val schema = scala.util.Try(spark.table(name).schema)
-      .getOrElse(sources.IcebergLayout.schemaOf(dirPath))
-    val colRows = Seq(
-      Seq(pad20("# col_name"), pad20("data_type"), pad20("comment")),
-      Seq("", "NULL", "NULL")) ++
-      schema.fields.map(f =>
-        Seq(pad20(f.name), f.dataType.simpleString, ""))
-    val hintV = scala.util.Try(new String(java.nio.file.Files.readAllBytes(
-      dirPath.resolve("metadata/version-hint.text"))).trim).getOrElse("1")
-    val fileFormat = t.props.getOrElse("iceberg.file_format", "parquet")
-    val paramRows =
-      (t.props.toSeq ++ Seq(
-        "iceberg.file_format" -> fileFormat,
-        "table_type" -> "ICEBERG",
-        "metadata_location" ->
-          s"${t.location}/metadata/v$hintV.metadata.json",
-        "numRows" -> "-1", "EXTERNAL" -> "TRUE"))
-        .distinctBy(_._1)
-        .map { case (k, v) => Seq("", pad20(k), pad20(v)) }
-    val sectionRows = Seq(
-      Seq("", "NULL", "NULL"),
-      Seq(pad20("# Detailed Table Information"), "NULL", "NULL"),
-      Seq(pad20("Database:"), pad20(dbName), "NULL"),
-      Seq(pad20("OwnerType:"), pad20(t.ownerType), "NULL"),
-      Seq(pad20("Owner:"), pad20(t.owner), "NULL"),
-      Seq(pad20("Location:"), pad20(t.location), "NULL"),
-      Seq(pad20("Table Type:"),
-        pad20(if (t.external) "EXTERNAL_TABLE" else "MANAGED_TABLE"),
-        "NULL"),
-      Seq(pad20("Table Parameters:"), "NULL", "NULL")) ++ paramRows
-    strDf(spark, Seq("name", "type", "comment"), colRows ++ sectionRows)
-    }
-  }
-
-  /** DESCRIBE FORMATTED for a [[tableMeta]]-modeled table: column rows
-    * (Avro columns carry Hive's `from deserializer` comment), the
-    * detailed-information section and the 20-padded Table Parameters
-    * rows (MetaDataFormatUtils layout — the goldens verify subsets).
-    */
-  private def describeFormattedModel(spark: SparkSession, name0: String)
-      : Option[DataFrame] = {
-    val name = name0.split('.').last.toLowerCase
-    tableMeta.get(name).map { tm =>
-      val schema = scala.util.Try(spark.table(name).schema)
-        .getOrElse(new StructType())
-      val colComment = (f: StructField) =>
-        if (tm.format.equalsIgnoreCase("AVRO")) "from deserializer"
-        else f.getComment().getOrElse("")
-      val colRows = Seq(
-        Seq(pad20("# col_name"), pad20("data_type"), pad20("comment")),
-        Seq("", "NULL", "NULL")) ++
-        schema.fields.map(f =>
-          Seq(f.name.toLowerCase, typeSql(f.dataType, 0), colComment(f)))
-      val paramRows = tm.params.toSeq
-        .map { case (k, v) => Seq("", pad20(k), pad20(v)) }
-      val sectionRows = Seq(
-        Seq("", "NULL", "NULL"),
-        Seq(pad20("# Detailed Table Information"), "NULL", "NULL"),
-        Seq(pad20("Database:"), pad20("default"), "NULL"),
-        Seq(pad20("Table Type:"), pad20("MANAGED_TABLE"), "NULL"),
-        Seq(pad20("Table Parameters:"), "NULL", "NULL")) ++ paramRows
-      strDf(spark, Seq("name", "type", "comment"), colRows ++ sectionRows)
-    }
-  }
-
-  /** DESCRIBE HISTORY — Iceberg snapshot log rendered in the session
-    * timezone with Impala's 9-digit fraction
-    * (`fe/.../service/DescribeResultFactory.java` describeHistory).
-    */
-  private def describeHistory(spark: SparkSession, name: String)
-      : Option[DataFrame] = icebergRegistry.get(name.toLowerCase).map { t =>
-    val zone = java.time.ZoneId.of(
-      spark.conf.get("spark.sql.session.timeZone", "UTC"))
-    val rows = sources.IcebergLayout.history(
-      java.nio.file.Paths.get(t.dir)).map { case (ms, id, parent, cur) =>
-      val ldt = java.time.Instant.ofEpochMilli(ms).atZone(zone)
-      val base = ldt.format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd HH:mm:ss"))
-      val frac = f".${ms % 1000}%03d000000"
-      Seq(base + frac, id.toString,
-        parent.map(_.toString).getOrElse("NULL"),
-        if (cur) "TRUE" else "FALSE")
-    }
-    strDf(spark, Seq("creation_time", "snapshot_id", "parent_id",
-      "is_current_ancestor"), rows)
-  }
-
-  /** SHOW PARTITIONS on an Iceberg table: the partition SPEC
-    * (specId, sourceId, fieldId, name, transform) — not directory
-    * partitions (`IcebergUtil.java` getPartitionSpec rows).
-    */
-  private def icebergPartitions(spark: SparkSession, name: String,
-      asWritten: String)
-      : Option[DataFrame] = icebergRegistry.get(name.toLowerCase).map { t =>
-    val spec = sources.IcebergLayout.specOf(java.nio.file.Paths.get(t.dir))
-    if (spec.isEmpty)
-      throw new IllegalStateException(
-        s"AnalysisException: Table is not partitioned: $asWritten")
-    val rows = spec.map(f => Row(0L, f.sourceId.toLong, f.fieldId.toLong,
-      f.name, f.transform))
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      StructType(Seq(
-        StructField("spec_id", LongType),
-        StructField("source_id", LongType),
-        StructField("field_id", LongType),
-        StructField("field_name", StringType),
-        StructField("transform", StringType))))
-  }
-
-  /** SHOW FILES on an Iceberg table lists every physical file under
-    * the table location — data AND metadata chain (iceberg-query.test
-    * pins the full 25-file listing), sorted by path.
-    */
-  private def icebergFiles(spark: SparkSession, name: String)
-      : Option[DataFrame] = icebergRegistry.get(name.toLowerCase).map { t =>
-    val dir = java.nio.file.Paths.get(t.dir)
-    val walk = java.nio.file.Files.walk(dir)
-    val rows =
-      try {
-        scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator())
-          .asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map { p =>
-            val rel = dir.relativize(p).toString
-              .replace(java.io.File.separatorChar, '/')
-            Seq(s"${t.location}/$rel",
-              ImpalaStats.printBytes(java.nio.file.Files.size(p)), "")
-          }.toSeq.sortBy(_.head)
-      } finally walk.close()
-    strDf(spark, Seq("Path", "Size", "Partition"), rows)
-  }
-  private val showFunctionsRe =
-    ("""(?is)^\s*show\s+(aggregate\s+|analytic\s+)?functions""" +
-      """(?:\s+in\s+([$\w]+))?\s*;?\s*$""").r
-
-  private def describeDb(spark: SparkSession, extended: Boolean,
-      db: String): Option[DataFrame] = {
-    val lower = db.toLowerCase
-    val info =
-      if (lower == "default") Some(DbInfo("Default Hive database",
-        Some("$NAMENODE/$EXTERNAL_WAREHOUSE_DIR")))
-      else dbRegistry.get(lower)
-    info.map { i =>
-      val ext = i.location.getOrElse(
-        s"$$NAMENODE/$$EXTERNAL_WAREHOUSE_DIR/$lower.db")
-      val managed =
-        if (lower == "default") "$NAMENODE/$MANAGED_WAREHOUSE_DIR"
-        else s"$$NAMENODE/$$MANAGED_WAREHOUSE_DIR/$lower.db"
-      val rows = Seq(Row(lower, ext, i.comment),
-        Row("managedlocation:", managed, "")) ++
-        (if (extended)
-          (if (i.params.nonEmpty)
-            Row("Parameter: ", "", "") +:
-              i.params.sortBy(_._1).map(p => Row("", p._1, p._2))
-          else Nil) ++
-            Seq(Row("Owner: ", "", ""), Row("", "$USER", "USER"))
-        else Nil)
-      val schema = StructType(Seq(StructField("name", StringType),
-        StructField("location", StringType),
-        StructField("comment", StringType)))
-      spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-    }
+  private def describeDefaultDb(spark: SparkSession,
+      extended: Boolean): DataFrame = {
+    val rows = Seq(
+      Seq("default", "$NAMENODE/$EXTERNAL_WAREHOUSE_DIR", "Default Hive database"),
+      Seq("managedlocation:", "$NAMENODE/$MANAGED_WAREHOUSE_DIR", "")) ++
+      (if (extended) Seq(Seq("Owner: ", "", ""), Seq("", "$USER", "USER"))
+      else Nil)
+    strDf(spark, Seq("name", "location", "comment"), rows)
   }
 
   private def statsName(raw: String): String =
@@ -471,10 +110,6 @@ object ImpalaMeta {
         dataSourceRegistry.remove(name.toLowerCase)
         Some(strDf(spark, Seq("summary"),
           Seq(Seq("Data source has been dropped."))))
-      // None (unknown function) matches the old fall-through: no later
-      // case handles SHOW CREATE FUNCTION, so the default None applies
-      case showCreateFnRe(db, name) =>
-        showCreateFunction(spark, Option(db).getOrElse(""), name)
       case showDataSrcRe(pattern) =>
         val rows = dataSourceRegistry.toSeq
           .filter(d => matchesPattern(d._1, Option(pattern)))
@@ -484,12 +119,6 @@ object ImpalaMeta {
           }
         Some(strDf(spark,
           Seq("name", "location", "class name", "api version"), rows))
-      case showTableStatsRe(raw)
-          if icebergRegistry.contains(statsName(raw).split('.').last) &&
-            """(?is)^\s*show\s+partitions\b""".r
-              .findFirstIn(text).isDefined =>
-        icebergPartitions(spark, statsName(raw).split('.').last,
-          statsName(raw))
       case showTableStatsRe(raw) =>
         val n = statsName(raw)
         ImpalaStats.showTableStats(spark, n).orElse(
@@ -498,87 +127,21 @@ object ImpalaMeta {
         val n = statsName(raw)
         ImpalaStats.showColumnStats(spark, n).orElse(
           ImpalaStats.showColumnStats(spark, n.split('.').last))
-      case showFilesRe(raw, spec)
-          if icebergRegistry.contains(statsName(raw).split('.').last) =>
-        icebergFiles(spark, statsName(raw).split('.').last)
       case showFilesRe(raw, spec) =>
         val n = statsName(raw).split('.').last
         ImpalaStats.showFiles(spark, n, Option(spec))
-      case describeHistoryRe(name)
-          if icebergRegistry.contains(name.split('.').last.toLowerCase) =>
-        describeHistory(spark, name.split('.').last)
       case describeHistoryRe(name) =>
         // DESCRIBE HISTORY is Iceberg-only (DescribeHistoryStmt)
         throw new IllegalStateException(
           s"DESCRIBE HISTORY must specify an Iceberg table: $name")
-      case describeFormattedRe(name)
-          if icebergRegistry.contains(name.split('.').last.toLowerCase) =>
-        describeFormatted(spark, name)
-      case describeFormattedRe(name)
-          if tableMeta.contains(name.split('.').last.toLowerCase) =>
-        describeFormattedModel(spark, name)
-      case describeDbRe(ext, db) =>
-        describeDb(spark, ext != null, db)
-      case showFunctionsRe(kind, db0) if spark.conf
-          .getOption("graft.meta.ddlcatalog").contains("true") =>
-        // bare / IN $DATABASE = the session's test database (the
-        // default bucket); analytic lists nothing — user analytic
-        // functions don't exist
-        val db = Option(db0).map(_.toLowerCase)
-          .filterNot(_.startsWith("$")).getOrElse("$default$")
-        val kindTxt = Option(kind).map(_.trim.toLowerCase).getOrElse("")
-        val kindName = if (kindTxt.isEmpty) "scalar" else kindTxt
-        val fns: Seq[(String, String, Boolean)] =
-          if (db == "_impala_builtins")
-            builtinFns.filter(_._1 == kindName)
-              .map(b => (b._3, b._2, false))
-          else if (kindTxt == "analytic") Nil
-          else fnRegistry.getOrElse(db,
-            scala.collection.mutable.ArrayBuffer.empty[(String, String, Boolean)])
-            .filter(_._3 == (kindTxt == "aggregate")).toSeq
-        val schema = StructType(Seq(StructField("return type", StringType),
-          StructField("signature", StringType),
-          StructField("binary type", StringType),
-          StructField("is persistent", StringType)))
-        Some(spark.createDataFrame(
-          new java.util.ArrayList[Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              fns.map { case (sig, ret, _) =>
-                Row(ret, sig,
-                  if (db == "_impala_builtins") "BUILTIN" else "NATIVE",
-                  "true") }).asJava), schema))
+      case describeDbRe(ext, db) if db.equalsIgnoreCase("default") =>
+        Some(describeDefaultDb(spark, ext != null))
       case showTablesRe(inDb, pattern) if inDb != null =>
-        // a db-qualified listing: the temp-view namespace answers only
-        // for the db it represents (graft.meta.tempview.db — harness
-        // sets it when fixture views model a loaded db); a real catalog
-        // db is listed directly; anything else falls through to normal
-        // parsing so the NOT_FOUND error surfaces instead of a
-        // misreported every-temp-view listing
+        // a db-qualified listing answers for a real catalog db; anything
+        // else falls through to normal parsing so the NOT_FOUND error
+        // surfaces instead of a misreported every-temp-view listing
         val db = inDb.trim.split("\\s+").last.toLowerCase
-        // the warehouse model's qualified side-tables (cross-db
-        // renames) list under their db
-        if (spark.conf.getOption("graft.meta.ddlcatalog").contains("true") &&
-            (ImpalaStats.tableNames.exists(_.startsWith(db + ".")) ||
-              ImpalaStats.qualifiedDbs.contains(db) ||
-              dbRegistry.contains(db)))
-          Some(oneCol(spark, "name",
-            (ImpalaStats.tableNames ++
-              spark.catalog.listTables().collect().map(_.name.toLowerCase))
-              .flatMap { n =>
-                if (n.startsWith(db + ".")) Some(n.stripPrefix(db + "."))
-                else if (n.startsWith(db + "__"))
-                  Some(n.stripPrefix(db + "__"))
-                else None
-              }.distinct.sorted
-              .filter(matchesPattern(_, Option(pattern)))))
-        else if (spark.conf.getOption("graft.meta.tempview.db")
-            .exists(_.equalsIgnoreCase(db)))
-          Some(oneCol(spark, "name",
-            spark.catalog.listTables().collect().map(_.name.toLowerCase)
-              .distinct.sorted.toSeq
-              .filter(matchesPattern(_, Option(pattern)))))
-        else if (scala.util.Try(spark.catalog.databaseExists(db))
-            .getOrElse(false))
+        if (scala.util.Try(spark.catalog.databaseExists(db)).getOrElse(false))
           Some(oneCol(spark, "name",
             spark.catalog.listTables(db).collect()
               .filter(!_.isTemporary).map(_.name.toLowerCase)
@@ -586,44 +149,20 @@ object ImpalaMeta {
               .filter(matchesPattern(_, Option(pattern)))))
         else None
       case showTablesRe(_, pattern) =>
-        // a warehouse-model session (graft.meta.ddlcatalog) lists the
-        // model's tables — the test database's content — instead of
-        // every temp view in the single namespace
-        val names =
-          if (spark.conf.getOption("graft.meta.ddlcatalog").contains("true"))
-            ImpalaStats.tableNames
-              .filterNot(n => n.startsWith("__") || n.contains("."))
-          else spark.catalog.listTables().collect()
-            .map(_.name.toLowerCase).distinct.toSeq
+        val names = spark.catalog.listTables().collect()
+          .map(_.name.toLowerCase).distinct.toSeq
         Some(oneCol(spark, "name", names.sorted
           .filter(matchesPattern(_, Option(pattern)))))
       case showDatabasesRe(pattern) =>
-        // real catalog first; a harness may overlay extra fixture
-        // environments via graft.meta.databases.extra
-        // ("name[:comment]" comma-list) — the overlay's comment wins
-        val real = spark.catalog.listDatabases().collect().toSeq
+        val dbs = spark.catalog.listDatabases().collect().toSeq
           .map(d => d.name.toLowerCase ->
             (if (d.name.equalsIgnoreCase("default"))
               "Default Hive database"
             else Option(d.description).getOrElse("")))
-        val extra = spark.conf.getOption("graft.meta.databases.extra")
-          .getOrElse("").split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-          .map { e =>
-            val i = e.indexOf(':')
-            if (i < 0) (e.toLowerCase, "")
-            else (e.take(i).toLowerCase, e.drop(i + 1))
-          }
-        val created = dbRegistry.toSeq.map { case (n, i) =>
-          n -> i.comment }
-        val dbs = (scala.collection.immutable.ListMap(real: _*) ++ extra ++
-          created).toSeq.sortBy(_._1)
+          .sortBy(_._1)
         val hit = dbs.filter(d => matchesPattern(d._1, Option(pattern)))
-        val schema = StructType(Seq(StructField("name", StringType),
-          StructField("comment", StringType)))
-        Some(spark.createDataFrame(
-          new java.util.ArrayList[Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              hit.map(d => Row(d._1, d._2))).asJava), schema))
+        Some(strDf(spark, Seq("name", "comment"),
+          hit.map { case (n, c) => Seq(n, c) }))
       case _ => describe(spark, text)
     }
 

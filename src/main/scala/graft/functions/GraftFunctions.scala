@@ -26,6 +26,7 @@ object GraftFunctions {
     "adddate" -> (a => ImpalaDateShift(a(0), a(1), "DAY", neg = false)),
     "subdate" -> (a => ImpalaDateShift(a(0), a(1), "DAY", neg = true)),
     "add_months" -> (a => ImpalaDateShift(a(0), a(1), "MONTH", neg = false)),
+    "trunc" -> (a => ImpalaTrunc(a(0), a(1))),
     "year" -> (a => ImpalaTimeFn(a.head, "year")),
     "month" -> (a => ImpalaTimeFn(a.head, "month")),
     "day" -> (a => ImpalaTimeFn(a.head, "day")),

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -227,25 +228,72 @@ case class ImpalaRegexpParams(child: Expression) extends UnaryExpression
   override def prettyName: String = "impala_regexp_params"
 }
 
-/** trunc()'s unit contract: an unknown unit RAISES ("Invalid Truncate
-  * Unit: …", `timestamp-functions.cc` TruncUnitFromString); known
-  * units pass through (Spark evaluates the truncation itself).
+/** Impala's `trunc(ts, unit)` (`be/src/exprs/udf-builtins.cc` Trunc,
+  * unit table in TruncUnitFromString): the value at the start of its
+  * unit, of the input's own type (a TIMESTAMP stays a TIMESTAMP, a
+  * DATE a DATE). Year units (SYYYY, YYYY, YEAR, SYEAR, YYY, YY, Y), Q,
+  * month units (MONTH, MON, MM, RM), WW (the week that starts on the
+  * year's first weekday), W (the week that starts on the month's first
+  * weekday), day units (DDD, DD, J), DAY/DY/D (the Monday that starts
+  * the week), hour units (HH, HH12, HH24) and MI. An unknown unit
+  * raises "Invalid Truncate Unit". Spark's own trunc returns DATE and
+  * knows only year, quarter (as QUARTER), month and week units.
   */
-case class ImpalaTruncUnit(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  private val valid = Set("SYYYY", "YYYY", "YEAR", "SYEAR", "YYY", "YY",
-    "Y", "Q", "MONTH", "MON", "MM", "RM", "WW", "W", "DDD", "DD", "J",
-    "DAY", "DY", "D", "HH", "HH12", "HH24", "MI")
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(v: Any): Any = {
-    if (!valid(v.toString.toUpperCase))
-      throw new RuntimeException(s"Invalid Truncate Unit: $v")
-    v
+case class ImpalaTrunc(child: Expression, unit: Expression)
+    extends BinaryExpression with CodegenFallback {
+  override def left: Expression = child
+  override def right: Expression = unit
+  override def dataType: DataType = child.dataType match {
+    case _: StringType => TimestampType
+    case t => t
   }
-  override protected def withNewChildInternal(c: Expression): ImpalaTruncUnit =
-    copy(c)
-  override def prettyName: String = "impala_trunc_unit"
+  override def nullable: Boolean = true
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case TimestampType | TimestampNTZType | DateType | _: StringType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+        .TypeCheckFailure(
+        s"trunc takes a TIMESTAMP or DATE, not ${t.catalogString}")
+    }
+
+  override protected def nullSafeEval(v: Any, u: Any): Any = {
+    val ldt = child.dataType match {
+      case TimestampType | TimestampNTZType =>
+        DateTimeUtils.microsToLocalDateTime(v.asInstanceOf[Long])
+      case DateType =>
+        java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).atStartOfDay
+      case _ =>
+        DateTimeUtils.stringToTimestamp(v.asInstanceOf[UTF8String],
+          java.time.ZoneOffset.UTC).map(DateTimeUtils.microsToLocalDateTime)
+          .getOrElse(return null)
+    }
+    val day = ldt.toLocalDate
+    val out = u.toString.toUpperCase match {
+      case "SYYYY" | "YYYY" | "YEAR" | "SYEAR" | "YYY" | "YY" | "Y" =>
+        day.withDayOfYear(1).atStartOfDay
+      case "Q" =>
+        day.withDayOfMonth(1).withMonth((day.getMonthValue - 1) / 3 * 3 + 1)
+          .atStartOfDay
+      case "MONTH" | "MON" | "MM" | "RM" => day.withDayOfMonth(1).atStartOfDay
+      case "WW" => day.minusDays((day.getDayOfYear - 1) % 7).atStartOfDay
+      case "W" => day.minusDays((day.getDayOfMonth - 1) % 7).atStartOfDay
+      case "DDD" | "DD" | "J" => day.atStartOfDay
+      case "DAY" | "DY" | "D" =>
+        day.`with`(java.time.temporal.TemporalAdjusters.previousOrSame(
+          java.time.DayOfWeek.MONDAY)).atStartOfDay
+      case "HH" | "HH12" | "HH24" =>
+        ldt.truncatedTo(java.time.temporal.ChronoUnit.HOURS)
+      case "MI" => ldt.truncatedTo(java.time.temporal.ChronoUnit.MINUTES)
+      case _ => throw new RuntimeException(s"Invalid Truncate Unit: $u")
+    }
+    if (dataType == DateType) out.toLocalDate.toEpochDay.toInt
+    else DateTimeUtils.localDateTimeToMicros(out)
+  }
+  override protected def withNewChildrenInternal(l: Expression,
+      r: Expression): ImpalaTrunc = copy(child = l, unit = r)
+  override def prettyName: String = "trunc"
 }
 
 /** Marks a column whose Parquet page index failed validation

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
 
 /** Impala expression semantics that differ from Spark's and cannot be
-  * expressed as name aliases ([[Aliases]]) — each pinned by the
-  * reference's own golden `.test` rows (FunctionalGoldenSpec).
+  * expressed as name aliases ([[Aliases]]) — each taken from the
+  * reference's own golden `.test` rows.
   */
 object ImpalaSemantics {
 
@@ -101,7 +101,8 @@ case class ImpalaFloatToString(child: Expression) extends UnaryExpression
   * (`timestamp-functions-ir.cc` TimestampArithmetic via
   * `impala_functions.py` date_add → DATE_ADD(TIMESTAMP, ...)). Spark's
   * builtins of the same names return DATE, dropping the time-of-day.
-  * A DATE first argument stays DATE (Impala's DATE overloads); a
+  * A DATE first argument stays DATE (Impala's DATE overloads), a
+  * TIMESTAMP_NTZ one (the fixtures' timestamps) stays TIMESTAMP_NTZ; a
   * STRING argument implicit-casts to TIMESTAMP, as in Impala. The
   * amount may be an integer (days/months) or an INTERVAL literal.
   * Out-of-range results are NULL (TimestampValue validity).
@@ -116,13 +117,14 @@ case class ImpalaDateShift(start: Expression, amount: Expression,
   override def dataType: DataType =
     if (dateIn && (unit == "DAY" || unit == "WEEK" || unit == "MONTH" ||
         unit == "YEAR")) DateType
+    else if (start.dataType == TimestampNTZType) TimestampNTZType
     else TimestampType
   override def nullable: Boolean = true
 
   private val MicrosPerDay = 86400000000L
 
   private def toMicros(v: Any): Option[Long] = start.dataType match {
-    case TimestampType => Some(v.asInstanceOf[Long])
+    case TimestampType | TimestampNTZType => Some(v.asInstanceOf[Long])
     case DateType => Some(v.asInstanceOf[Int].toLong * MicrosPerDay)
     case _: StringType =>
       DateTimeUtils.stringToTimestamp(v.asInstanceOf[UTF8String],

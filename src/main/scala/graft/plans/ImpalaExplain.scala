@@ -95,12 +95,6 @@ object ImpalaExplain {
       return spark.createDataFrame(rows,
         StructType(Seq(StructField("Explain String", StringType))))
     }
-    statsCountPlan(spark, body).foreach { lines =>
-      val rows = new java.util.ArrayList[Row](lines.length)
-      lines.foreach(l => rows.add(Row(l)))
-      return spark.createDataFrame(rows,
-        StructType(Seq(StructField("Explain String", StringType))))
-    }
     val statsScan = statsScanNode(spark, body, names, level)
     val scanExtras = parquetStatsPredicates(spark, body, names, level)
     // the rendered plan is the STATIC one, like Impala's (AQE re-plans
@@ -191,15 +185,7 @@ object ImpalaExplain {
       .getOrElse(Set.empty)
     val lower = name.toLowerCase
     val db = lower.split('.').dropRight(1).mkString(".")
-    analyzed(lower) || (db.nonEmpty && analyzed(db)) ||
-    // COMPUTE STATS through the stats registry (rowCount >= 0 = stats
-    // computed) — the missing-stats WARNING clears once they exist.
-    // Qualified names resolve only their own "db.name" key; a bare
-    // name also tries the registry's unqualified key, so stats on
-    // db2.foo never mask a missing-stats WARNING for db1.foo.
-    graft.ImpalaStats.lookup(lower).exists(_._2.rowCount >= 0) ||
-    (db.isEmpty && graft.ImpalaStats.lookup(lower.split('.').last)
-      .exists(_._2.rowCount >= 0)) || {
+    analyzed(lower) || (db.nonEmpty && analyzed(db)) || {
       val parts = name.split('.')
       val ident =
         if (parts.length > 1) TableIdentifier(parts.last, Some(parts.head))
@@ -222,7 +208,7 @@ object ImpalaExplain {
     if (names.map(_.toLowerCase).distinct.length != 1) return None
     val full = names.head
     val bare = full.split('.').last
-    graft.ImpalaStats.lookup(bare).map { case (m, _) =>
+    graft.ImpalaStats.lookup(bare).map { m =>
       val parts = m.partitions()
       val partNames = m.partCols().fields.map(_.name.toLowerCase).toSet
       val whereTxt = """(?is)\bwhere\b(.*?)(?:\bgroup\s+by\b|\border\s+by\b|\blimit\b|$)""".r
@@ -250,167 +236,6 @@ object ImpalaExplain {
     }
   }
 
-  /** Impala slot size per scalar type (Type.getSlotSize — the BE tuple
-    * layout widths the cardinality estimator divides file bytes by).
-    */
-  private def slotSize(dt: org.apache.spark.sql.types.DataType): Double = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case BooleanType | ByteType => 1
-      case ShortType => 2
-      case IntegerType | FloatType | DateType => 4
-      case LongType | DoubleType => 8
-      case TimestampType => 16
-      case d: DecimalType =>
-        if (d.precision <= 9) 4 else if (d.precision <= 18) 8 else 16
-      case _ => 12 // STRING/VARCHAR StringValue slot (ptr + len)
-    }
-  }
-
-  /** `HdfsScanNode.getStatsNumRows`'s crude estimator divisor: the sum
-    * over all table columns (partition keys included) of each column's
-    * average serialized size — fixed types contribute their slot size,
-    * var-len types the COMPUTE STATS average length plus the slot
-    * (ColumnStats.java avgSerializedSize).
-    */
-  private def sumAvgRowSizes(m: graft.ImpalaStats.Model,
-      st: graft.ImpalaStats.State): Double = {
-    import org.apache.spark.sql.types.StringType
-    (m.cols().fields ++ m.partCols().fields).map { f =>
-      val base = slotSize(f.dataType)
-      f.dataType match {
-        case StringType =>
-          st.colStats.get(f.name.toLowerCase)
-            .filter(_.avgSize >= 0).map(_.avgSize + base).getOrElse(base)
-        case _ => base
-      }
-    }.sum
-  }
-
-  /** corrupt-stats.test EXPLAIN probes: `select count(*) from t
-    * [where <partition-only predicate>]` over a DDL-emulated table
-    * whose file bytes are modeled renders the reference's stats-driven
-    * plan exactly (`HdfsScanNode.getStatsNumRows` cardinality +
-    * corrupt-stats detection, `Planner.checkForSmallQueryOptimization`
-    * single-node collapse under EXEC_SINGLE_NODE_ROWS_THRESHOLD=100,
-    * `DistributedPlanner` merge-agg/exchange numbering).
-    */
-  private def statsCountPlan(spark: SparkSession, body: String)
-      : Option[Seq[String]] = {
-    val re = ("""(?is)^\s*select\s+count\s*\(\s*\*\s*\)\s+from\s+""" +
-      """([\w.]+)\s*(?:where\s+(.+?))?\s*;?\s*$""").r
-    val mt = re.findFirstMatchIn(body).getOrElse(return None)
-    val written = mt.group(1)
-    val bare = written.split('.').last.toLowerCase
-    val (m, st) = graft.ImpalaStats.lookup(bare).getOrElse(return None)
-    val parts = m.partitions()
-    // only DDL-emulated tables with real byte sizes qualify; fixture
-    // models with unmodeled sizes keep the generic plan rendering
-    if (parts.isEmpty || parts.exists(_.fileBytes.isEmpty)) return None
-    val partColNames = m.partCols().fields.map(_.name.toLowerCase).toSet
-    val whereTxt = Option(mt.group(2)).getOrElse("")
-    val conjuncts = splitTopAnd(whereTxt)
-    if (conjuncts.exists(c => identifiers(c).isEmpty ||
-        !identifiers(c).forall(partColNames))) return None
-    val sel =
-      if (conjuncts.isEmpty || partColNames.isEmpty) parts
-      else {
-        val keys = graft.ImpalaStats.matchPartitions(spark, bare,
-          conjuncts.mkString(" AND ")).getOrElse(return None)
-        parts.filter(p => keys.contains(p.values))
-      }
-    // ---- getStatsNumRows (HdfsScanNode.java:1211-1283) ----
-    var corrupt = false
-    var goodSum = -1L
-    var nGood = 0
-    val bad = mutable.ArrayBuffer.empty[graft.ImpalaStats.Partition]
-    sel.foreach { p =>
-      // an unpartitioned table's single pseudo-partition carries the
-      // table-level numRows (HMS stores its stats at table level)
-      val rows =
-        if (partColNames.isEmpty) st.rowCount
-        else st.partRows.getOrElse(p.values, -1L)
-      if (rows < -1 || (rows == 0 && p.fileBytes.sum > 0)) {
-        corrupt = true; bad += p
-      } else if (rows == -1) bad += p
-      else {
-        if (goodSum == -1) goodSum = 0
-        goodSum += rows; nGood += 1
-      }
-    }
-    val totalBytes = parts.map(_.fileBytes.sum).sum
-    var numRows =
-      if (bad.isEmpty && nGood > 0) goodSum
-      else {
-        var nr = st.rowCount
-        if (nr == -1L || corrupt) {
-          val estSize = bad.map(_.fileBytes.sum).sum
-          val divisor = sumAvgRowSizes(m, st)
-          val est =
-            if (divisor <= 0) Math.round(estSize / 8.0)
-            else Math.round(estSize / divisor)
-          nr = if (goodSum > 0) goodSum + est else est
-        }
-        nr
-      }
-    if (numRows < -1 || (numRows == 0 && totalBytes > 0)) {
-      corrupt = true
-      if (numRows < -1) numRows = -1
-    }
-    val cardinality = numRows
-    // scope the interception to the shapes corrupt-stats.test actually
-    // pins: corrupt or missing partition stats, or a small-query
-    // collapse. A healthy fully-stats'd table keeps the generic
-    // rendering (the hard-coded resource header lines below are only
-    // known-correct for the corrupt-stats fixture shapes).
-    if (!corrupt && bad.isEmpty && !(cardinality >= 0 && cardinality < 100))
-      return None
-    // ---- render ----
-    val label = written
-    val out = mutable.ArrayBuffer.empty[String]
-    out += "Max Per-Host Resource Reservation: Memory=5.00MB Threads=3"
-    out += "Per-Host Resource Estimates: Memory=124.00MB"
-    if (corrupt) {
-      out += "WARNING: The following tables have potentially corrupt table statistics."
-      out += "Drop and re-compute statistics to resolve this problem."
-      out += label
-    }
-    out += ""
-    out += "PLAN-ROOT SINK"
-    out += "|"
-    val cardTxt = if (cardinality < 0) "unavailable" else cardinality.toString
-    // small-query collapse: valid (non-corrupt, known) cardinality
-    // under the 100-row threshold executes single-node
-    val singleNode = !corrupt && cardinality >= 0 && cardinality < 100
-    if (singleNode) {
-      out += "01:AGGREGATE [FINALIZE]"
-      out += "|  output: count(*)"
-      out += "|  row-size=8B cardinality=1"
-      out += "|"
-    } else {
-      out += "03:AGGREGATE [FINALIZE]"
-      out += "|  output: count:merge(*)"
-      out += "|  row-size=8B cardinality=1"
-      out += "|"
-      out += "02:EXCHANGE [UNPARTITIONED]"
-      out += "|"
-      out += "01:AGGREGATE"
-      out += "|  output: count(*)"
-      out += "|  row-size=8B cardinality=1"
-      out += "|"
-    }
-    out += s"00:SCAN HDFS [$label]"
-    if (conjuncts.nonEmpty)
-      out += "   partition predicates: " +
-        conjuncts.map(_.replaceAll("\\s+", " ").trim).mkString(" AND ")
-    val files = sel.map(_.fileBytes.length).sum
-    val bytes = sel.map(_.fileBytes.sum).sum
-    out += s"   HDFS partitions=${sel.size}/${parts.size} " +
-      s"files=$files size=${fmtBytes(bytes)}"
-    out += s"   row-size=0B cardinality=$cardTxt"
-    Some(out.toSeq)
-  }
-
   /** EXTENDED-level `parquet statistics predicates:` detail: the
     * min/max-prunable comparison conjuncts a Parquet scan's row-group
     * statistics filter by (`HdfsScanNode` computeStatsTupleAndConjuncts
@@ -426,7 +251,7 @@ object ImpalaExplain {
     val full = names.head
     if (!full.toLowerCase.contains("parquet") &&
         !graft.ImpalaStats.lookup(full.split('.').last)
-          .exists(_._1.partitions().exists(
+          .exists(_.partitions().exists(
             _.format.equalsIgnoreCase("parquet")))) return Nil
     val bare = full.split('.').last
     val schema = scala.util.Try(spark.table(bare).schema)
@@ -434,7 +259,7 @@ object ImpalaExplain {
     val colTypes = schema.fields
       .map(f0 => f0.name.toLowerCase -> f0.dataType).toMap
     val partNames = graft.ImpalaStats.lookup(bare)
-      .map(_._1.partCols().fields.map(_.name.toLowerCase).toSet)
+      .map(_.partCols().fields.map(_.name.toLowerCase).toSet)
       .getOrElse(Set("year", "month")) // the alltypes family layout
     val whereTxt = """(?is)\bwhere\b(.*?)(?:\bgroup\s+by\b|\border\s+by\b|\blimit\b|$)""".r
       .findFirstMatchIn(body).map(_.group(1)).getOrElse(return Nil)

@@ -125,7 +125,7 @@ object PartitionKeyScans {
     */
   private def substitute(spark: SparkSession, sa: SubqueryAlias,
       refs: AttributeSet): Option[LogicalPlan] = {
-    val (model, _) =
+    val model =
       graft.ImpalaStats.lookup(sa.identifier.name).getOrElse(return None)
     val partCols = model.partCols()
     if (partCols.isEmpty) return None

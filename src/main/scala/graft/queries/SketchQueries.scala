@@ -146,7 +146,7 @@ object SketchQueries extends QueryGroup {
 
     // ---- histogram over a numeric column (aggregate-functions-ir.cc
     // ReservoirSample→HistogramFinalize, semantics pinned verbatim by
-    // the reference's aggregation.test goldens in FunctionalGoldenSpec):
+    // the reference's aggregation.test goldens):
     // sorted samples, min(n,100) buckets at index (b+1)·max(n/100,1)−1,
     // DECIMAL input printed as the raw unscaled value (PrintSample
     // <DecimalVal>). Groups are far below the 20 000-sample reservoir,

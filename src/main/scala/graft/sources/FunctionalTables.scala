@@ -1093,8 +1093,8 @@ object FunctionalTables {
     }
     // bad_parquet (IMPALA-694/720, schema template:1719): parquet-mr
     // 1.2.5 file whose footer undercounts the pages Impala recovers;
-    // Spark/parquet-mr trust the footer — the row-count difference is
-    // a documented delta in FunctionalGoldenSpec. Declared column name
+    // Spark/parquet-mr trust the footer, so the row count differs from
+    // Impala's. Declared column name
     // is `field`; the file says `x` (Impala resolves by position).
     val badPq = refRoot.resolve("data/bad_parquet_data.parquet")
     if (java.nio.file.Files.isRegularFile(badPq)) try {

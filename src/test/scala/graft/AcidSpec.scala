@@ -17,7 +17,7 @@ import graft.sources.AcidFiles.WriteIds
   */
 class AcidSpec extends SparkSpecBase {
 
-  private lazy val wh = Files.createTempDirectory("graft-acid-spec")
+  private lazy val wh = GraftSession.tempDir("graft-acid-spec")
 
   test("insert delta round-trip with row__id") {
     import spark.implicits._
@@ -142,7 +142,7 @@ class AcidSpec extends SparkSpecBase {
     import spark.implicits._
     val dir = wh.resolve("t6")
     // insert-only deltas hold plain files
-    val tmp = Files.createTempDirectory("graft-acid-io")
+    val tmp = GraftSession.tempDir("graft-acid-io")
     Seq(1, 2).toDF("x").coalesce(1).write.mode("overwrite")
       .orc(tmp.resolve("d").toString)
     val part = {

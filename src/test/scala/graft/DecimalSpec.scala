@@ -51,6 +51,38 @@ class DecimalSpec extends SparkSpecBase {
       e.getMessage.contains("cannot be represented"), e.getMessage)
   }
 
+  /** The error an Impala-dialect query over one row of DECIMAL(38,0)
+    * operands raises: `big` is the largest 38-digit value, `d34` a
+    * 34-digit one.
+    */
+  private def v2Error(sql: String): String = {
+    spark.sql("SELECT CAST('9' || repeat('9', 37) AS DECIMAL(38,0)) AS big, " +
+        "CAST(1 AS DECIMAL(38,0)) AS one, " +
+        "CAST('1' || repeat('0', 33) AS DECIMAL(38,0)) AS d34")
+      .createOrReplaceTempView("dec_v2")
+    intercept[Exception](ImpalaDialect.sql(spark, sql).collect()).getMessage
+  }
+
+  // ImpalaDecimalArithGuard: Impala raises where Spark's TRY arithmetic
+  // (which the dialect asks for, to own the message) would return NULL
+  test("DECIMAL_V2 multiply overflow raises Impala's error, not NULL") {
+    val msg = v2Error("SELECT big * big FROM dec_v2")
+    assert(msg.contains("UDF ERROR: Decimal expression overflowed"), msg)
+  }
+
+  test("DECIMAL_V2 add overflow raises Impala's error, not NULL") {
+    val msg = v2Error("SELECT big + one FROM dec_v2")
+    assert(msg.contains("UDF ERROR: Decimal expression overflowed"), msg)
+  }
+
+  // ImpalaDecimalRescale: Impala's avg over DECIMAL(38,0) returns
+  // DECIMAL(38,6), where a 34-digit mean does not fit; Spark's own
+  // DECIMAL(38,4) result would hold it
+  test("DECIMAL_V2 avg overflows at Impala's result scale") {
+    val msg = v2Error("SELECT avg(d34) FROM dec_v2")
+    assert(msg.contains("UDF ERROR: Avg computation overflowed"), msg)
+  }
+
   test("aggregate decimal sum is exact across repartitioning") {
     import spark.implicits._
     val df = (1 to 9999).map(i => BigDecimal(i) / 100).toDF("d")

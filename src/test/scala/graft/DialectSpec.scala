@@ -31,6 +31,51 @@ class DialectSpec extends SparkSpecBase {
     assert(rn(None) == 3)
   }
 
+  // found by scripts/dialect_check.py: the fixtures' timestamps read as
+  // TIMESTAMP_NTZ, and these five returned NULL for every row
+  test("date_add/date_sub/adddate/subdate/add_months shift the fixtures' timestamps") {
+    GraftSession.registerAll(spark, sfDir)
+    val row = ImpalaDialect.sql(spark, """
+      SELECT count(*),
+        count(CASE WHEN date_add(o_orderdate, 3) = days_add(o_orderdate, 3) THEN 1 END),
+        count(CASE WHEN date_sub(o_orderdate, 3) = days_sub(o_orderdate, 3) THEN 1 END),
+        count(CASE WHEN adddate(o_orderdate, 3) = days_add(o_orderdate, 3) THEN 1 END),
+        count(CASE WHEN subdate(o_orderdate, 3) = days_sub(o_orderdate, 3) THEN 1 END),
+        count(CASE WHEN add_months(o_orderdate, 13) = months_add(o_orderdate, 13) THEN 1 END)
+      FROM orders""").head()
+    val n = row.getLong(0)
+    assert(n > 0 && (1 to 5).forall(row.getLong(_) == n), row.toString)
+  }
+
+  // found by scripts/dialect_check.py: trunc(ts, 'Q') was NULL, and
+  // trunc returned a DATE where Impala keeps the TIMESTAMP
+  test("trunc keeps a TIMESTAMP a TIMESTAMP and knows every Impala unit") {
+    GraftSession.registerAll(spark, sfDir)
+    // 2001-08-17 is a Friday; 2001 starts on a Monday, August on a Wednesday
+    val ts = "CAST('2001-08-17 10:35:12' AS TIMESTAMP)"
+    def at(unit: String, of: String = ts): String =
+      ImpalaDialect.sql(spark, s"SELECT CAST(trunc($of, '$unit') AS STRING)")
+        .head().getString(0)
+    assertRows(Seq(
+      ("YEAR", () => at("YEAR"), "2001-01-01 00:00:00"),
+      ("Y", () => at("Y"), "2001-01-01 00:00:00"),
+      ("Q", () => at("Q"), "2001-07-01 00:00:00"),
+      ("MM", () => at("MM"), "2001-08-01 00:00:00"),
+      ("WW", () => at("WW"), "2001-08-13 00:00:00"),
+      ("W", () => at("W"), "2001-08-15 00:00:00"),
+      ("DD", () => at("DD"), "2001-08-17 00:00:00"),
+      ("D", () => at("D"), "2001-08-13 00:00:00"),
+      ("HH", () => at("HH"), "2001-08-17 10:00:00"),
+      ("MI", () => at("MI"), "2001-08-17 10:35:00"),
+      ("DATE stays DATE", () => at("Q", "DATE '2001-08-17'"), "2001-07-01"),
+      ("fixture column", () => ImpalaDialect.sql(spark,
+        "SELECT CAST(trunc(o_orderdate, 'Q') AS STRING) FROM orders " +
+          "WHERE o_orderdate = '1995-05-01'").head().getString(0),
+        "1995-04-01 00:00:00")))
+    val e = intercept[Exception](at("XX"))
+    assert(e.getMessage.contains("Invalid Truncate Unit: XX"), e.getMessage)
+  }
+
   test("CAST ... FORMAT clause translates ISO-SQL patterns") {
     val ts = ImpalaDialect.sql(spark,
       "SELECT CAST('2024-02-29 13:45:59' AS TIMESTAMP FORMAT 'YYYY-MM-DD HH24:MI:SS') t")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,9 +14,9 @@ class EventsStreamSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("file-stream tumbling agg == batch result after incremental arrival") {
-    val src = Files.createTempDirectory("graft_ev_src").toString
-    val out = Files.createTempDirectory("graft_ev_out").toString
-    val ckp = Files.createTempDirectory("graft_ev_ckp").toString
+    val src = GraftSession.tempDir("graft_ev_src").toString
+    val out = GraftSession.tempDir("graft_ev_out").toString
+    val ckp = GraftSession.tempDir("graft_ev_ckp").toString
 
     val all = GraftSession.table(spark, sfDir, "events")
       .select($"event_id", $"ts".cast("timestamp").as("ts"), $"user_id",

@@ -2,8 +2,7 @@ package graft
 
 /** Impala-shaped EXPLAIN rendering (plans.ImpalaExplain) — the level-0
   * and level-1 shapes are pinned verbatim by the reference's
-  * explain-level0.test / explain-level1.test (gated in
-  * FunctionalGoldenSpec); this spec asserts the structural pieces
+  * explain-level0.test / explain-level1.test; this spec asserts the structural pieces
   * directly: node numbering, broadcast branch layout, runtime-filter
   * edges, the coordinator crown, and the missing-stats warning.
   */

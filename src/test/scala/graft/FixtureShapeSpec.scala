@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -61,7 +59,7 @@ class FixtureShapeSpec extends SparkSpecBase {
   }
 
   test("events.ts TIMESTAMP(NANOS) shape normalizes to TimestampType, µs-truncated") {
-    val dir = Files.createTempDirectory("graft_fix_nanos").toString
+    val dir = GraftSession.tempDir("graft_fix_nanos").toString
     // nanos value with sub-µs residue: truncation must floor to `micros`.
     writeNanosFile(dir, micros * 1000L + 345L, annotate = true)
     val (dt, v) = readTs(dir)
@@ -70,7 +68,7 @@ class FixtureShapeSpec extends SparkSpecBase {
   }
 
   test("events.ts raw int64 (no NANOS annotation) rejects from the footer, no scan") {
-    val dir = Files.createTempDirectory("graft_fix_rawint").toString
+    val dir = GraftSession.tempDir("graft_fix_rawint").toString
     // a µs count stored as plain INT64 — dividing by 1000 would land
     // in ~1970; the footer check must reject WITHOUT scanning the data
     // (the r8 guard ran a min/max job here). spark.read's own schema
@@ -96,7 +94,7 @@ class FixtureShapeSpec extends SparkSpecBase {
   }
 
   test("events.ts timestamp_ntz (current fixture shape) normalizes, value-identical") {
-    val dir = Files.createTempDirectory("graft_fix_ntz").toString
+    val dir = GraftSession.tempDir("graft_fix_ntz").toString
     writeEvents(dir) {
       spark.range(1).select(lit(1L).as("event_id"),
         timestamp_micros(lit(micros)).cast(TimestampNTZType).as("ts"))
@@ -107,7 +105,7 @@ class FixtureShapeSpec extends SparkSpecBase {
   }
 
   test("events.ts instant timestamp shape passes through unchanged") {
-    val dir = Files.createTempDirectory("graft_fix_ltz").toString
+    val dir = GraftSession.tempDir("graft_fix_ltz").toString
     writeEvents(dir) {
       spark.range(1).select(lit(1L).as("event_id"),
         timestamp_micros(lit(micros)).as("ts"))

@@ -23,7 +23,7 @@ class FormatsSpec extends SparkSpecBase {
       col("l_returnflag"), col("ln")).cast("long"))).head().getLong(0)
 
   test("Impala TEXT table roundtrip (ctrl-A delim, \\N nulls)") {
-    val dir = Files.createTempDirectory("graft_text").toString
+    val dir = GraftSession.tempDir("graft_text").toString
     Formats.writeTextTable(li, dir)
     val back = Formats.readTextTable(spark, dir, li.schema)
     assert(back.count() == li.count())
@@ -34,28 +34,28 @@ class FormatsSpec extends SparkSpecBase {
   }
 
   test("ORC roundtrip") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = GraftSession.tempDir("graft_orc").toString
     Formats.writeOrc(li, dir)
     val back = Formats.readOrc(spark, dir)
     assert(fingerprint(back) == fingerprint(li))
   }
 
   test("JSON-lines roundtrip (schema-on-read)") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = GraftSession.tempDir("graft_json").toString
     Formats.writeJsonLines(li, dir)
     val back = Formats.readJsonLines(spark, dir, Some(li.schema))
     assert(fingerprint(back) == fingerprint(li))
   }
 
   test("CSV with custom delimiter") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = GraftSession.tempDir("graft_csv").toString
     li.write.mode("overwrite").option("delimiter", "|").csv(dir)
     val back = Formats.readCsv(spark, dir, li.schema, delim = "|")
     assert(back.count() == li.count())
   }
 
   test("Avro roundtrip (container files on the core library, nulls kept)") {
-    val dir = Files.createTempDirectory("graft_avro").toString
+    val dir = GraftSession.tempDir("graft_avro").toString
     Formats.writeAvro(li, dir)
     val back = Formats.readAvro(spark, dir)
     assert(back.schema.fieldNames.toSeq == li.schema.fieldNames.toSeq)

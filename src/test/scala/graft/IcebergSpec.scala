@@ -16,7 +16,7 @@ class IcebergSpec extends SparkSpecBase {
 
   test("Iceberg runtime present: catalog round-trip; absent: clean failure") {
     if (icebergPresent) {
-      val wh = java.nio.file.Files.createTempDirectory("graft_iceberg").toString
+      val wh = GraftSession.tempDir("graft_iceberg").toString
       spark.conf.set("spark.sql.catalog.graft_ice",
         "org.apache.iceberg.spark.SparkCatalog")
       spark.conf.set("spark.sql.catalog.graft_ice.type", "hadoop")

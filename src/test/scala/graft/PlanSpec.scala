@@ -164,7 +164,7 @@ class PlanSpec extends SparkSpecBase {
     // is catalog-read vs full-table-scan — the plan must contain NO
     // file scan, and ineligible shapes (count(*)) must keep the scan.
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pks").toString
+    val dir = GraftSession.tempDir("graft_pks").toString
     import spark.implicits._
     Seq((1, "a", 2009, 1), (2, "b", 2009, 2), (3, "c", 2010, 1),
       (4, "d", 2010, 1))
@@ -183,8 +183,7 @@ class PlanSpec extends SparkSpecBase {
       () => StructType(Seq(StructField("year", IntegerType),
         StructField("month", IntegerType))),
       () => parts.map { case (p, b) => ImpalaStats.Partition(
-        p.map(Option(_)), Seq(b), "PARQUET", "") },
-      () => tbl))
+        p.map(Option(_)), Seq(b), "PARQUET", "") }))
     try {
       // the PRODUCT path: SET flows through ImpalaOptions onto the conf
       ImpalaDialect.sql(spark, "set optimize_partition_key_scans=1")

@@ -161,7 +161,7 @@ class SemanticsSpec extends SparkSpecBase {
   }
 
   test("INSERT INTO / INSERT OVERWRITE partitioned table (HdfsTableSink)") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_ins").toString
+    val loc = GraftSession.tempDir("graft_ins").toString
     spark.sql("DROP TABLE IF EXISTS graft_ins_t")
     spark.sql(
       s"""CREATE TABLE graft_ins_t (k INT, v STRING) USING parquet

@@ -34,7 +34,7 @@ class SimilaritySpec extends SparkSpecBase {
         .map { case (id, sim) =>
           id -> BigDecimal(sim).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
         }
-      val dir = java.nio.file.Files.createTempDirectory("graft-sim-exact")
+      val dir = GraftSession.tempDir("graft-sim-exact")
       try {
         vecs.toDF("vec_id", "embedding")
           .write.parquet(s"$dir/embeddings.parquet")

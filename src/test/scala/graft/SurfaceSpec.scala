@@ -145,18 +145,20 @@ class SurfaceSpec extends SparkSpecBase {
       (1 to 22).foreach(i => SparkEntry.queries(s"tpch_q$i")(spark, sfDir).collect())
       compiled - c0
     }
+    // The first pass compiles whatever of TPC-H's ~280 generated classes
+    // earlier suites in this JVM have not, so its count depends on the
+    // suite order; the second pass's does not. A cache of Spark's
+    // default size cannot hold the working set and recompiles well over
+    // half of it on every pass, cold or warm. The tuned cache holds it:
+    // the second pass recompiles nothing in a JVM of its own, and only
+    // a few classes in the shared test JVM, because Spark keys the cache
+    // by the compiling thread's context class loader and the driver's
+    // exchange thread pools carry several.
     val first = pass()
-    val sparkDefault = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.defaultValue.get
-    assert(first > sparkDefault,
-      s"first pass compiled $first classes, no more than Spark's default cache holds")
-    // A cache of Spark's default size reuses at most that many classes.
-    // In a JVM of its own the second pass compiles nothing; in the shared
-    // test JVM it compiles a few classes again, because Spark keys the
-    // cache by the compiling thread's context class loader and the
-    // driver's exchange thread pools carry several.
     val second = pass()
-    assert(first - second > sparkDefault,
-      s"second pass recompiled $second of $first classes")
+    val sparkDefault = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.defaultValue.get
+    assert(second < sparkDefault / 4,
+      s"second pass recompiled $second classes (first pass $first)")
   }
 
   test("only GraftSession.scala builds a Spark session") {

@@ -24,8 +24,8 @@ import java.nio.file.{Files, Paths}
   */
 class ViewsCompatSpec extends SparkSpecBase {
 
-  private val dir = Paths.get(sys.env.getOrElse("GRAFT_GOLDEN_FUNC_DIR",
-    "/root/reference/testdata/workloads/functional-query/queries/QueryTest"))
+  private val dir = Paths.get(
+    "/root/reference/testdata/workloads/functional-query/queries/QueryTest")
 
   private case class Block(
       createSql: String,
