@@ -1142,47 +1142,6 @@ object ImpalaDialect {
       If(RLike(c.child, timeOnlyRe),
         Literal.create(null, TimestampType),
         ImpalaTsValid(c.copy(evalMode = EvalMode.TRY)))
-    // a column with a corrupt Parquet page index: ABORT_ON_ERROR=1
-    // raises the scanner's error, =0 reads clean ignoring the index
-    // (parquet-page-index.test recovery semantics)
-    case s: graft.functions.ImpalaPageIndexSentinel =>
-      if (org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("graft.opt.ABORT_ON_ERROR", "0")
-          .toLowerCase.matches("1|true"))
-        graft.functions.ImpalaRaiseOnRead(
-          "Invalid offset index in Parquet file", s.dataType)
-      else s.child
-    // a scan column with out-of-range raw values: ABORT_ON_ERROR=1
-    // raises the scanner's message on the first bad value, =0 keeps
-    // the sentinel's own NULL-recovery eval
-    case s: graft.functions.ImpalaScanRangeSentinel
-        if org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("graft.opt.ABORT_ON_ERROR", "0")
-          .toLowerCase.matches("1|true") => {
-      import org.apache.spark.sql.catalyst.expressions.{If => CIf, Or,
-        LessThan, GreaterThan, MicrosToTimestamp, RaiseError}
-      CIf(Or(LessThan(s.child,
-            MicrosToTimestamp(Literal(s.loMicros))),
-          GreaterThan(s.child,
-            MicrosToTimestamp(Literal(s.hiMicros)))),
-        Cast(new RaiseError(Literal(s.msg)), s.dataType),
-        s.child)
-    }
-    // DATE twin: raw epoch-day ints outside Impala's range raise under
-    // ABORT_ON_ERROR=1 (valid values convert via the 1970 epoch)
-    case s: graft.functions.ImpalaDateRangeSentinel
-        if org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("graft.opt.ABORT_ON_ERROR", "0")
-          .toLowerCase.matches("1|true") => {
-      import org.apache.spark.sql.catalyst.expressions.{If => CIf, Or,
-        LessThan, GreaterThan, RaiseError, DateAdd}
-      CIf(Or(LessThan(s.child, Literal(-719162)),
-          GreaterThan(s.child, Literal(2932896))),
-        Cast(new RaiseError(Literal(s.msg)),
-          org.apache.spark.sql.types.DateType),
-        DateAdd(Literal.create(0, org.apache.spark.sql.types.DateType),
-          s.child))
-    }
     // uncorrelated scalar subqueries raise Impala's multi-row error
     // ("Subquery must not return more than one row:") — the guard
     // aggregate replaces Spark's own runtime assert, same shape
@@ -1872,15 +1831,11 @@ object ImpalaDialect {
     }
   }
 
-  /** MAX_SCAN_RANGE_LENGTH vs multi-line text headers
-    * (`hdfs-text-scanner.cc:745-751`): when a table's
-    * skip.header.line.count > 1 and the first scan range (the option's
-    * byte length) ends before every header line is skipped, the scan
-    * FAILS — a 1-line header is handled across ranges. The registry in
-    * [[sources.FunctionalTables.headerTables]] carries the header
-    * line-end offsets; the check is a driver-side plan walk.
+  /** Query options that reject a statement before it runs: a
+    * MEM_LIMIT below the buffer-reservation floor and a DEBUG_ACTION
+    * FAIL. A driver-side walk of the analyzed plan.
     */
-  private def checkScanRangeHeader(spark: SparkSession,
+  private def checkMemLimitAndDebugAction(spark: SparkSession,
       analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Unit = {
     // DEBUG_ACTION failure injection (debug-util.cc DebugActionImpl —
@@ -1938,69 +1893,6 @@ object ImpalaDialect {
           throw new RuntimeException("Debug Action: FAIL")
       }
     }
-    // ambiguous-array leaves whose primitive slot bound a Parquet
-    // GROUP under the session's resolution policy: referencing one
-    // rejects the scan (incompatible Parquet schema); untouched leaves
-    // read fine (parquet-ambiguous-list-*.test)
-    if (sources.ParquetArrayResolution.incompatLeaves.nonEmpty) {
-      val referenced = scala.collection.mutable.Set.empty[String]
-      analyzed.foreach {
-        case sa: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-          if (sources.ParquetArrayResolution.incompatLeaves
-              .contains(sa.identifier.name.toLowerCase))
-            referenced += sa.identifier.name.toLowerCase
-        case _ =>
-      }
-      if (referenced.nonEmpty) {
-        val leaves = referenced.toSeq.flatMap(
-          sources.ParquetArrayResolution.incompatLeaves(_))
-        analyzed.foreach { p =>
-          p.expressions.foreach(_.foreach {
-            case g: org.apache.spark.sql.catalyst.expressions.GetStructField
-                if g.name.exists(n =>
-                  leaves.exists(_._1.equalsIgnoreCase(n))) =>
-              throw new RuntimeException(leaves.find(l =>
-                g.name.exists(l._1.equalsIgnoreCase)).get._2)
-            case g: org.apache.spark.sql.catalyst.expressions
-                .GetArrayStructFields
-                if leaves.exists(_._1.equalsIgnoreCase(g.field.name)) =>
-              throw new RuntimeException(leaves.find(
-                _._1.equalsIgnoreCase(g.field.name)).get._2)
-            case _ =>
-          })
-        }
-      }
-    }
-    val msrl = spark.conf.getOption("graft.opt.MAX_SCAN_RANGE_LENGTH")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(0L)
-    // ABORT_ON_ERROR=1: a scan that hits a row the scanner rejects
-    // FAILS with the per-format message instead of NULLing the value
-    // (hdfs-scanner.cc error path; the dateless-timestamp fixtures)
-    val abort = spark.conf.getOption("graft.opt.ABORT_ON_ERROR")
-      .exists(v => v.trim == "1" || v.trim.equalsIgnoreCase("true"))
-    if ((sources.FunctionalTables.headerTables.isEmpty || msrl <= 0) &&
-      (!abort || sources.FunctionalTables.abortOnErrorTables.isEmpty))
-      return
-    analyzed.foreach {
-      case sa: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        if (abort)
-          sources.FunctionalTables.abortOnErrorTables
-            .get(sa.identifier.name.toLowerCase)
-            .foreach(msg => throw new RuntimeException(msg))
-        if (msrl > 0) sources.FunctionalTables.headerTables
-          .get(sa.identifier.name.toLowerCase).foreach {
-            case (lines, ends) if lines > 1 && ends.nonEmpty &&
-                msrl < ends.last =>
-              val skipped = ends.count(_ <= msrl)
-              throw new RuntimeException(
-                s"Could only skip $skipped header lines in first scan " +
-                  s"range but expected $lines. Try increasing " +
-                  "max_scan_range_length to a value larger than the " +
-                  "size of the file's header.")
-            case _ =>
-          }
-      case _ =>
-    }
   }
 
   private val explainRe = """(?is)^\s*explain\s+(select\b.*|with\b.*|values\b.*)$""".r
@@ -2028,7 +1920,7 @@ object ImpalaDialect {
         : DataFrame = {
       val df = org.apache.spark.sql.graft.Bridge.ofRows(spark, plan)
       val analyzed = df.queryExecution.analyzed
-      checkScanRangeHeader(spark, analyzed)
+      checkMemLimitAndDebugAction(spark, analyzed)
       val fixed0 = analyzed.transformUpWithSubqueries {
         case p => p.transformExpressionsUp(impalaExpr)
       }

@@ -296,79 +296,15 @@ case class ImpalaTrunc(child: Expression, unit: Expression)
   override def prettyName: String = "trunc"
 }
 
-/** Marks a column whose Parquet page index failed validation
-  * (ParquetFooterCheck.invalidOffsetIndexColumns). Inert pass-through
-  * until the dialect's per-statement pass resolves it against
-  * ABORT_ON_ERROR: =1 raises the scanner's "Invalid offset index in
-  * Parquet file" (Impala aborts the query), =0 strips to the raw
-  * column (Impala recovers by ignoring the index) —
-  * parquet-page-index.test pins both sides.
-  */
-case class ImpalaPageIndexSentinel(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(v: Any): Any = v
-  override protected def withNewChildInternal(c: Expression): ImpalaPageIndexSentinel =
-    copy(c)
-  override def prettyName: String = "impala_page_index_sentinel"
-}
-
-/** Marks a scan column whose raw values may sit outside Impala's
-  * representable range. Inert pass-through until the dialect's
-  * per-statement pass resolves it against ABORT_ON_ERROR: =1 raises
-  * `msg` when an out-of-range value is READ (Impala aborts the scan),
-  * =0 nulls it (Impala's recover-with-warning path). `loMicros` /
-  * `hiMicros` bound the valid range in UTC epoch micros.
-  */
-case class ImpalaScanRangeSentinel(child: Expression, msg: String,
-    loMicros: Long, hiMicros: Long)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(v: Any): Any = {
-    val us = v.asInstanceOf[Long]
-    if (us < loMicros || us > hiMicros) null else us
-  }
-  override protected def withNewChildInternal(c: Expression): ImpalaScanRangeSentinel =
-    copy(child = c)
-  override def prettyName: String = "impala_scan_range_sentinel"
-}
-
-/** DATE twin of [[ImpalaScanRangeSentinel]]: child is the RAW stored
-  * epoch-day int; values outside Impala's [0001-01-01, 9999-12-31]
-  * null here (recovery read) or raise `msg` under ABORT_ON_ERROR=1
-  * (the dialect resolves it).
-  */
-case class ImpalaDateRangeSentinel(child: Expression, msg: String)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = DateType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(v: Any): Any = {
-    val d = v.asInstanceOf[Number].intValue
-    if (d < -719162 || d > 2932896) null else d
-  }
-  override protected def withNewChildInternal(c: Expression): ImpalaDateRangeSentinel =
-    copy(child = c)
-  override def prettyName: String = "impala_date_range_sentinel"
-}
-
 /** A column that raises `msg` if (and only if) it is actually READ.
   * Deliberately NON-foldable: ConstantFolding must never evaluate it
-  * at plan time — an unused poison column gets pruned away (the
-  * metadata-only count(*) path over a BIT_PACKED file), a referenced
-  * one raises per scan.
+  * at plan time — an unused poison column gets pruned away, a
+  * referenced one raises per row.
   */
-case class ImpalaRaiseOnRead(msg: String, dataType: DataType,
-    det: Boolean = true)
+case class ImpalaRaiseOnRead(msg: String, dataType: DataType)
     extends LeafExpression with CodegenFallback {
   override def nullable: Boolean = true
   override def foldable: Boolean = false
-  // det=false keeps ConvertToLocalRelation from eagerly evaluating a
-  // poisoned projection over a LocalRelation-backed view while column
-  // pruning still drops it when unreferenced (unsupported_types);
-  // aggregate-guard uses must stay deterministic (CheckAnalysis)
-  override lazy val deterministic: Boolean = det
   override def eval(input: InternalRow): Any =
     throw new RuntimeException(msg)
 }

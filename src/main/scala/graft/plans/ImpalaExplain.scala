@@ -41,10 +41,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     plan shape, and the missing-stats warning
   *     (`fe/.../planner/PlanFragment.java` appends it when referenced
   *     tables lack row/column stats). Tables count as "analyzed" when
-  *     the session catalog holds stats for them or when listed in the
-  *     `graft.explain.analyzed` conf (db names or full names) — the
-  *     hook for environments whose stats live outside the session
-  *     catalog.
+  *     the session catalog holds stats for them.
   *
   * Levels: 0 = MINIMAL (node lines only), 1 = STANDARD (key details +
   * `|` connectors), 2+ = EXTENDED adds output exprs and per-node
@@ -175,24 +172,16 @@ object ImpalaExplain {
     (text, names)
   }
 
-  /** Does the session consider `name` (as written, possibly qualified)
-    * stats-covered? True when the catalog table carries stats or the
-    * `graft.explain.analyzed` conf lists the name or its db.
+  /** Does the session catalog hold stats for `name` (as written,
+    * possibly qualified)?
     */
   private def hasStats(spark: SparkSession, name: String): Boolean = {
-    val analyzed = spark.conf.getOption("graft.explain.analyzed")
-      .map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val lower = name.toLowerCase
-    val db = lower.split('.').dropRight(1).mkString(".")
-    analyzed(lower) || (db.nonEmpty && analyzed(db)) || {
-      val parts = name.split('.')
-      val ident =
-        if (parts.length > 1) TableIdentifier(parts.last, Some(parts.head))
-        else TableIdentifier(name)
-      scala.util.Try(spark.sessionState.catalog.getTableMetadata(ident)
-        .stats.isDefined).getOrElse(false)
-    }
+    val parts = name.split('.')
+    val ident =
+      if (parts.length > 1) TableIdentifier(parts.last, Some(parts.head))
+      else TableIdentifier(name)
+    scala.util.Try(spark.sessionState.catalog.getTableMetadata(ident)
+      .stats.isDefined).getOrElse(false)
   }
 
   /** When the statement reads exactly ONE relation that lives in the

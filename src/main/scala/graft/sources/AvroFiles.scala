@@ -141,49 +141,6 @@ object AvroFiles {
     }.count() // force the write
   }
 
-  /** Scan a set of Avro container files RESOLVED against a reader
-    * schema — Avro's own schema-resolution rules (match fields by name,
-    * fill reader defaults for fields absent from the writer schema,
-    * promote int→long/float/double), the semantics the reference's Avro
-    * scanner implements natively
-    * (`be/src/exec/hdfs-avro-scanner.cc` ResolveSchemas /
-    * `be/src/exec/read-write-util.h` promotions). Each file may carry a
-    * DIFFERENT writer schema (an evolved lake); the reader schema is
-    * the table's contract. One task per file, as in [[readAvro]].
-    */
-  def readAvroResolved(spark: SparkSession, files: Seq[String],
-      readerSchemaJson: String): DataFrame = {
-    require(files.nonEmpty, "no avro files given")
-    val parser = new Schema.Parser()
-    parser.setValidateDefaults(false)
-    val readerSchema = parser.parse(readerSchemaJson)
-    val structType = structTypeFor(readerSchema)
-    val width = structType.size
-    val targets = structType.fields.map(_.dataType)
-    val rows = spark.sparkContext
-      .parallelize(files, files.length)
-      .flatMap { f =>
-        val p = new Schema.Parser()
-        p.setValidateDefaults(false)
-        val datumReader = new GenericDatumReader[GenericRecord](
-          null, p.parse(readerSchemaJson))
-        val reader = new DataFileReader[GenericRecord](
-          new java.io.File(f), datumReader)
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = reader.hasNext
-            if (!h) reader.close()
-            h
-          }
-          def next(): Row = {
-            val rec = reader.next()
-            Row.fromSeq((0 until width).map(i => coerce(rec.get(i), targets(i))))
-          }
-        }
-      }
-    spark.createDataFrame(rows, structType)
-  }
-
   /** Distributed scan: schema from the first container header, then one
     * task per file iterating its records.
     */

@@ -15,30 +15,28 @@ class ExplainSpec extends SparkSpecBase {
 
   test("level 0: broadcast join renders Impala's minimal shape") {
     spark.conf.set("graft.explain.level", "0")
-    spark.conf.set("graft.explain.analyzed", "tpch")
     try {
       val out = lines(
         "explain select * from tpch.lineitem join tpch.orders on l_orderkey = o_orderkey")
       assert(out(0).matches(
         raw"Max Per-Host Resource Reservation: Memory=[0-9.]*MB Threads=[0-9]*"))
       assert(out(1).matches(raw"Per-Host Resource Estimates: Memory=[0-9.]*MB"))
-      assert(out(2) == "")
-      assert(out(3) == "PLAN-ROOT SINK")
-      assert(out(4) == "04:EXCHANGE [UNPARTITIONED]")
-      assert(out(5) == "02:HASH JOIN [INNER JOIN, BROADCAST]")
-      assert(out(6) == "|--03:EXCHANGE [BROADCAST]")
-      assert(out(7) == "|  01:SCAN HDFS [tpch.orders]")
-      assert(out(8) == "00:SCAN HDFS [tpch.lineitem]")
-      assert(out.length == 9)
-    } finally {
-      spark.conf.unset("graft.explain.level")
-      spark.conf.unset("graft.explain.analyzed")
-    }
+      assert(out(2) == "WARNING: The following tables are missing " +
+        "relevant table and/or column statistics.")
+      assert(out(3) == "tpch.lineitem, tpch.orders")
+      assert(out(4) == "")
+      assert(out.drop(5) == Seq(
+        "PLAN-ROOT SINK",
+        "04:EXCHANGE [UNPARTITIONED]",
+        "02:HASH JOIN [INNER JOIN, BROADCAST]",
+        "|--03:EXCHANGE [BROADCAST]",
+        "|  01:SCAN HDFS [tpch.orders]",
+        "00:SCAN HDFS [tpch.lineitem]"), out.mkString("\n"))
+    } finally spark.conf.unset("graft.explain.level")
   }
 
   test("level 1: detail lines, separators and runtime-filter edges") {
     spark.conf.set("graft.explain.level", "1")
-    spark.conf.set("graft.explain.analyzed", "tpch")
     try {
       val out = lines(
         "explain select * from tpch.lineitem join tpch.orders on l_orderkey = o_orderkey")
@@ -63,10 +61,7 @@ class ExplainSpec extends SparkSpecBase {
       assert(body(17) == "   runtime filters: RF000 -> l_orderkey")
       assert(body(18).startsWith("   row-size="))
       assert(body.length == 19)
-    } finally {
-      spark.conf.unset("graft.explain.level")
-      spark.conf.unset("graft.explain.analyzed")
-    }
+    } finally spark.conf.unset("graft.explain.level")
   }
 
   test("missing-stats warning lists unanalyzed tables in first-use order") {
@@ -84,7 +79,6 @@ class ExplainSpec extends SparkSpecBase {
 
   test("aggregate renders STREAMING below the exchange, FINALIZE above") {
     spark.conf.set("graft.explain.level", "0")
-    spark.conf.set("graft.explain.analyzed", "tpch")
     try {
       val out = lines(
         "explain select l_returnflag, count(*) from tpch.lineitem group by l_returnflag")
@@ -93,10 +87,7 @@ class ExplainSpec extends SparkSpecBase {
       assert(agg.exists(_.contains("AGGREGATE [STREAMING]")), out.mkString("\n"))
       assert(out.exists(_.matches(raw"\d\d:EXCHANGE \[HASH\(l_returnflag.*\)\]")),
         out.mkString("\n"))
-    } finally {
-      spark.conf.unset("graft.explain.level")
-      spark.conf.unset("graft.explain.analyzed")
-    }
+    } finally spark.conf.unset("graft.explain.level")
   }
 
   test("EXPLAIN plans without AQE and leaves the caller's session conf alone") {

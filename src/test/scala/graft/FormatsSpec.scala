@@ -78,4 +78,26 @@ class FormatsSpec extends SparkSpecBase {
       StructField("raw", BinaryType, nullable = true)))
     assert(AvroFiles.structTypeFor(AvroFiles.avroSchemaFor(st)) == st)
   }
+
+  test("a truncated or bad-magic parquet file fails the scan, not reads as rows") {
+    val src = GraftSession.tempDir("graft_pq_src").resolve("t").toFile
+    li.coalesce(1).write.parquet(src.toString)
+    val bytes = Files.readAllBytes(
+      src.listFiles().find(_.getName.endsWith(".parquet")).get.toPath)
+    val dir = GraftSession.tempDir("graft_pq_bad")
+    // a parquet file ends in its footer and the magic "PAR1"
+    Files.write(dir.resolve("truncated.parquet"),
+      java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    Files.write(dir.resolve("bad_magic.parquet"),
+      bytes.dropRight(4) ++ "PAR0".getBytes("US-ASCII"))
+    Seq("truncated", "bad_magic").foreach { name =>
+      val e = intercept[Exception] {
+        GraftSession.table(spark, dir.toString, name).collect()
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        .mkString(" / ")
+      assert(chain.contains(s"$name.parquet"), chain)
+    }
+  }
 }

@@ -204,8 +204,7 @@ class FunctionsSpec extends SparkSpecBase {
   }
 
   test("ds sketches are wire-compatible with reference/Hive fixtures") {
-    val ref = sys.env.getOrElse("GRAFT_REF_TESTDATA",
-      "/root/reference/testdata")
+    val ref = "/root/reference/testdata"
     assume(new java.io.File(s"$ref/data/hll_sketches_from_hive.parquet")
       .isFile)
     Seq("hive", "impala").foreach { src =>

@@ -37,15 +37,25 @@ class IcebergSpec extends SparkSpecBase {
   }
 
   test("native metadata reader walks a HadoopTables layout (no runtime needed)") {
-    val dir = java.nio.file.Paths.get(
-      "/root/reference/testdata/data/iceberg_test/iceberg_non_partitioned")
-    assume(java.nio.file.Files.isDirectory(dir), "iceberg fixture absent")
-    val df = sources.IcebergFiles.readTable(spark, dir.toString)
-    // iceberg-query.test pins 20 rows, 6 of them action='click'
+    import sources.{IcebergFiles, IcebergLayout}
+    // 20 events, 6 of them action='click' (ids 0-2 and 10-12)
+    val events = spark.range(20).selectExpr("CAST(id AS INT) AS id",
+      "CASE WHEN id % 10 < 3 THEN 'click' " +
+        "WHEN id % 2 = 0 THEN 'view' ELSE 'purchase' END AS action")
+      .repartition(2)
+    def write(name: String, spec: String): String = {
+      val dir = GraftSession.tempDir("graft_iceberg").resolve(name)
+      IcebergLayout.create(dir, s"/test-warehouse/$name", events.schema,
+        IcebergLayout.parseSpec(spec, events.schema), Map.empty)
+      assert(IcebergLayout.append(spark, dir, events) == 20)
+      dir.toString
+    }
+    val df = IcebergFiles.readTable(spark,
+      write("iceberg_non_partitioned", ""))
     assert(df.count() == 20)
     assert(df.where("action = 'click'").count() == 6)
-    val part = sources.IcebergFiles.readTable(spark,
-      "/root/reference/testdata/data/iceberg_test/iceberg_partitioned")
+    val part = IcebergFiles.readTable(spark,
+      write("iceberg_partitioned", "action IDENTITY"))
     assert(part.count() == 20)
     // identity-partitioned columns are stored in the data files too
     assert(part.where("action <> 'click'").count() == 14)

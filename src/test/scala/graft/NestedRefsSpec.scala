@@ -171,7 +171,7 @@ class NestedRefsSpec extends SparkSpecBase {
 
   test("in-repo complextypestbl rows equal the reference's parquet files") {
     import java.nio.file.Files
-    val dir = sources.FunctionalTables.refRoot.resolve("ComplexTypesTbl")
+    val dir = java.nio.file.Paths.get("/root/reference/testdata/ComplexTypesTbl")
     val files =
       Seq("nullable.parq", "nonnullable.parq").map(f => dir.resolve(f))
     files.foreach(f => assume(Files.isRegularFile(f), s"$f not present"))
